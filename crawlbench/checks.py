@@ -6,13 +6,6 @@ pass. Every failed check counts one failed operation.
 
 from __future__ import annotations
 
-import decimal
-import math
-from collections import Counter
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 # ---------------------------------------------------------------- crawl ---
 
 
@@ -41,53 +34,18 @@ def check_crawl(got_order: list[str], got_seen: set[str], oracle) -> list[str]:
     return problems
 
 
-# ------------------------------------------------------------- frontier ---
-
-
-def ready_digest(ready: DataFrame) -> tuple[int, int]:
-    """(row count, checksum) of a ready set: the sum of the urls' xxhash64
-    folded to 31 bits, which cannot overflow a long at any reachable size."""
-    row = ready.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.pmod(F.xxhash64(F.col("url")), F.lit(2**31))).alias("h"),
-    ).first()
-    return int(row["n"]), int(row["h"] or 0)
-
-
-def check_digest(got: tuple[int, int], want: tuple[int, int]) -> list[str]:
-    if got == want:
-        return []
-    return [f"ready set (rows, checksum) {got} != twin {want}"]
-
-
 # -------------------------------------------------------------- queries ---
-
-
-def _norm(v):
-    """The tests/test_entry.py normalisation rule."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else round(v, 4)
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return round(float(v), 4)
-    return v
-
-
-def row_multiset(colnames, records) -> Counter:
-    """Order-insensitive multiset of column-name-sorted, normalised rows."""
-    idx = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    return Counter(tuple(_norm(rec[i]) for i in idx) for rec in records)
 
 
 def check_rows(name: str, s_cols, s_rows, d_cols, d_rows) -> list[str]:
     """A Spark result against its DuckDB twin (column names, row count and
-    values, order-insensitive)."""
+    values, order-insensitive), with the tests/test_entry.py
+    normalisation rule."""
+    from tests.test_entry import _rows
+
     if sorted(s_cols) != sorted(d_cols):
         return [f"{name}: columns {sorted(s_cols)} != {sorted(d_cols)}"]
-    got, want = row_multiset(s_cols, s_rows), row_multiset(d_cols, d_rows)
+    got, want = _rows(s_cols, s_rows), _rows(d_cols, d_rows)
     if got == want:
         return []
     return [

@@ -30,14 +30,6 @@ class CrawlSize:
 
 
 @dataclass(frozen=True)
-class FrontierSize:
-    n_candidates: int
-    n_hosts: int
-    per_host_budget: int
-    input_partitions: int
-
-
-@dataclass(frozen=True)
 class TablesSize:
     n_customers: int
     n_orders: int
@@ -51,9 +43,7 @@ SIZES = {
     "bench": {
         # the bench.py crawl_e2e corpus shape: ~16 pages per round
         "crawl": CrawlSize(n_hosts=40, base_pages=16, hot_factor=4,
-                           first_leg_rounds=2, total_rounds=3),
-        "frontier": FrontierSize(n_candidates=300_000, n_hosts=3_000,
-                                 per_host_budget=64, input_partitions=8),
+                           first_leg_rounds=3, total_rounds=4),
         # a sixth of TESTDATA sf0.1 for the fact tables
         "tables": TablesSize(n_customers=2_500, n_orders=25_000,
                              n_lineitems=100_000, n_parts=4_000,
@@ -63,8 +53,6 @@ SIZES = {
     "tiny": {
         "crawl": CrawlSize(n_hosts=4, base_pages=6, hot_factor=2,
                            first_leg_rounds=2, total_rounds=4),
-        "frontier": FrontierSize(n_candidates=20_000, n_hosts=200,
-                                 per_host_budget=16, input_partitions=4),
         "tables": TablesSize(n_customers=300, n_orders=3_000,
                              n_lineitems=12_000, n_parts=400,
                              n_suppliers=40, n_documents=300),
@@ -112,15 +100,6 @@ def seeded_corpus(seed: int, size: CrawlSize) -> Corpus:
         seeds=[rename(s) for s in base.seeds],
         hosts=[sub(h) for h in base.hosts],
     )
-
-
-# ------------------------------------------------------------- frontier ---
-
-
-def frontier_offset(seed: int) -> int:
-    """First candidate id. Ids stay 10 digits wide for every seed, so the
-    string work per candidate does not drift with the seed."""
-    return 10**9 + (seed_int(seed, "frontier") % 10**8) * 8
 
 
 # --------------------------------------------------------------- tables ---

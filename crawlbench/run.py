@@ -3,7 +3,7 @@
     python3 crawlbench/run.py --workload crawl_rounds --seed 1 --seconds 15 --trace 0
 
 Run from the repository root. One closed-loop client: this process runs
-one crawl, frontier pass or query at a time on ``local[N]`` with
+one crawl or query at a time on ``local[N]`` with
 N = the CPUs available to it, and starts no threads of its own. Inputs
 come from ``--seed``; answers are checked against independent references
 outside the timed window.
@@ -29,7 +29,6 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORK = os.path.join(ROOT, ".bench_work")
-DRIVER_MEMORY = "1g"
 
 
 def _parse(argv):
@@ -65,10 +64,6 @@ def session_conf(run_dir: str, event_dir: str | None) -> dict[str, str]:
 
     conf = {
         "spark.ui.showConsoleProgress": "false",
-        "spark.driver.memory": DRIVER_MEMORY,
-        # a fixed-size heap, so the JVM's resident size does not follow GC
-        # heap-resizing decisions from run to run
-        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEMORY}",
         "spark.local.dir": os.path.join(run_dir, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(run_dir, "spark-warehouse"),
     }
@@ -99,7 +94,7 @@ def _stop(spark) -> None:
 
 def main(argv=None) -> int:
     args = _parse(argv)
-    for need in ("mr_crawly_spark", "oracle", "__spark_entry__.py"):
+    for need in ("mr_crawly_spark", "oracle", "__spark_entry__.py", "tests/test_entry.py"):
         if not os.path.exists(os.path.join(ROOT, need)):
             print(f"crawlbench: {need} not found next to crawlbench/; run from "
                   "a checkout of the repository", file=sys.stderr)
@@ -124,22 +119,14 @@ def main(argv=None) -> int:
         os.makedirs(event_dir, exist_ok=True)
     conf = session_conf(run_dir, event_dir)
 
-    def start(m: str):
-        s = get_spark(app_name="crawlbench", master=m, extra_conf=conf)
-        s.sparkContext.setLogLevel("ERROR")
-        return s
-
-    def restart(old, m: str):
-        old.stop()
-        return start(m)
-
     ticks0 = hostinfo.cpu_ticks()
     t0 = time.perf_counter()
-    spark = start(master)
+    spark = get_spark(app_name="crawlbench", master=master, extra_conf=conf)
+    spark.sparkContext.setLogLevel("ERROR")
     get_spark_s = time.perf_counter() - t0
     ctx = Ctx(spark=spark, seed=args.seed, seconds=args.seconds, trace=bool(args.trace),
               size=args.size, work_dir=run_dir, event_dir=event_dir,
-              get_spark_s=get_spark_s, restart=restart, master=master)
+              get_spark_s=get_spark_s)
     try:
         res = run_workload(args.workload, ctx)
     finally:

@@ -1,4 +1,5 @@
-"""Metric names and units: the single list BENCHMARK.json mirrors.
+"""Metric names and units, read from ``BENCHMARK.json`` at the repository
+root: the one list of what the benchmark prints.
 
 Every workload prints every metric. A per-layer metric of a layer that a
 workload does not exercise reads 0; an end-to-end metric is defined for
@@ -7,85 +8,17 @@ every workload (see ``README.md``).
 
 from __future__ import annotations
 
-# entry queries of the sf_queries workload: light load_table scans first,
-# then the heavy iterative ones; every one has an oracle_sql() twin. The
-# heavy dup_ngrams and hits are left out to keep a run within its budget.
-QUERIES = (
-    "frontier_merge", "host_window_topk", "seen_antijoin", "dedup_exact",
-    "cms", "dsir",
-)
+import json
+import os
 
-END_TO_END = {
-    "setup_s": "s",
-    "throughput_per_s": "items/s",
-    "op_latency_s": "s",
-    "peak_rss_mb": "MB",
-}
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_LAYERS = [
-    # engine: the crawl round, attributed from the event log
-    ("engine.jobs_per_round", "count", "lower"),
-    ("engine.stages_per_round", "count", "lower"),
-    ("engine.tasks_per_round", "count", "lower"),
-    ("engine.broadcast_jobs_per_round", "count", "lower"),
-    ("engine.job_busy_s_per_round", "s", "lower"),
-    ("engine.plan_build_s_per_round", "s", "lower"),
-    ("engine.driver_gap_s_per_round", "s", "lower"),
-    ("engine.py4j_calls_per_round", "count", "lower"),
-    ("engine.round_self_s", "s", "lower"),
-    ("engine.bootstrap_s", "s", "lower"),
-    ("engine.resume_s", "s", "lower"),
-    ("engine.flush_round_s_p50", "s", "lower"),
-    # operators.frontier
-    ("frontier.select_slice_build_s", "s", "lower"),
-    ("frontier.new_entries_build_s", "s", "lower"),
-    ("frontier.slice_exec_s", "s", "lower"),
-    ("frontier.slice_task_skew", "ratio", "lower"),
-    ("frontier.scaling_efficiency", "ratio", "higher"),
-    # operators.politeness
-    ("politeness.robots_gate_build_s", "s", "lower"),
-    ("politeness.host_budgets_jobs", "count", "lower"),
-    # sources.corpus
-    ("corpus.fetch_build_s", "s", "lower"),
-    ("corpus.fetch_jobs_per_round", "count", "lower"),
-    # operators.parse
-    ("parse.extract_outlinks_build_s", "s", "lower"),
-    ("parse.links_per_page", "count", "higher"),
-    # functions.urls: the Arrow canonicalizer boundary
-    ("urls.canonicalize_exec_s", "s", "lower"),
-    ("urls.canonicalize_rows", "count", "higher"),
-    ("urls.canonicalize_rows_per_s", "rows/s", "higher"),
-    # operators.seen
-    ("seen.antijoin_exec_s", "s", "lower"),
-    ("seen.fresh_ratio", "ratio", "higher"),
-    ("seen.shuffle_write_bytes", "bytes", "lower"),
-    # operators.sitemap
-    ("sitemap.expand_build_s", "s", "lower"),
-    ("sitemap.bootstrap_jobs", "count", "lower"),
-    # plans.catalog
-    ("catalog.commits", "count", "lower"),
-    ("catalog.commit_s", "s", "lower"),
-    ("catalog.bytes_written", "bytes", "lower"),
-    ("catalog.files_written", "count", "lower"),
-    ("catalog.bytes_per_page", "bytes", "lower"),
-    ("catalog.load_merge_s", "s", "lower"),
-    ("catalog.rollback_s", "s", "lower"),
-    # sources.tables and the entry queries
-    ("tables.load_table_s", "s", "lower"),
-    ("tables.partitions", "count", "lower"),
-    *[(f"query.{q}_s", "s", "lower") for q in QUERIES],
-    # session and datagen: the parts of setup_s
-    ("session.get_spark_s", "s", "lower"),
-    ("datagen.generate_s", "s", "lower"),
-    ("datagen.to_spark_s", "s", "lower"),
-    # Spark, over the traced phase
-    ("spark.shuffle_read_bytes", "bytes", "lower"),
-    ("spark.shuffle_write_bytes", "bytes", "lower"),
-    ("spark.output_bytes", "bytes", "lower"),
-    ("spark.task_s", "s", "lower"),
-    # the tracer itself
-    ("trace.overhead_frac", "ratio", "lower"),
-    ("trace.spans", "count", "lower"),
-]
-PER_LAYER = {name: unit for name, unit, _ in _LAYERS}
-BETTER = {name: better for name, _, better in _LAYERS}
+with open(os.path.join(_ROOT, "BENCHMARK.json")) as _f:
+    _DOC = json.load(_f)
+
+END_TO_END = {m["name"]: m["unit"] for m in _DOC["end_to_end"]}
+PER_LAYER = {m["name"]: m["unit"] for m in _DOC["per_layer"]}
+
+# entry queries of the sf_queries workload, in run order: one per
+# ``query.<name>_s`` per-layer metric; every one has an oracle_sql() twin
+QUERIES = tuple(k[len("query."):-len("_s")] for k in PER_LAYER if k.startswith("query."))

@@ -22,7 +22,7 @@ if ROOT not in sys.path:
 
 from crawlbench import checks, workloads  # noqa: E402
 from crawlbench.run import session_conf  # noqa: E402
-from crawlbench.spec import BETTER, END_TO_END, PER_LAYER  # noqa: E402
+from crawlbench.spec import END_TO_END, PER_LAYER  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -42,7 +42,7 @@ def session(tmp_path_factory):
 def _ctx(session, trace=False):
     spark, work, events = session
     return workloads.Ctx(spark=spark, seed=3, seconds=0.1, trace=trace, size="tiny",
-                         work_dir=work, event_dir=events, master="local[2]")
+                         work_dir=work, event_dir=events)
 
 
 @pytest.mark.parametrize("name", sorted(workloads.WORKLOADS))
@@ -92,7 +92,6 @@ def test_check_functions_flag_wrong_answers():
                              [(0.5, "x", 1), (0.25, "y", 2)]) == []
     assert checks.check_rows("q", ["a", "b", "c"], rows, ["a", "b", "c"],
                              [(1, "x", 0.5), (2, "y", 0.26)])
-    assert checks.check_digest((3, 7), (3, 8))
 
 
 def test_traced_round_self_times_add_up_to_round_wall_time(session):
@@ -108,20 +107,12 @@ def test_traced_round_self_times_add_up_to_round_wall_time(session):
     assert res.layers["engine.jobs_per_round"] > 0
     assert res.layers["engine.py4j_calls_per_round"] > 0
     assert res.layers["catalog.commits"] > 0
-
-
-def test_benchmark_json_lists_the_printed_metrics():
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        doc = json.load(f)
-    assert {m["name"]: m["unit"] for m in doc["end_to_end"]} == END_TO_END
-    assert {m["name"]: (m["unit"], m["better"]) for m in doc["per_layer"]} == {
-        k: (u, BETTER[k]) for k, u in PER_LAYER.items()}
-    assert {w["name"] for w in doc["workloads"]} == set(workloads.WORKLOADS)
+    assert res.layers["urls.canonicalize_exec_s_per_round"] > 0
 
 
 def test_command_line_prints_the_result_last(tmp_path):
     out = subprocess.run(
-        [sys.executable, "crawlbench/run.py", "--workload", "frontier_bulk", "--seed", "5",
+        [sys.executable, "crawlbench/run.py", "--workload", "sf_queries", "--seed", "5",
          "--seconds", "0.1", "--trace", "0", "--size", "tiny"],
         cwd=ROOT, capture_output=True, text=True, timeout=600,
     )

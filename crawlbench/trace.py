@@ -183,6 +183,15 @@ class Task:
     shuffle_read: int
     shuffle_write: int
     output_bytes: int
+    python_s: float      # SQL metrics of the task's Python UDF nodes
+    python_bytes: int
+
+
+# SQL metrics Spark keeps for every Python UDF node (ms, bytes), logged as
+# task accumulables
+_PYTHON_TIME = "time to run Python workers"
+_PYTHON_SENT = "data sent to Python workers"
+_PYTHON_METRICS = (_PYTHON_TIME, _PYTHON_SENT)
 
 
 class EventLog:
@@ -226,12 +235,17 @@ class EventLog:
         elif kind == "SparkListenerTaskEnd":
             info, m = e["Task Info"], e.get("Task Metrics") or {}
             rd = m.get("Shuffle Read Metrics", {})
+            acc = {}
+            for a in info.get("Accumulables", []):
+                if a.get("Name") in _PYTHON_METRICS:
+                    acc[a["Name"]] = acc.get(a["Name"], 0) + int(a.get("Update") or 0)
             self.tasks.append(Task(
                 e["Stage ID"], info["Launch Time"] / 1e3, info["Finish Time"] / 1e3,
                 m.get("Executor Run Time", 0) / 1e3,
                 rd.get("Remote Bytes Read", 0) + rd.get("Local Bytes Read", 0),
                 m.get("Shuffle Write Metrics", {}).get("Shuffle Bytes Written", 0),
                 m.get("Output Metrics", {}).get("Bytes Written", 0),
+                acc.get(_PYTHON_TIME, 0) / 1e3, acc.get(_PYTHON_SENT, 0),
             ))
 
     def jobs_between(self, t0: float, t1: float) -> list[Job]:

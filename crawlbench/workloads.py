@@ -1,12 +1,11 @@
 """The benchmark workloads.
 
 Each workload sets up its inputs, checks its answers outside the timed
-window, and measures whole operations until ``ctx.seconds`` have passed
-(at least one). A traced run measures three phases on the same inputs:
-untraced, traced, untraced. The per-layer numbers come from the traced
+window, and measures whole operations: a fixed minimum, then more until
+``ctx.seconds`` have passed. A traced run measures two phases on the same
+inputs, untraced then traced. The per-layer numbers come from the traced
 phase, and the tracing overhead is its end-to-end result against the
-untraced phase after it: the first phase still warms the JVM up, so it
-runs slower than either later one.
+untraced phase. The JVM warms up through both, so the overhead reads low.
 """
 
 from __future__ import annotations
@@ -19,9 +18,6 @@ import tempfile
 import time
 import traceback
 from dataclasses import dataclass, field
-
-from pyspark.sql import Window
-from pyspark.sql import functions as F
 
 from crawlbench import checks, inputs
 from crawlbench.hostinfo import tree_peak_rss_mb
@@ -39,8 +35,6 @@ class Ctx:
     work_dir: str = "."
     event_dir: str | None = None   # set when the session logs events
     get_spark_s: float = 0.0
-    restart: object = None         # restart(session, master) -> new session
-    master: str = "local[4]"
 
 
 @dataclass
@@ -121,7 +115,7 @@ def _phases(ctx: Ctx):
     """(phase name, traced?) in run order."""
     if not ctx.trace:
         return [("untraced", False)]
-    return [("untraced", False), ("traced", True), ("untraced2", False)]
+    return [("untraced", False), ("traced", True)]
 
 
 def _spark_totals(ev: EventLog, t0: float, t1: float) -> dict:
@@ -246,9 +240,12 @@ def _crawl_layers(tracer: Tracer, ev: EventLog, run: dict) -> dict:
         jobs = ev.jobs_between(r.start, r.end)
         busy = ev.busy(jobs, r.start, r.end)
         plan = sum(s.duration for s in tracer.subtree(r) if s.name in plan_names)
+        tasks = ev.tasks_of(jobs)
         per.append({
             "jobs": len(jobs), "stages": len(ev.stages_of(jobs)),
-            "tasks": len(ev.tasks_of(jobs)),
+            "tasks": len(tasks),
+            "python_s": sum(t.python_s for t in tasks),
+            "python_bytes": sum(t.python_bytes for t in tasks),
             "broadcast": sum(j.broadcast for j in jobs),
             "busy": busy, "plan": plan, "gap": r.duration - busy - plan,
             "py4j": r.py4j_calls, "self": tracer.self_time(r),
@@ -280,6 +277,10 @@ def _crawl_layers(tracer: Tracer, ev: EventLog, run: dict) -> dict:
         "corpus.fetch_jobs_per_round": jobs_in("corpus.fetch") / n_rounds,
         "parse.extract_outlinks_build_s": span_mean("parse.extract_outlinks"),
         "parse.links_per_page": links / pages,
+        # the canonicalizer is the engine's only Python UDF
+        "urls.canonicalize_exec_s_per_round": avg("python_s"),
+        "urls.canonicalize_bytes_per_round": avg("python_bytes"),
+        "seen.filter_unseen_build_s": span_mean("seen.filter_unseen"),
         "sitemap.expand_build_s": span_mean("sitemap.expand_sitemaps"),
         "sitemap.bootstrap_jobs": float(jobs_in("engine.bootstrap")),
         "catalog.commits": float(len(commits)),
@@ -305,8 +306,9 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     t0 = time.perf_counter()
     frames = corpus_to_spark(ctx.spark, corpus)
     to_spark_s = time.perf_counter() - t0
-    # no warm-up: a warm-up crawl would cost as much as the measured one,
-    # so the crawl runs on a cold JVM and bootstrap_s carries the warm-up
+    # no warm-up: a crawl that warms the JVM up costs as much as the
+    # measured one, so the first crawl runs on a cold JVM. Its first round
+    # is left out of op_latency_s, and bootstrap_s carries the warm-up.
     setup = _setup(ctx, res, gen_s, to_spark_s, oracle_s, 0.0)
 
     runs = {}
@@ -322,11 +324,10 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
         finally:
             tracer.restore()
         res.attempted += run["ops"]
-        if phase == "untraced":
-            try:
-                res.check(checks.check_crawl(*checks.crawl_answer(run["engine"]), oracle))
-            except Exception:
-                res.error("crawl answer check")
+        try:
+            res.check(checks.check_crawl(*checks.crawl_answer(run["engine"]), oracle))
+        except Exception:
+            res.error(f"crawl ({phase}) answer check")
         run["tracer"] = tracer
         runs[phase] = run
 
@@ -335,15 +336,15 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     rounds = base["rounds"]
     out = dict(setup)
     out["throughput_per_s"] = base["pages"] / wall
-    out["op_latency_s"] = median(rounds)
+    out["op_latency_s"] = median(rounds[1:])
     out["engine.bootstrap_s"] = base["bootstrap_s"]
     out["engine.resume_s"] = base["resume_s"]
     out["engine.flush_round_s_p50"] = median(base["flush_rounds"])
     res.detail.update({
         "crawl_pages_per_s": (out["throughput_per_s"], "pages/s"),
         "round_s_p50": (out["op_latency_s"], "s"),
-        "round_s_max": (max(rounds, default=0.0), "s"),
-        "round_samples": (len(rounds), "count"),
+        "round_s_max": (max(rounds[1:], default=0.0), "s"),
+        "round_samples": (len(rounds[1:]), "count"),
         "round_s_each": (rounds, "s"),
         "flush_round_s_p50": (out["engine.flush_round_s_p50"], "s"),
         "bootstrap_s": (base["bootstrap_s"], "s"),
@@ -353,259 +354,10 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     if ctx.trace:
         t = runs["traced"]
         out.update(_crawl_layers(t["tracer"], _event_log(ctx), t))
-        out["trace.overhead_frac"] = median(t["rounds"]) / median(runs["untraced2"]["rounds"]) - 1.0
+        out["trace.overhead_frac"] = median(t["rounds"][1:]) / out["op_latency_s"] - 1.0
         out["trace.spans"] = float(len(t["tracer"].spans))
         res.tracer = t["tracer"]
     return out
-
-
-# ============================================================= frontier ===
-
-
-def _id_cols(id_col, size: inputs.FrontierSize) -> dict:
-    """Per-candidate columns of the bench_jobs frontier workload: 30% of
-    ids on the hot host site0, six href forms, and the JVM-side canonical
-    form of each href (only form 4 keeps a query)."""
-    host = F.concat(
-        F.lit("site"),
-        F.when(id_col % 10 < 3, F.lit(0))
-        .otherwise(F.pmod(F.xxhash64(id_col), F.lit(size.n_hosts))).cast("string"),
-        F.lit(".test"),
-    )
-    t = ((id_col * 7 + 1) % max(size.n_candidates // 4, 1)).cast("string")
-    form = id_col % 6
-    href = (
-        F.when(form == 0, F.concat(F.lit("../p/"), t))
-        .when(form == 1, F.concat(F.lit("/p/"), t))
-        .when(form == 2, F.concat(F.lit("https://"), host, F.lit(":443/p/"), t, F.lit("#frag")))
-        .when(form == 3, F.concat(F.lit("https://"), host, F.lit("/p/"), t))
-        .when(form == 4, F.concat(F.lit("../p/"), t, F.lit("?x=%7e")))
-        .otherwise(F.concat(F.lit("/p/"), t, F.lit("#s")))
-    )
-    canonical = F.concat(F.lit("https://"), host, F.lit("/p/"), t,
-                         F.when(form == 4, F.lit("?x=~")).otherwise(F.lit("")))
-    base = F.concat(F.lit("https://"), host, F.lit("/p/"), id_col.cast("string"))
-    return {"host": host, "href": href, "canonical": canonical, "base": base}
-
-
-_HOST_OF_URL = r"https://([^/]+)/"
-
-
-class FrontierInputs:
-    """Candidates ``[off, off + n)``; the seen set holds the canonical
-    forms of the first half's targets, built the way the engine serves its
-    seen base: hash-partitioned and sorted on the join keys, lineage cut."""
-
-    def __init__(self, spark, seed: int, size: inputs.FrontierSize):
-        from mr_crawly_spark.functions.urls import url_hash_col
-
-        self.size = size
-        off = inputs.frontier_offset(seed)
-        n, parts = size.n_candidates, size.input_partitions
-        self.ids = spark.range(off, off + n, numPartitions=parts)
-        c = _id_cols(F.col("id"), size)
-        self.cand = self.ids.select(c["base"].alias("base"), c["href"].alias("href"), "id")
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        seen_plan = (
-            spark.range(off, off + n // 2, numPartitions=parts)
-            .select(c["canonical"].alias("url"))
-            .withColumn("url_hash", url_hash_col(F.col("url")))
-            .repartition(n_parts, F.col("url_hash"), F.col("url"))
-            .sortWithinPartitions("url_hash", "url")
-        )
-        self.seen_plan = seen_plan
-        self.budgets_plan = spark.range(size.n_hosts).select(
-            F.concat(F.lit("site"), F.col("id").cast("string"), F.lit(".test")).alias("host"),
-            F.lit(size.per_host_budget).alias("k_host"),
-        )
-        self.seen = self.budgets = None
-
-    def materialize(self, spark) -> None:
-        prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            self.seen = self.seen_plan.localCheckpoint()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev)
-        self.budgets = self.budgets_plan.localCheckpoint()
-
-    def pipeline(self) -> list:
-        """(stage, DataFrame) prefixes: generate -> canonicalize -> dedup
-        -> seen anti-join -> per-host slice."""
-        from mr_crawly_spark.functions import urls
-        from mr_crawly_spark.operators import frontier as frontier_ops
-        from mr_crawly_spark.operators import seen as seen_ops
-
-        canon = self.cand.select(
-            urls.canonicalize_udf(F.col("base"), F.col("href")).alias("url")
-        ).filter(F.col("url").isNotNull())
-        hashed = canon.withColumn("url_hash", urls.url_hash_col(F.col("url"))) \
-            .dropDuplicates(["url_hash", "url"])
-        fresh = seen_ops.filter_unseen(hashed, self.seen)
-        frontier = fresh.select(
-            "url", "url_hash",
-            F.regexp_extract("url", _HOST_OF_URL, 1).alias("host"),
-            F.lit("pending").alias("status"),
-            F.lit(0.5).alias("priority"),
-            F.lit(0).alias("retry_count"),
-            F.lit(0.0).alias("next_attempt_at"),
-            F.lit(0).alias("discovered_round"),
-        )
-        sliced = frontier_ops.select_slice(frontier, self.budgets, t_round=1.0,
-                                           budget_rows=self.size.n_hosts)
-        return [("generate", self.cand), ("canonicalize", canon), ("dedup", hashed),
-                ("antijoin", fresh), ("slice", sliced)]
-
-    def twin(self):
-        """JVM-only twin of the ready set: the canonical form computed from
-        the id, a plain anti-join and a per-host row_number window (every
-        host's budget is per_host_budget, all priorities are equal)."""
-        c = _id_cols(F.col("id"), self.size)
-        keys = ["url_hash", "url"]
-        fresh = (
-            self.ids.select(c["canonical"].alias("url"))
-            .withColumn("url_hash", F.xxhash64(F.col("url")))
-            .dropDuplicates(keys)
-            .join(self.seen.select(*keys), keys, "left_anti")
-            .withColumn("host", F.regexp_extract("url", _HOST_OF_URL, 1))
-        )
-        rn = F.row_number().over(Window.partitionBy("host").orderBy("url"))
-        return fresh.withColumn("_rn", rn).filter(F.col("_rn") <= self.size.per_host_budget)
-
-
-def _frontier_passes(ctx: Ctx, fin: FrontierInputs, want_rows: int, res: Result,
-                     tracer: Tracer) -> list[float]:
-    times = []
-    for _ in _until(ctx.seconds, min_reps=3):
-        res.attempted += 1
-        with tracer.span("frontier.pass") as s:
-            n = fin.pipeline()[-1][1].count()
-        times.append(s.duration)
-        if n != want_rows:
-            res.failed += 1
-            res.problems.append(f"frontier pass: {n} ready rows, twin has {want_rows}")
-    return times
-
-
-def _slice_skew(ev: EventLog, span) -> float:
-    """max / median task time of the slice's window stage: the last stage
-    with more than one task in the slice prefix's jobs."""
-    jobs = ev.jobs_between(span.start, span.end)
-    stages = [s for s in ev.stages_of(jobs) if ev.stage_tasks[s] > 1]
-    if not stages:
-        return 0.0
-    durs = [t.finish - t.launch for t in ev.tasks if t.stage_id == stages[-1]]
-    return max(durs) / max(median(durs), 1e-3) if durs else 0.0
-
-
-def _frontier_prefixes(ctx: Ctx, fin: FrontierInputs, tracer: Tracer, reps: int = 2) -> dict:
-    """Force each pipeline prefix alone with the noop writer, which reads
-    every column (a count lets the optimizer prune columns, and so plans
-    prefixes differently). The differences of the per-prefix minimum over
-    ``reps`` sequences give the stage times."""
-    best, last = {}, {}
-    for _ in range(reps):
-        for name, df in fin.pipeline():
-            with tracer.span(f"prefix.{name}") as s:
-                force(df)
-            best[name] = min(best.get(name, s.duration), s.duration)
-            last[name] = s
-    ev = _event_log(ctx)
-    d = lambda a, b: best[a] - best[b]  # noqa: E731
-    shuffle = lambda n: ev.totals(ev.jobs_between(last[n].start, last[n].end))[  # noqa: E731
-        "shuffle_write_bytes"]
-    stages = dict(fin.pipeline())
-    canon_s = d("canonicalize", "generate")
-    return {
-        "urls.canonicalize_exec_s": canon_s,
-        "urls.canonicalize_rows": float(fin.size.n_candidates),
-        "urls.canonicalize_rows_per_s": fin.size.n_candidates / canon_s if canon_s > 0 else 0.0,
-        "seen.antijoin_exec_s": d("antijoin", "dedup"),
-        "seen.fresh_ratio": stages["antijoin"].count() / max(stages["dedup"].count(), 1),
-        # the whole prefix, not a difference: the anti-join's pre-filter
-        # can shrink the dedup shuffle below that of the dedup prefix alone
-        "seen.shuffle_write_bytes": shuffle("antijoin"),
-        "frontier.slice_exec_s": d("slice", "antijoin"),
-        "frontier.slice_task_skew": _slice_skew(ev, last["slice"]),
-    }
-
-
-def frontier_bulk(ctx: Ctx, res: Result) -> dict:
-    from mr_crawly_spark.operators import frontier as frontier_ops
-    from mr_crawly_spark.operators import seen as seen_ops
-
-    size = inputs.SIZES[ctx.size]["frontier"]
-    fin, gen_s = _timed_reps(lambda: FrontierInputs(ctx.spark, ctx.seed, size))
-    t0 = time.perf_counter()
-    fin.materialize(ctx.spark)
-    to_spark_s = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    want = checks.ready_digest(fin.twin())
-    oracle_s = time.perf_counter() - t0
-    # the warm-up pass is the checked pass
-    t0 = time.perf_counter()
-    res.attempted += 1
-    try:
-        got = checks.ready_digest(fin.pipeline()[-1][1])
-    except Exception:
-        res.error("frontier check pass")
-        got = None
-    warm_s = time.perf_counter() - t0
-    if got is not None:
-        res.check(checks.check_digest(got, want))
-    out = _setup(ctx, res, gen_s, to_spark_s, oracle_s, warm_s)
-
-    passes = {}
-    for phase, traced in _phases(ctx):
-        tracer = Tracer()
-        if traced:
-            tracer.wrap(frontier_ops, "select_slice", "frontier.select_slice")
-            tracer.wrap(seen_ops, "filter_unseen", "seen.filter_unseen")
-            tracer.count_py4j(ctx.spark)
-        try:
-            t0 = time.time()
-            passes[phase] = _frontier_passes(ctx, fin, want[0], res, tracer)
-            if traced:
-                out.update(_frontier_prefixes(ctx, fin, tracer))
-                out["frontier.select_slice_build_s"] = mean(
-                    s.duration for s in tracer.named("frontier.select_slice"))
-                out.update(_spark_totals(_event_log(ctx), t0, time.time()))
-                out["trace.spans"] = float(len(tracer.spans))
-                res.tracer = tracer
-        except Exception:
-            res.error(f"frontier ({phase})")
-            return out
-        finally:
-            tracer.restore()
-
-    p50 = median(passes["untraced"])
-    out["op_latency_s"] = p50
-    out["throughput_per_s"] = size.n_candidates / p50
-    res.detail.update({
-        "frontier_urls_per_s": (out["throughput_per_s"], "urls/s"),
-        "frontier_pass_s_p50": (p50, "s"),
-        "frontier_passes": (len(passes["untraced"]), "count"),
-        "frontier_pass_s_each": (passes["untraced"], "s"),
-        "ready_rows": (want[0], "count"),
-    })
-    if ctx.trace:
-        out["trace.overhead_frac"] = median(passes["traced"]) / median(passes["untraced2"]) - 1.0
-        if ctx.restart is not None:
-            out["frontier.scaling_efficiency"] = _scaling(ctx, size, p50)
-    return out
-
-
-def _scaling(ctx: Ctx, size: inputs.FrontierSize, t_n: float) -> float:
-    """T1 / (N * TN): one pass at local[1] against the local[N] median, on
-    the same inputs and input partitioning. The run's last step: the
-    session stays at local[1]."""
-    n = int(ctx.master[ctx.master.find("[") + 1: ctx.master.find("]")])
-    ctx.spark = ctx.restart(ctx.spark, "local[1]")
-    fin = FrontierInputs(ctx.spark, ctx.seed, size)
-    fin.materialize(ctx.spark)
-    t0 = time.perf_counter()
-    fin.pipeline()[-1][1].count()
-    return (time.perf_counter() - t0) / (n * t_n)
 
 
 # ============================================================== queries ===
@@ -628,7 +380,7 @@ def _load_table_partitions(loaded: list) -> float:
 def _query_passes(ctx: Ctx, qfns: dict, tables_dir: str, tracer: Tracer,
                   res: Result) -> dict:
     times = {q: [] for q in QUERIES}
-    for _ in _until(ctx.seconds, min_reps=2):
+    for _ in _until(ctx.seconds, min_reps=6):
         for q in QUERIES:
             res.attempted += 1
             with tracer.span(f"query.{q}") as s:
@@ -717,7 +469,7 @@ def sf_queries(ctx: Ctx, res: Result) -> dict:
     })
     if ctx.trace:
         geo = lambda p: geomean(median(ts) for ts in passes[p].values())  # noqa: E731
-        out["trace.overhead_frac"] = geo("traced") / geo("untraced2") - 1.0
+        out["trace.overhead_frac"] = geo("traced") / geo("untraced") - 1.0
     return out
 
 
@@ -725,7 +477,6 @@ def sf_queries(ctx: Ctx, res: Result) -> dict:
 
 WORKLOADS = {
     "crawl_rounds": crawl_rounds,
-    "frontier_bulk": frontier_bulk,
     "sf_queries": sf_queries,
 }
 
