@@ -37,13 +37,14 @@ class TablesSize:
     n_parts: int
     n_suppliers: int
     n_documents: int
+    min_passes: int = 6   # timed passes, more until --seconds have passed
 
 
 SIZES = {
     "bench": {
         # the bench.py crawl_e2e corpus shape: ~16 pages per round
         "crawl": CrawlSize(n_hosts=40, base_pages=16, hot_factor=4,
-                           first_leg_rounds=3, total_rounds=4),
+                           first_leg_rounds=2, total_rounds=3),
         # a sixth of TESTDATA sf0.1 for the fact tables
         "tables": TablesSize(n_customers=2_500, n_orders=25_000,
                              n_lineitems=100_000, n_parts=4_000,
@@ -55,7 +56,7 @@ SIZES = {
                            first_leg_rounds=2, total_rounds=4),
         "tables": TablesSize(n_customers=300, n_orders=3_000,
                              n_lineitems=12_000, n_parts=400,
-                             n_suppliers=40, n_documents=300),
+                             n_suppliers=40, n_documents=300, min_passes=2),
     },
 }
 

@@ -16,6 +16,8 @@ import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 
+from crawlbench.hostinfo import cpu_between, cpu_sample
+
 
 @dataclass
 class Span:
@@ -27,6 +29,7 @@ class Span:
     round_id: int | None  # spans of one crawl round share it
     py4j_calls: int = 0   # gateway calls made while the span was open
     info: dict = field(default_factory=dict)
+    cpu: dict = field(default_factory=dict)  # CPU seconds by part, if sampled
 
     @property
     def duration(self) -> float:
@@ -57,7 +60,9 @@ class Tracer:
 
     # ------------------------------------------------------------ spans ---
     @contextmanager
-    def span(self, name: str, round_id: int | None = None):
+    def span(self, name: str, round_id: int | None = None, cpu: bool = False):
+        """A span; with ``cpu``, also the CPU seconds the process tree used
+        while it was open (``hostinfo.cpu_between``)."""
         parent = self._stack[-1] if self._stack else None
         if round_id is None and parent is not None:
             round_id = parent.round_id
@@ -66,14 +71,18 @@ class Tracer:
         self.spans.append(s)
         self._stack.append(s)
         calls0 = self.py4j_calls
+        cpu0 = cpu_sample() if cpu else None
         try:
             yield s
         finally:
             s.end = time.time()
+            if cpu0 is not None:
+                s.cpu = cpu_between(cpu0, cpu_sample())
             s.py4j_calls = self.py4j_calls - calls0
             self._stack.pop()
 
-    def wrap(self, owner, attr: str, name: str, round_of=None, on_result=None) -> None:
+    def wrap(self, owner, attr: str, name: str, round_of=None, on_result=None,
+             cpu: bool = False) -> None:
         """Record a span around every call of ``owner.attr`` until
         ``restore()``. ``round_of(*args)`` gives the round id of a call
         that starts a round; ``on_result(span, result, args)`` runs after the
@@ -85,7 +94,7 @@ class Tracer:
         @functools.wraps(orig)
         def traced(*args, **kwargs):
             rid = round_of(*args) if round_of else None
-            with tracer.span(name, rid) as s:
+            with tracer.span(name, rid, cpu) as s:
                 result = orig(*args, **kwargs)
             if on_result is not None:
                 on_result(s, result, args)

@@ -20,7 +20,7 @@ import traceback
 from dataclasses import dataclass, field
 
 from crawlbench import checks, inputs
-from crawlbench.hostinfo import tree_peak_rss_mb
+from crawlbench.hostinfo import cpu_between, cpu_sample, tree_peak_rss_mb
 from crawlbench.spec import END_TO_END, PER_LAYER, QUERIES
 from crawlbench.trace import EventLog, Tracer, flush_event_log
 
@@ -59,6 +59,9 @@ class Result:
         self.failed += 1
         self.problems.append(f"{what}: {traceback.format_exc(limit=3)}")
         traceback.print_exc(file=sys.stderr)
+
+
+CPU_PARTS = ("driver", "jvm", "workers", "jit")   # of hostinfo.cpu_between
 
 
 def median(xs) -> float:
@@ -101,14 +104,17 @@ def _timed_reps(fn, reps: int = 3):
 
 
 def _setup(ctx: Ctx, res: Result, generate_s: float, to_spark_s: float,
-           oracle_s: float, warmup_s: float) -> dict:
-    """setup_s and its parts: session start, input generation (median of
-    three), handing inputs to Spark, reference answers, warm-up."""
+           oracle_s: float) -> dict:
+    """Called when set-up ends. setup_s is the CPU time the process tree
+    has used so far: interpreter start, session start, input generation
+    (three times over), handing inputs to Spark and the reference answers.
+    The wall time of each part is printed with the details."""
     parts = {"get_spark_s": ctx.get_spark_s, "generate_s": generate_s,
-             "to_spark_s": to_spark_s, "oracle_s": oracle_s, "warmup_s": warmup_s}
+             "to_spark_s": to_spark_s, "oracle_s": oracle_s}
     res.detail.update({f"setup.{k}": (v, "s") for k, v in parts.items()})
+    res.detail["setup_wall_s"] = (sum(parts.values()), "s")
     return {"datagen.generate_s": generate_s, "datagen.to_spark_s": to_spark_s,
-            "setup_s": sum(parts.values())}
+            "setup_s": cpu_between(None, cpu_sample())["total"]}
 
 
 def _phases(ctx: Ctx):
@@ -169,7 +175,8 @@ def _install_crawl_spans(tracer: Tracer, spark, full: bool) -> None:
 
     E = engine_mod.CrawlEngine
     tracer.wrap(E, "bootstrap", "engine.bootstrap")
-    tracer.wrap(E, "run_round", "engine.run_round", round_of=lambda eng: eng.round + 1)
+    tracer.wrap(E, "run_round", "engine.run_round", round_of=lambda eng: eng.round + 1,
+                cpu=True)
     tracer.wrap(E, "flush", "engine.flush")
     tracer.wrap(E, "resume", "engine.resume")
     if not full:
@@ -202,14 +209,13 @@ def _crawl_once(ctx: Ctx, frames, size: inputs.CrawlSize, tracer: Tracer) -> dic
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        t0 = time.time()
-        with tracer.span("crawl.leg1"):
-            first.run()
-        with tracer.span("crawl.leg2"):
-            second = engine(size.total_rounds)
-            with tracer.span("crawl.resume_run") as resume_run:
-                second.run(fresh=False)
-        t1 = time.time()
+        with tracer.span("crawl", cpu=True) as crawl:
+            with tracer.span("crawl.leg1"):
+                first.run()
+            with tracer.span("crawl.leg2"):
+                second = engine(size.total_rounds)
+                with tracer.span("crawl.resume_run") as resume_run:
+                    second.run(fresh=False)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     rounds = tracer.named("engine.run_round")
@@ -222,9 +228,10 @@ def _crawl_once(ctx: Ctx, frames, size: inputs.CrawlSize, tracer: Tracer) -> dic
     resumed = [r for r in rounds if r.start >= resume_run.start]
     boot = tracer.named("engine.bootstrap")
     return {
-        "engine": second, "t0": t0, "t1": t1,
+        "engine": second, "t0": crawl.start, "t1": crawl.end, "cpu": crawl.cpu,
         "pages": second.visited_count,
         "rounds": [r.duration for r in rounds],
+        "round_cpu": [r.cpu for r in rounds],
         "flush_rounds": [r.duration for r in flush_rounds + final_flushes],
         "bootstrap_s": boot[0].duration if boot else 0.0,
         "resume_s": (resumed[0].end - resume_run.start) if resumed else resume_run.duration,
@@ -294,6 +301,11 @@ def _crawl_layers(tracer: Tracer, ev: EventLog, run: dict) -> dict:
     }
 
 
+def _round_cpu(run: dict, part: str) -> float:
+    """One part's CPU seconds per round, over every round."""
+    return mean(c[part] for c in run["round_cpu"])
+
+
 def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     from mr_crawly_spark.datagen import corpus_to_spark
     from oracle.crawler import OracleCrawler
@@ -308,8 +320,9 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     to_spark_s = time.perf_counter() - t0
     # no warm-up: a crawl that warms the JVM up costs as much as the
     # measured one, so the first crawl runs on a cold JVM. Its first round
-    # is left out of op_latency_s, and bootstrap_s carries the warm-up.
-    setup = _setup(ctx, res, gen_s, to_spark_s, oracle_s, 0.0)
+    # is left out of the per-round wall times; bootstrap_s carries the
+    # warm-up.
+    setup = _setup(ctx, res, gen_s, to_spark_s, oracle_s)
 
     runs = {}
     for phase, traced in _phases(ctx):
@@ -335,14 +348,18 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     wall = base["t1"] - base["t0"]
     rounds = base["rounds"]
     out = dict(setup)
-    out["throughput_per_s"] = base["pages"] / wall
-    out["op_latency_s"] = median(rounds[1:])
+    out["cpu_s_per_op"] = _round_cpu(base, "work")
+    out["cpu_s_per_item"] = base["cpu"]["work"] / max(base["pages"], 1)
     out["engine.bootstrap_s"] = base["bootstrap_s"]
     out["engine.resume_s"] = base["resume_s"]
     out["engine.flush_round_s_p50"] = median(base["flush_rounds"])
     res.detail.update({
-        "crawl_pages_per_s": (out["throughput_per_s"], "pages/s"),
-        "round_s_p50": (out["op_latency_s"], "s"),
+        "crawl_cpu_s": (base["cpu"]["work"], "s"),
+        "crawl_jit_cpu_s": (base["cpu"]["jit"], "s"),
+        "round_cpu_s_each": ([c["work"] for c in base["round_cpu"]], "s"),
+        "round_jit_cpu_s_each": ([c["jit"] for c in base["round_cpu"]], "s"),
+        "crawl_pages_per_s": (base["pages"] / wall, "pages/s"),
+        "round_s_p50": (median(rounds[1:]), "s"),
         "round_s_max": (max(rounds[1:], default=0.0), "s"),
         "round_samples": (len(rounds[1:]), "count"),
         "round_s_each": (rounds, "s"),
@@ -354,7 +371,8 @@ def crawl_rounds(ctx: Ctx, res: Result) -> dict:
     if ctx.trace:
         t = runs["traced"]
         out.update(_crawl_layers(t["tracer"], _event_log(ctx), t))
-        out["trace.overhead_frac"] = median(t["rounds"][1:]) / out["op_latency_s"] - 1.0
+        out.update({f"cpu.{p}_s_per_op": _round_cpu(t, p) for p in CPU_PARTS})
+        out["trace.overhead_frac"] = _round_cpu(t, "work") / out["cpu_s_per_op"] - 1.0
         out["trace.spans"] = float(len(t["tracer"].spans))
         res.tracer = t["tracer"]
     return out
@@ -378,15 +396,28 @@ def _load_table_partitions(loaded: list) -> float:
 
 
 def _query_passes(ctx: Ctx, qfns: dict, tables_dir: str, tracer: Tracer,
-                  res: Result) -> dict:
-    times = {q: [] for q in QUERIES}
-    for _ in _until(ctx.seconds, min_reps=6):
+                  res: Result, seconds: float, min_passes: int) -> list[dict]:
+    """Passes over every query; the spans of each pass by query name."""
+    passes = []
+    for _ in _until(seconds, min_passes):
+        spans = {}
         for q in QUERIES:
             res.attempted += 1
-            with tracer.span(f"query.{q}") as s:
+            with tracer.span(f"query.{q}", cpu=True) as spans[q]:
                 force(qfns[q](ctx.spark, tables_dir))
-            times[q].append(s.duration)
-    return times
+        passes.append(spans)
+    return passes
+
+
+def _cpu_per_query(passes: list[dict], part: str = "work") -> float:
+    """One part's CPU seconds per query, over every query of ``passes``."""
+    spans = [s for p in passes for s in p.values()]
+    return sum(s.cpu[part] for s in spans) / max(len(spans), 1)
+
+
+def _cpu_geomean(passes: list[dict]) -> float:
+    """Geometric mean over queries of each one's mean CPU seconds."""
+    return geomean(mean(p[q].cpu["work"] for p in passes if q in p) for q in QUERIES)
 
 
 def sf_queries(ctx: Ctx, res: Result) -> dict:
@@ -417,19 +448,22 @@ def sf_queries(ctx: Ctx, res: Result) -> dict:
         con.close()
     oracle_s = time.perf_counter() - t0
 
-    # the warm-up pass is the checked pass
-    t0 = time.perf_counter()
+    out = _setup(ctx, res, gen_s, to_spark_s, oracle_s)
+
+    # the first pass collects every result and checks it; it runs on a
+    # cold JVM, so its wall times are left out of the timed passes
+    checked, cold = {}, Tracer()
     for q in QUERIES:
         res.attempted += 1
         try:
-            sdf = qfns[q](ctx.spark, tables_dir)
-            got = (sdf.columns, [tuple(r) for r in sdf.collect()])
+            with cold.span(f"query.{q}", cpu=True) as checked[q]:
+                sdf = qfns[q](ctx.spark, tables_dir)
+                got = (sdf.columns, [tuple(r) for r in sdf.collect()])
         except Exception:
             res.error(f"query {q} check pass")
             continue
         res.check(checks.check_rows(q, *got, *want[q]))
-    warm_s = time.perf_counter() - t0
-    out = _setup(ctx, res, gen_s, to_spark_s, oracle_s, warm_s)
+    res.detail["check_pass_s"] = (sum(s.duration for s in checked.values()), "s")
 
     passes = {}
     for phase, traced in _phases(ctx):
@@ -440,7 +474,8 @@ def sf_queries(ctx: Ctx, res: Result) -> dict:
             tracer.count_py4j(ctx.spark)
         try:
             t0 = time.time()
-            passes[phase] = _query_passes(ctx, qfns, tables_dir, tracer, res)
+            passes[phase] = _query_passes(ctx, qfns, tables_dir, tracer, res,
+                                          ctx.seconds, size.min_passes)
             t1 = time.time()
         except Exception:
             res.error(f"queries ({phase})")
@@ -454,22 +489,31 @@ def sf_queries(ctx: Ctx, res: Result) -> dict:
             out["trace.spans"] = float(len(tracer.spans))
             res.tracer = tracer
 
-    per_query = {q: median(ts) for q, ts in passes["untraced"].items()}
-    totals = [sum(ts[i] for ts in passes["untraced"].values())
-              for i in range(len(passes["untraced"][QUERIES[0]]))]
-    out["op_latency_s"] = geomean(per_query.values())
-    out["throughput_per_s"] = len(QUERIES) / median(totals)
+    base = passes["untraced"]
+    per_query = {q: median(p[q].duration for p in base) for q in QUERIES}
+    totals = [sum(s.duration for s in p.values()) for p in base]
+    # the CPU figures count the checked pass too: from a cold start the
+    # time code runs before it is compiled adds up to about the same in
+    # every run, while a later window gets a timing-dependent share of it
+    every = [checked] + base
+    out["cpu_s_per_op"] = _cpu_geomean(every)
+    out["cpu_s_per_item"] = _cpu_per_query(every)
     out.update({f"query.{q}_s": v for q, v in per_query.items()})
     res.detail.update({
         "queries_total_s": (median(totals), "s"),
-        "queries_geomean_s": (out["op_latency_s"], "s"),
+        "queries_geomean_s": (geomean(per_query.values()), "s"),
         "query_passes": (len(totals), "count"),
         "query_pass_s_each": (totals, "s"),
+        "query_pass_cpu_s_each": ([sum(s.cpu["work"] for s in p.values())
+                                   for p in every], "s"),
+        "query_pass_jit_cpu_s_each": ([sum(s.cpu["jit"] for s in p.values())
+                                       for p in every], "s"),
         **{f"query.{q}_s": (v, "s") for q, v in per_query.items()},
     })
     if ctx.trace:
-        geo = lambda p: geomean(median(ts) for ts in passes[p].values())  # noqa: E731
-        out["trace.overhead_frac"] = geo("traced") / geo("untraced") - 1.0
+        traced = passes["traced"]
+        out.update({f"cpu.{p}_s_per_op": _cpu_per_query(traced, p) for p in CPU_PARTS})
+        out["trace.overhead_frac"] = _cpu_per_query(traced) / _cpu_per_query(base) - 1.0
     return out
 
 
