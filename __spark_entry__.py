@@ -103,30 +103,6 @@ def q_seen_sidecar_bloom(spark, sf_dir):
     ).select("c_custkey", "c_name")
 
 
-def q_seen_sidecar_cuckoo(spark, sf_dir):
-    """The cuckoo twin (r4 verdict #2): identical anti-join semantics via
-    build_cuckoo_sidecar + the bucket-partitioned cuckoo probe."""
-    import tempfile
-
-    from mr_crawly_spark.operators import seen as seen_ops
-
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_custkey") % 3 == 0
-    )
-    cands = _url_keyed(customer, "c_custkey", ("c_custkey", "c_name"))
-    seen = _url_keyed(
-        orders.select("o_custkey").dropDuplicates(), "o_custkey"
-    )
-    n_buckets = 8
-    n_rows = seen_ops.cuckoo_params((1 << 18) // n_buckets)
-    path = tempfile.mkdtemp(prefix="entry_cuckoo_sc_")
-    seen_ops.build_cuckoo_sidecar(seen, path, n_buckets, n_rows)
-    return seen_ops.filter_unseen_cuckoo(
-        cands, seen, None, n_buckets, n_rows, sidecar_path=path
-    ).select("c_custkey", "c_name")
-
-
 def q_host_window_topk(spark, sf_dir):
     """O3: host-keyed priority window -> per-key top-k."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -784,32 +760,6 @@ def q_ann_lsh_indexed(spark, sf_dir):
     return SIM.ann_lsh_topk_indexed(indexed.repartition(8, "_bucket"), planes, q, k=20)
 
 
-def q_crawl_seen_cuckoo(spark, sf_dir):
-    """The crawl engine with the cuckoo prefilter enabled (north_star:
-    "Bloom/cuckoo URL-seen"). Prefilter-only contract: the final seen set
-    is IDENTICAL to the exact path, so the oracle is the same materialized
-    python-oracle parquet as crawl_seen."""
-    import tempfile
-
-    from mr_crawly_spark.datagen import corpus_to_spark, generate_corpus
-    from mr_crawly_spark.engine import CrawlConfig, CrawlEngine
-    from mr_crawly_spark.sources.corpus import CorpusFetcher
-
-    corpus = generate_corpus(**_CRAWL_SEEN_CORPUS)
-    docs, robots, sitemaps, seeds = corpus_to_spark(spark, corpus)
-    eng = CrawlEngine(
-        spark, CorpusFetcher(spark, documents=docs), robots, sitemaps, seeds,
-        CrawlConfig(
-            warehouse=tempfile.mkdtemp(prefix="entry_ck_"),
-            use_cuckoo=True, bloom_buckets=4, bloom_expected_n=4096,
-        ),
-    )
-    eng.run()
-    return eng.table("seen").select(
-        "url", F.col("first_seen_round").cast("bigint").alias("first_seen_round")
-    )
-
-
 def q_ann_ivf(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     return SIM.ann_ivf_topk(
@@ -1004,7 +954,7 @@ def q_sample_stratified(spark, sf_dir):
 def q_dedup_clusters(spark, sf_dir):
     """Transitive dedup clusters: connected components over the LSH
     candidate-pair graph (A~B, B~C collapse to one cluster even when A~C
-    was never emitted) — iterative min-label propagation with per-iteration
+    was never emitted) — large-star/small-star contraction with per-round
     lineage cuts; the DuckDB oracle computes the same components via a
     recursive CTE."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
@@ -1013,20 +963,6 @@ def q_dedup_clusters(spark, sf_dir):
     )
     pairs = D.minhash_lsh_pairs(both, n_hashes=8, bands=4, shingle_n=3)
     return D.connected_components(both.select("doc_id"), pairs)
-
-
-def q_dedup_clusters_star(spark, sf_dir):
-    """Same transitive clusters computed by LARGE-STAR/SMALL-STAR
-    contraction (Kiveris et al. 2014) — the adversarial-diameter scale path
-    (O(log n) rounds vs O(diameter) for plain min-label propagation). The
-    labels are IDENTICAL to dedup_clusters, so the DuckDB oracle is the
-    same recursive-CTE component closure."""
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    both = docs.unionByName(
-        docs.withColumn("doc_id", F.col("doc_id") + F.lit(10**9))
-    )
-    pairs = D.minhash_lsh_pairs(both, n_hashes=8, bands=4, shingle_n=3)
-    return D.connected_components_star(both.select("doc_id"), pairs)
 
 
 def q_dedup_e2e(spark, sf_dir):
@@ -2066,7 +2002,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- previously driver-sampled entries (green in r01-r05) ---------
         "seen_antijoin": q_seen_antijoin,
         "seen_sidecar_bloom": q_seen_sidecar_bloom,
-        "seen_sidecar_cuckoo": q_seen_sidecar_cuckoo,
         "host_window_topk": q_host_window_topk,
         "frontier_merge": q_frontier_merge,
         "fetch_left_join": q_fetch_left_join,
@@ -2120,7 +2055,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # crawl_seen's oracle is the sequential python crawler, surfaced to
         # DuckDB as a materialized parquet (see _materialize_crawl_seen_oracle)
         "crawl_seen": q_crawl_seen,
-        "crawl_seen_cuckoo": q_crawl_seen_cuckoo,
         "ann_lsh": q_ann_lsh,
         "ann_lsh_indexed": q_ann_lsh_indexed,
         "ann_ivf": q_ann_ivf,
@@ -2128,7 +2062,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "jaccard_lsh": q_jaccard_lsh,
         "neardup_edit": q_neardup_edit,
         "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
         "simhash_neardup": q_simhash_neardup,
         "embed_neardup": q_embed_neardup,
         "embed_neardup_multi": q_embed_neardup_multi,
@@ -2430,16 +2363,10 @@ def oracle_sql() -> dict[str, str]:
                               WHERE o.o_custkey = c.c_custkey
                                 AND o.o_custkey % 3 = 0)
         """,
-        # the sidecar prefilters are PREFILTERS (no false negatives,
-        # positives re-checked exactly), so their oracle is the identical
-        # plain anti-join — any deviation is a contract violation
+        # the sidecar Bloom is a PREFILTER (no false negatives, positives
+        # re-checked exactly), so its oracle is the identical plain
+        # anti-join — any deviation is a contract violation
         "seen_sidecar_bloom": """
-            SELECT c_custkey, c_name FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o
-                              WHERE o.o_custkey = c.c_custkey
-                                AND o.o_custkey % 3 = 0)
-        """,
-        "seen_sidecar_cuckoo": """
             SELECT c_custkey, c_name FROM customer c
             WHERE NOT EXISTS (SELECT 1 FROM orders o
                               WHERE o.o_custkey = c.c_custkey
@@ -4280,16 +4207,12 @@ def oracle_sql() -> dict[str, str]:
             FROM h
         """,
     }
-    # prefilter/index variants are RESULT-identical to their base paths by
-    # contract (prefilter-only cuckoo; build-once LSH index), so they share
-    # the base oracle — the harness then independently proves each variant
-    # against the same ground truth
-    d["crawl_seen_cuckoo"] = d["crawl_seen"]
+    # the build-once LSH index is RESULT-identical to the one-shot path by
+    # contract, so it shares the base oracle — the harness then
+    # independently proves the index against the same ground truth
     d["ann_lsh_indexed"] = d["ann_lsh"]
-    # star contraction computes the SAME components as min-label propagation
-    d["dedup_clusters_star"] = d["dedup_clusters"]
     # e2e dedup = the cluster closure + keeper/size annotation (kept = the
-    # cluster's min id, which IS cluster_id by the min-label construction)
+    # cluster's min id, which IS cluster_id by construction)
     d["dedup_e2e"] = f"""
         WITH comp AS ({d["dedup_clusters"]})
         SELECT doc_id, cluster_id,

@@ -57,7 +57,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="bucketed parquet corpus (else generate in-memory)")
     p.add_argument("--salt-partitions", type=int, default=None)
     p.add_argument("--use-bloom", action=argparse.BooleanOptionalAction, default=None)
-    p.add_argument("--use-cuckoo", action=argparse.BooleanOptionalAction, default=None)
     p.add_argument("--use-freshness", action=argparse.BooleanOptionalAction,
                    default=None,
                    help="measured recrawl scheduling: schedule_recrawl "
@@ -106,7 +105,6 @@ def resolve_config(args: argparse.Namespace) -> CrawlConfig:
         default_delay=args.delay,
         salt_partitions=args.salt_partitions,
         use_bloom=args.use_bloom,
-        use_cuckoo=args.use_cuckoo,
         use_freshness=args.use_freshness,
         archive_dedup=args.archive_dedup,
         use_adaptive_politeness=args.adaptive_politeness,

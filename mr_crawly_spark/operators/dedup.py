@@ -433,73 +433,20 @@ def connected_components(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 50,
-) -> DataFrame:
-    """Transitive dedup clusters: connected components of the near-dup pair
-    graph by iterative min-label propagation — the step that turns pairwise
-    candidates (minhash_lsh_pairs / simhash / embedding buckets) into "keep
-    one document per duplicate CLUSTER" (pairs alone under-dedup: A~B, B~C
-    must collapse A,B,C together even when A~C was never emitted).
-
-    Returns (id_col, cluster_id) with cluster_id = the smallest reachable
-    id; singleton docs are their own cluster. Deterministic at any
-    parallelism. Each iteration is one join + one map-side-combined min-agg
-    and converges in O(graph diameter) rounds (near-dup graphs are
-    overwhelmingly tiny stars, so 2-3 rounds in practice); every iteration
-    localCheckpoints so the plan never grows with iteration count (the
-    classic iterative-algorithm failure mode on Spark). At adversarial
-    diameters switch the propagation to the large-star/small-star
-    contraction (same loop shape, fewer rounds).
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint(eager=False)  # reused every iteration
-    )
-    labels = ids.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=False)
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("label").alias("_nmin"))
-        )
-        proposed = (
-            labels.join(neighbor_min, labels.id == neighbor_min.dst, "left")
-            .select(
-                "id",
-                "label",
-                F.least(F.col("label"), F.coalesce(F.col("_nmin"), F.col("label")))
-                .alias("_new"),
-            )
-        )
-        obs = Observation()
-        updated = proposed.observe(
-            obs, F.sum((F.col("_new") < F.col("label")).cast("long")).alias("changed")
-        ).select("id", F.col("_new").alias("label")).localCheckpoint()
-        labels = updated
-        if int(obs.get["changed"] or 0) == 0:
-            break
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(
-    ids: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iterations: int = 50,
     with_rounds: bool = False,
 ):
-    """Connected components by alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — the adversarial-diameter variant of
-    connected_components: plain min-label propagation needs O(diameter)
-    rounds (a 10^3-node chain = 10^3 joins), star contraction converges in
-    O(log^2 n) rounds (~log n observed) because every round REWIRES edges
-    toward component minima instead of walking labels one hop.
+    """Transitive dedup clusters: connected components of the near-dup pair
+    graph — the step that turns pairwise candidates (minhash_lsh_pairs /
+    simhash / embedding buckets) into "keep one document per duplicate
+    CLUSTER" (pairs alone under-dedup: A~B, B~C must collapse A,B,C
+    together even when A~C was never emitted).
+
+    Computed by alternating LARGE-STAR / SMALL-STAR contraction (Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC 2014):
+    min-label propagation needs O(diameter) rounds (a 10^3-node chain =
+    10^3 joins), star contraction converges in O(log^2 n) rounds (~log n
+    observed) because every round REWIRES edges toward component minima
+    instead of walking labels one hop.
 
         large-star(u): m = min(N(u) ∪ {u}); for v in N(u), v > u: edge (v,m)
         small-star(u): over edges oriented larger->smaller, m = min(N<(u) ∪
@@ -509,8 +456,10 @@ def connected_components_star(
     combinable, no windows; per-round localCheckpoint keeps the plan flat.
     Fixed point = the edge multiset stops changing (checked with a
     count + xxhash64-sum signature riding the same action). Returns
-    (id_col, cluster_id) identical to connected_components; singletons are
-    their own cluster. ``with_rounds`` also returns the rounds used (the
+    (id_col, cluster_id) with cluster_id = the smallest reachable id;
+    singletons are their own cluster. Deterministic at any parallelism.
+    Raises RuntimeError when ``max_iterations`` rounds do not reach the
+    fixed point. ``with_rounds`` also returns the rounds used (the
     convergence property tests read it)."""
     sym = (
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -608,7 +557,7 @@ def connected_components_star(
         # converges in O(log^2 n) rounds, so exhausting max_iterations means
         # the budget is far too small for the graph — fail loudly.
         raise RuntimeError(
-            f"connected_components_star did not reach its edge fixed point "
+            f"connected_components did not reach its edge fixed point "
             f"in {max_iterations} rounds — labels would be unreliable; "
             "raise max_iterations (convergence is ~log n rounds)"
         )
@@ -645,7 +594,6 @@ def neardup_dedup(
     shingle_n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    use_star: bool = True,
     max_band_size: int | None = None,
 ) -> DataFrame:
     """END-TO-END near-duplicate deduplication — the composition a corpus
@@ -659,19 +607,14 @@ def neardup_dedup(
     auditing. Every stage is the scale-audited primitive: banded equi-join
     (never all-pairs, hot bands cappable via ``max_band_size``),
     large-star/small-star contraction for the closure (O(log^2 n) rounds on
-    adversarial chain graphs; ``use_star=False`` falls back to plain
-    min-label propagation, cheaper on tiny-diameter graphs), and the
-    cluster-size annotation is one map-side-combined agg joined back on
-    cluster_id. Deterministic at any parallelism."""
+    adversarial chain graphs), and the cluster-size annotation is one
+    map-side-combined agg joined back on cluster_id. Deterministic at any
+    parallelism."""
     pairs = minhash_lsh_pairs(
         docs, n_hashes, bands, shingle_n, id_col, text_col, max_band_size
     )
     ids = docs.select(id_col)
-    cc = (
-        connected_components_star(ids, pairs, id_col)
-        if use_star
-        else connected_components(ids, pairs, id_col)
-    )
+    cc = connected_components(ids, pairs, id_col)
     sizes = cc.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

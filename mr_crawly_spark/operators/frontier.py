@@ -51,10 +51,10 @@ def select_slice(
 
     ``budget_rows``: caller's upper bound on the budgets table (one row per
     host with robots rules). The broadcast is forced only under
-    politeness.BROADCAST_ROW_LIMIT — at ~10^7+ ruled hosts the budgets
+    sources.corpus.BROADCAST_ROW_LIMIT — at ~10^7+ ruled hosts the budgets
     frame is left to AQE instead of an unconditional driver broadcast.
     """
-    from mr_crawly_spark.operators.politeness import BROADCAST_ROW_LIMIT
+    from mr_crawly_spark.sources.corpus import BROADCAST_ROW_LIMIT
 
     def build_static() -> dict:
         """Round-invariant plan fragments (colcache): the slice runs every

@@ -28,12 +28,7 @@ from mr_crawly_spark.datagen import (
     ROUND_SECONDS,
 )
 from mr_crawly_spark.functions.urls import url_path_col
-
-
-# mirror of sources/corpus.py BROADCAST_ROW_LIMIT: above this many rule rows
-# we stop FORCING a broadcast and let AQE pick the physical join — at 10^7+
-# crawled hosts the rules table no longer fits a driver broadcast
-BROADCAST_ROW_LIMIT = 1_000_000
+from mr_crawly_spark.sources.corpus import BROADCAST_ROW_LIMIT
 
 
 def robots_gate(

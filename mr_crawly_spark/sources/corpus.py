@@ -22,9 +22,10 @@ from pyspark.sql import functions as F
 from mr_crawly_spark import schemas as S
 
 N_BUCKETS = 64
-# above this many slice rows we stop FORCING a broadcast and let AQE pick the
-# physical join from runtime sizes (a 10^7-hosts round could put ~10^8 rows in
-# the slice — force-broadcasting that OOMs the driver; round-1 verdict #3)
+# above this many build-side rows (fetch slice, robots rules, host budgets)
+# we stop FORCING a broadcast and let AQE pick the physical join from runtime
+# sizes (a 10^7-hosts round could put ~10^8 rows in the slice — force-
+# broadcasting that OOMs the driver; round-1 verdict #3)
 BROADCAST_ROW_LIMIT = 1_000_000
 
 

@@ -2,7 +2,7 @@
 vs bucket-partitioned SIDECAR probe (the past-the-driver-gate scale path the
 engine auto-falls-back to, r4 verdict #1/#2).
 
-All five routes must return the IDENTICAL fresh-set count (the prefilter
+All three routes must return the IDENTICAL fresh-set count (the prefilter
 no-false-negative contract measured at bench scale, not just in unit
 tests); the JSON records per-route wall time so the sidecar path's cost
 relative to the broadcast dict — its extra repartitionByRange plus
@@ -36,7 +36,6 @@ from mr_crawly_spark.session import get_spark  # noqa: E402
 N_BUCKETS = 32
 M_BITS = 1 << 21  # 256 KiB/bucket; ~17 bits/key at 4M keys over 32 buckets
 K = 5
-CUCKOO_ROWS = 1 << 16  # 4-slot rows -> 262k slots/bucket, ~0.48 load
 
 
 def build_inputs(spark, n_candidates: int):
@@ -88,7 +87,6 @@ def main() -> int:
     cand, seen = build_inputs(spark, n)
     tmp = tempfile.mkdtemp(prefix="sidecar_bench_")
     bloom_dir = os.path.join(tmp, "bloom")
-    cuckoo_dir = os.path.join(tmp, "cuckoo")
 
     # untimed warmup of every stage shape (JIT, Arrow pools, shuffle dirs)
     warm_c = cand.limit(200_000).localCheckpoint()
@@ -103,12 +101,6 @@ def main() -> int:
     _, builds["bloom_sidecar_build_sec"] = timed(
         lambda: seen_ops.build_bloom_sidecar(seen, bloom_dir, N_BUCKETS, M_BITS, K)
     )
-    cuckoo, builds["cuckoo_dict_build_sec"] = timed(
-        lambda: seen_ops.build_bucket_cuckoos(seen, N_BUCKETS, CUCKOO_ROWS)
-    )
-    _, builds["cuckoo_sidecar_build_sec"] = timed(
-        lambda: seen_ops.build_cuckoo_sidecar(seen, cuckoo_dir, N_BUCKETS, CUCKOO_ROWS)
-    )
 
     routes = {
         "exact_antijoin": lambda: seen_ops.filter_unseen(cand, seen),
@@ -118,12 +110,6 @@ def main() -> int:
         "bloom_sidecar": lambda: seen_ops.filter_unseen(
             cand, seen, n_buckets=N_BUCKETS, m_bits=M_BITS, k=K,
             sidecar_path=bloom_dir,
-        ),
-        "cuckoo_dict": lambda: seen_ops.filter_unseen_cuckoo(
-            cand, seen, cuckoo, N_BUCKETS, CUCKOO_ROWS
-        ),
-        "cuckoo_sidecar": lambda: seen_ops.filter_unseen_cuckoo(
-            cand, seen, None, N_BUCKETS, CUCKOO_ROWS, sidecar_path=cuckoo_dir
         ),
     }
     results = {}
@@ -140,10 +126,7 @@ def main() -> int:
     out = {
         "n_candidates": n,
         "n_seen": n // 2,
-        "geometry": {
-            "n_buckets": N_BUCKETS, "m_bits": M_BITS, "k": K,
-            "cuckoo_rows": CUCKOO_ROWS,
-        },
+        "geometry": {"n_buckets": N_BUCKETS, "m_bits": M_BITS, "k": K},
         "builds": builds,
         "routes": results,
         "all_routes_identical_count": identical,

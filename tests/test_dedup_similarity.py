@@ -473,17 +473,17 @@ def test_star_contraction_chain_converges_in_log_rounds(spark):
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
-    out, rounds = D.connected_components_star(
-        ids, pairs, with_rounds=True
-    )
+    out, rounds = D.connected_components(ids, pairs, with_rounds=True)
     labels = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
     assert labels == {i: 0 for i in range(n)}  # one component, min label 0
     assert rounds <= 15  # ~log2(1000) + slack, NOT O(n)
 
 
 def test_star_contraction_matches_label_propagation(spark):
-    """Property: star contraction and plain min-label propagation agree on
-    an arbitrary graph mixing chains, stars, triangles and singletons."""
+    """Property: star contraction yields the min-label propagation fixed
+    point — every node labeled with its component's minimum id — on an
+    arbitrary graph mixing chains, stars, triangles and singletons. The
+    reference is an independent pure-Python union-find."""
     import random
 
     rng = random.Random(42)
@@ -501,15 +501,23 @@ def test_star_contraction_matches_label_propagation(spark):
     pairs = spark.createDataFrame(
         sorted(edges), "id_a long, id_b long"
     )
-    plain = {
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # root = the smaller id
+    want = {(i, find(i)) for i in range(n)}
+    got = {
         (r["doc_id"], r["cluster_id"])
         for r in D.connected_components(ids, pairs).collect()
     }
-    star = {
-        (r["doc_id"], r["cluster_id"])
-        for r in D.connected_components_star(ids, pairs).collect()
-    }
-    assert star == plain
+    assert got == want
 
 
 def test_edit_distance_on_candidates_planted(spark):

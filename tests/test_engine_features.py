@@ -279,7 +279,9 @@ def test_cli_toml_merge_precedence(tmp_path):
     c2 = cfg(["--warehouse", "/tmp/wh", "--retries", "1"])
     assert c2.max_retries == 1
     assert cfg(["--warehouse", "/tmp/wh"]).max_retries == 3
-    assert cfg(["--warehouse", "/tmp/wh", "--use-cuckoo"]).use_cuckoo is True
+    # a retired prefilter flag is rejected, not silently accepted
+    with pytest.raises(SystemExit):
+        build_parser().parse_args(["--warehouse", "/tmp/wh", "--use-cuckoo"])
 
 
 def test_write_width_scales_with_round_volume(spark, tiny_corpus, crawled):
@@ -501,7 +503,7 @@ def test_star_cc_truncated_run_raises(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a int, id_b int"
     )
     with pytest.raises(RuntimeError, match="fixed point"):
-        D.connected_components_star(ids, pairs, max_iterations=1)
+        D.connected_components(ids, pairs, max_iterations=1)
 
 
 def test_hits_matches_python_power_iteration(spark):

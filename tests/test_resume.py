@@ -91,6 +91,8 @@ def test_bloom_engine_equals_exact_engine(spark, tiny_corpus, exact_state):
         use_bloom=True, bloom_buckets=4,
     )
     bloomed.run()
+    assert bloomed._blooms is not None  # built and maintained
+    assert any(any(v) for v in bloomed._blooms.values())
     assert _final_state(bloomed) == exact_state
 
 
@@ -134,48 +136,49 @@ def test_resume_discards_orphaned_table_commits(spark, tiny_corpus, ci1_run):
     assert "https://orphan.test/x" not in got[1]  # ...orphan delta is gone
 
 
-def test_cuckoo_outputs_equal_exact(spark, tiny_corpus, exact_state):
-    """use_cuckoo=True must not change any output (prefilter-only contract,
-    twin of the Bloom test) — and the filter must actually engage."""
-    cuckooed = _engine(
-        spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_ck2_"),
-        use_cuckoo=True, bloom_buckets=4, bloom_expected_n=4096,
-    )
-    cuckooed.run()
-    assert cuckooed._cuckoo is not None  # built and maintained
-    assert any(v != b"" for v in cuckooed._cuckoo.values())
-    assert _final_state(cuckooed) == exact_state
-
-
-def test_cuckoo_sidecar_resume(spark, tiny_corpus):
-    """The cuckoo prefilter persists to a sidecar at flush (the Bloom twin)
-    and resume reloads it byte-identical instead of rebuilding — but ONLY
-    when the persisted geometry matches; a mismatched config rebuilds from
-    the seen table (mismatched n_rows would probe false negatives)."""
+def test_bloom_sidecar_resume(spark, tiny_corpus, monkeypatch):
+    """The Bloom prefilter persists to a sidecar at flush and resume
+    reloads it byte-identical instead of rebuilding — but ONLY when the
+    persisted geometry matches; a mismatched config rebuilds from the seen
+    table (mismatched m_bits would probe false negatives)."""
     import os
 
-    wh = tempfile.mkdtemp(prefix="crawl_cksc_")
-    cfg = dict(use_cuckoo=True, bloom_buckets=4, bloom_expected_n=4096)
+    from mr_crawly_spark.operators import seen as seen_ops
+
+    wh = tempfile.mkdtemp(prefix="crawl_blsc_")
+    cfg = dict(use_bloom=True, bloom_buckets=4, bloom_expected_n=4096)
     eng = _engine(spark, tiny_corpus, wh, **cfg)
     eng.run()
-    assert os.path.isdir(os.path.join(wh, "seen_cuckoo"))
-    saved = dict(eng._cuckoo)
+    assert os.path.isdir(os.path.join(wh, "seen_bloom"))
+    saved = dict(eng._blooms)
 
+    builds = {"n": 0}
+    real_build = seen_ops.build_bucket_blooms
+
+    def counting_build(*a, **kw):
+        builds["n"] += 1
+        return real_build(*a, **kw)
+
+    monkeypatch.setattr(seen_ops, "build_bucket_blooms", counting_build)
     resumed = _engine(spark, tiny_corpus, wh, **cfg)
     assert resumed.resume()
-    resumed._maybe_build_cuckoo(resumed._seen_full_view())
-    assert resumed._cuckoo == saved  # reloaded, not rebuilt
+    resumed._maybe_build_blooms(resumed._seen_full_view())
+    assert resumed._blooms == saved  # reloaded byte-identical...
+    assert builds["n"] == 0  # ...not rebuilt
 
-    # different expected_n -> different n_rows -> geometry mismatch:
+    # different expected_n -> different m_bits -> geometry mismatch:
     # must NOT load the stale sidecar (silent false negatives); rebuilds
     other = _engine(
         spark, tiny_corpus, wh,
-        use_cuckoo=True, bloom_buckets=4, bloom_expected_n=65536,
+        use_bloom=True, bloom_buckets=4, bloom_expected_n=65536,
     )
     assert other.resume()
-    other._maybe_build_cuckoo(other._seen_full_view())
-    assert other._cuckoo is not None
-    assert other._cuckoo_rows != eng._cuckoo_rows
+    other._maybe_build_blooms(other._seen_full_view())
+    assert builds["n"] == 1
+    assert other._blooms is not None
+    assert other._bloom_mk != eng._bloom_mk
+    m_bits = other._bloom_mk[0]
+    assert all(len(v) == m_bits // 8 for v in other._blooms.values())
 
 
 def test_bloom_gate_degrades_to_sidecar_mode(spark, tiny_corpus, monkeypatch,
@@ -197,27 +200,9 @@ def test_bloom_gate_degrades_to_sidecar_mode(spark, tiny_corpus, monkeypatch,
     assert _final_state(gated) == exact_state
 
 
-def test_cuckoo_gate_degrades_to_sidecar_mode(spark, tiny_corpus, monkeypatch,
-                                              exact_state):
-    """The cuckoo twin: past the driver gate the engine probes the
-    bucket-partitioned sidecar (the path build_bucket_cuckoos' gate error
-    points at) instead of crashing, outputs unchanged."""
-    from mr_crawly_spark.operators import seen as seen_ops
-
-    monkeypatch.setattr(seen_ops, "MAX_DRIVER_BLOOM_BYTES", 1024)
-    gated = _engine(
-        spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_ckg_"),
-        use_cuckoo=True, bloom_buckets=4, bloom_expected_n=4096,
-    )
-    gated.run()
-    assert gated._cuckoo_sidecar_mode
-    assert gated._cuckoo is None
-    assert _final_state(gated) == exact_state
-
-
 def test_sidecar_mode_resume_mid_crawl(spark, tiny_corpus, monkeypatch,
                                        exact_state):
-    """Kill a sidecar-mode cuckoo crawl after round 2, resume in a NEW
+    """Kill a sidecar-mode Bloom crawl after round 2, resume in a NEW
     engine (same gate): the persisted geometry revalidates, the sidecar
     keeps being probed/merged, final state identical to uninterrupted.
     The prefilter-only contract makes the shared exact crawl the baseline
@@ -227,18 +212,19 @@ def test_sidecar_mode_resume_mid_crawl(spark, tiny_corpus, monkeypatch,
 
     monkeypatch.setattr(seen_ops, "MAX_DRIVER_BLOOM_BYTES", 1024)
     cfg = dict(
-        use_cuckoo=True, bloom_buckets=4, bloom_expected_n=4096,
+        use_bloom=True, bloom_buckets=4, bloom_expected_n=4096,
         checkpoint_interval=1,
     )
     wh = tempfile.mkdtemp(prefix="crawl_scres_")
     first = _engine(spark, tiny_corpus, wh, max_rounds=2, **cfg)
     first.run()
-    assert first._cuckoo_sidecar_mode
+    assert first._bloom_sidecar_mode
 
     resumed = _engine(spark, tiny_corpus, wh, max_rounds=100, **cfg)
     assert resumed.resume()
     resumed.run(fresh=False)
-    assert resumed._cuckoo_sidecar_mode
+    assert resumed._bloom_sidecar_mode
+    assert resumed._blooms is None
     assert _final_state(resumed) == exact_state
 
 

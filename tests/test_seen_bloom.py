@@ -132,270 +132,6 @@ def test_driver_bloom_size_gate():
         seen_ops.build_bucket_blooms(None, 4096, 95_850_584_000 // 4096, 7)
 
 
-# ------------------------------------------------------------------- #
-# cuckoo-filter prefilter (north_star: "Bloom/cuckoo URL-seen set")
-
-def test_cuckoo_path_equals_exact_antijoin(spark):
-    """Same contract as the Bloom: the cuckoo path returns EXACTLY the
-    anti-join's rows (no false negatives by construction; false positives
-    fall through to the exact join)."""
-    seen = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 7}.test/p/{i}",) for i in range(500)], "url string"
-        )
-    )
-    cands = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 7}.test/p/{i}",) for i in range(250, 750)],
-            "url string",
-        )
-    )
-    exact = {r["url"] for r in seen_ops.filter_unseen(cands, seen).collect()}
-    n_buckets = 8
-    n_rows = seen_ops.cuckoo_params(500 // n_buckets)
-    tables = seen_ops.build_bucket_cuckoos(seen, n_buckets, n_rows)
-    got = {
-        r["url"]
-        for r in seen_ops.filter_unseen_cuckoo(
-            cands, seen, tables, n_buckets, n_rows
-        ).collect()
-    }
-    assert got == exact
-
-
-def test_cuckoo_no_false_negatives_and_prefilter_rate():
-    """Every inserted key probes positive; non-inserted keys mostly probe
-    negative (the prefilter actually filters)."""
-    import numpy as np
-
-    n_rows = seen_ops.cuckoo_params(1000)
-    h_in = (np.arange(1, 1001, dtype=np.int64) * 2654435761).view(np.uint64)
-    raw = seen_ops._cuckoo_insert_all(h_in, n_rows)
-    assert raw != b""  # sized for the load, no saturation
-    tbl = np.frombuffer(raw, dtype=np.uint16).reshape(
-        n_rows, seen_ops.SLOTS_PER_BUCKET
-    )
-    fps, i1s, i2s = seen_ops._cuckoo_fp_i1_i2(h_in, n_rows)
-    hit = (tbl[i1s] == fps[:, None]).any(1) | (tbl[i2s] == fps[:, None]).any(1)
-    assert hit.all()  # zero false negatives
-    h_out = (np.arange(5001, 7001, dtype=np.int64) * 2654435761).view(np.uint64)
-    fpo, i1o, i2o = seen_ops._cuckoo_fp_i1_i2(h_out, n_rows)
-    fp_hit = (tbl[i1o] == fpo[:, None]).any(1) | (tbl[i2o] == fpo[:, None]).any(1)
-    assert fp_hit.mean() < 0.2  # false-positive rate stays useful
-
-
-def test_cuckoo_delete_then_incremental_add():
-    """The capability a Bloom lacks: delete one key (it probes negative,
-    others unaffected), then incrementally add new keys in place."""
-    import numpy as np
-
-    n_buckets, expected = 4, 800  # sized for initial 400 + incremental adds
-    n_rows = seen_ops.cuckoo_params(expected // n_buckets)
-    hashes = [int(i * 2654435761 % (1 << 62)) for i in range(1, 401)]
-    tables: dict[int, bytes] = {}
-    seen_ops.cuckoo_add(tables, hashes, n_buckets, n_rows)
-
-    def probes(h):
-        b = h % n_buckets
-        tbl = np.frombuffer(tables[b], dtype=np.uint16).reshape(
-            n_rows, seen_ops.SLOTS_PER_BUCKET
-        )
-        hv = np.array([h], dtype=np.int64).view(np.uint64)
-        fp, i1, i2 = seen_ops._cuckoo_fp_i1_i2(hv, n_rows)
-        return bool(
-            (tbl[int(i1[0])] == int(fp[0])).any()
-            or (tbl[int(i2[0])] == int(fp[0])).any()
-        )
-
-    victim = hashes[123]
-    assert probes(victim)
-    assert seen_ops.cuckoo_delete(tables, victim, n_buckets, n_rows)
-    assert not probes(victim)          # deleted key gone...
-    assert all(probes(h) for h in hashes[:100])  # ...others intact
-    fresh = [int(i * 48271 % (1 << 62)) for i in range(10**6, 10**6 + 50)]
-    seen_ops.cuckoo_add(tables, fresh, n_buckets, n_rows)
-    assert all(probes(h) for h in fresh)
-
-
-def test_cuckoo_saturated_bucket_degrades_safely():
-    """An overloaded bucket flips to the saturated sentinel: every key in it
-    answers maybe (exact join decides) — never a false negative."""
-    import numpy as np
-
-    n_rows = 8  # 32 slots
-    h = (np.arange(1, 200, dtype=np.int64) * 2654435761).view(np.uint64)
-    raw = seen_ops._cuckoo_insert_all(h, n_rows)  # 199 keys into 32 slots
-    assert raw == b""
-
-
-def test_cuckoo_primary_rows_spread_under_bucket_shard():
-    """Regression (r3 advice): the engine shards keys into a bucket via
-    pmod(url_hash, n_buckets) with power-of-two n_buckets, so within a
-    bucket the low log2(n_buckets) bits of every raw hash are CONSTANT. The
-    primary index must come from the MIXED hash or the table collapses to
-    n_rows/n_buckets usable rows and saturates at realistic fill."""
-    import numpy as np
-
-    n_buckets = 32
-    n_keys = 6170
-    n_rows = seen_ops.cuckoo_params(n_keys)  # sized for exactly this load
-    # every key lands in bucket 0: low 5 bits all zero (the collapse case)
-    h = (np.arange(1, n_keys + 1, dtype=np.int64) * n_buckets).view(np.uint64)
-    raw = seen_ops._cuckoo_insert_all(h, n_rows)
-    assert raw != b""  # no saturation at the design load factor
-    _, i1s, _ = seen_ops._cuckoo_fp_i1_i2(h, n_rows)
-    # primary rows cover most of the table, not an n_rows/n_buckets sliver
-    assert len(set(i1s.tolist())) > n_rows // 2
-
-
-def test_cuckoo_add_delta_distributed_matches_exact(spark):
-    """The engine's incremental path: build from an initial seen set, fold
-    two round deltas in via the DISTRIBUTED builder+merge, and the filter
-    must still (a) probe positive for every inserted key (no false
-    negatives) and (b) leave filter_unseen_cuckoo exactly equal to the
-    plain anti-join."""
-    n_buckets, expected = 8, 2000
-    n_rows = seen_ops.cuckoo_params(expected // n_buckets)
-    base = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 5}.test/p/{i}",) for i in range(600)], "url string"
-        )
-    )
-    tables = seen_ops.build_bucket_cuckoos(base, n_buckets, n_rows)
-    full = base
-    for lo, hi in ((600, 900), (900, 1200)):
-        delta = _with_hash(
-            spark.createDataFrame(
-                [(f"https://h{i % 5}.test/p/{i}",) for i in range(lo, hi)],
-                "url string",
-            )
-        )
-        seen_ops.cuckoo_add_delta(tables, delta, n_buckets, n_rows)
-        full = full.unionByName(delta)
-    cands = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 5}.test/p/{i}",) for i in range(800, 1600)],
-            "url string",
-        )
-    )
-    exact = {r["url"] for r in seen_ops.filter_unseen(cands, full).collect()}
-    got = {
-        r["url"]
-        for r in seen_ops.filter_unseen_cuckoo(
-            cands, full, tables, n_buckets, n_rows
-        ).collect()
-    }
-    assert got == exact
-    # and the merge preserved every key: the seen half of cands (800-1200)
-    # must ALL have been prefiltered through the maybe path (no fresh leak)
-    assert all(f"https://h{i % 5}.test/p/{i}" not in got for i in range(800, 1200))
-
-
-def test_cuckoo_delete_safe_under_fp_collision():
-    """r3 advice #2: two distinct keys sharing (fp, row-class) each own a
-    slot (duplicates stored, Fan et al.), so deleting one never makes the
-    other probe negative."""
-    import numpy as np
-
-    n_rows = 8  # tiny table -> row classes collide quickly
-    # pseudorandom keys (a LINEAR sequence k*C has lattice structure in
-    # truncated bit windows and can yield zero (fp, i1) collisions)
-    rng = np.random.default_rng(7).integers(
-        1, 1 << 62, size=160_000, dtype=np.int64
-    )
-    rng = rng[rng % 4 == 0]  # same engine bucket (n_buckets=4) for all keys
-    h = rng.view(np.uint64)
-    fps, i1s, _ = seen_ops._cuckoo_fp_i1_i2(h, n_rows)
-    # find two distinct hashes in the same (fp, i1) class
-    seen_cls: dict[tuple[int, int], int] = {}
-    pair = None
-    for idx, (fp, i1) in enumerate(zip(fps.tolist(), i1s.tolist())):
-        if (fp, i1) in seen_cls:
-            pair = (seen_cls[(fp, i1)], idx)
-            break
-        seen_cls[(fp, i1)] = idx
-    assert pair is not None, "no (fp, i1) collision in sample"
-    a, b = int(rng[pair[0]]), int(rng[pair[1]])
-    n_buckets = 4
-    # force both into the same engine bucket dict entry
-    tables: dict[int, bytes] = {}
-    seen_ops.cuckoo_add(tables, [a], n_buckets, n_rows)
-    seen_ops.cuckoo_add(tables, [b], n_buckets, n_rows)
-
-    def probes(x: int) -> bool:
-        bkt = x % n_buckets
-        tbl = np.frombuffer(tables[bkt], dtype=np.uint16).reshape(
-            n_rows, seen_ops.SLOTS_PER_BUCKET
-        )
-        hv = np.array([x], dtype=np.int64).view(np.uint64)
-        fp, i1, i2 = seen_ops._cuckoo_fp_i1_i2(hv, n_rows)
-        return bool(
-            (tbl[int(i1[0])] == int(fp[0])).any()
-            or (tbl[int(i2[0])] == int(fp[0])).any()
-        )
-
-    assert probes(a) and probes(b)
-    assert seen_ops.cuckoo_delete(tables, a, n_buckets, n_rows)
-    assert probes(b)  # the surviving key MUST still probe positive
-
-
-# ------------------------------------------------------------------- #
-# sidecar scale paths (r4 verdict #1/#2): bucket-partitioned probes +
-# distributed merges + crash-safe write ordering
-
-def test_cuckoo_sidecar_probe_equals_exact_and_is_bucket_local(spark, tmp_path):
-    """The cuckoo twin of the Bloom sidecar probe: built distributed,
-    probed bucket-partitioned (each task loads only its partition's
-    tables), result EXACTLY the anti-join's."""
-    seen = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 7}.test/p/{i}",) for i in range(500)], "url string"
-        )
-    )
-    cands = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 7}.test/p/{i}",) for i in range(250, 750)],
-            "url string",
-        )
-    )
-    n_buckets = 8
-    n_rows = seen_ops.cuckoo_params(500 // n_buckets)
-    path = str(tmp_path / "cuckoo_sc")
-    seen_ops.build_cuckoo_sidecar(seen, path, n_buckets, n_rows)
-    assert seen_ops.read_cuckoo_geometry(path) == (n_rows, n_buckets)
-
-    exact = {r["url"] for r in seen_ops.filter_unseen(cands, seen).collect()}
-    got = {
-        r["url"]
-        for r in seen_ops.filter_unseen_cuckoo(
-            cands, seen, None, n_buckets, n_rows, sidecar_path=path
-        ).collect()
-    }
-    assert got == exact
-
-    probed = seen_ops.cuckoo_prefilter_sidecar(
-        cands, path, n_buckets, n_rows, debug_loaded_col=True
-    )
-    per_row = [r["_buckets_loaded"] for r in probed.collect()]
-    assert max(per_row) <= 2
-    assert max(per_row) < n_buckets  # no task touched the whole filter
-
-
-def test_cuckoo_sidecar_geometry_mismatch_rejected(spark, tmp_path):
-    seen = _with_hash(
-        spark.createDataFrame(
-            [(f"https://x.test/{i}",) for i in range(50)], "url string"
-        )
-    )
-    n_rows = seen_ops.cuckoo_params(50)
-    path = str(tmp_path / "cuckoo_geo")
-    seen_ops.build_cuckoo_sidecar(seen, path, 4, n_rows)
-    import pytest
-
-    with pytest.raises(ValueError, match="geometry"):
-        seen_ops.cuckoo_prefilter_sidecar(seen, path, 4, n_rows * 2).count()
-
-
 def test_merge_bloom_sidecar_distributed(spark, tmp_path):
     """Flush-cadence fold: base sidecar + two deltas merged fully
     distributed must equal a sidecar built from the full set — probe-wise
@@ -440,47 +176,6 @@ def test_merge_bloom_sidecar_distributed(spark, tmp_path):
     assert got == exact
 
 
-def test_merge_cuckoo_sidecar_distributed(spark, tmp_path):
-    """The cuckoo twin of the distributed sidecar merge."""
-    n_buckets, expected = 8, 2000
-    n_rows = seen_ops.cuckoo_params(expected // n_buckets)
-    base = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 5}.test/p/{i}",) for i in range(600)], "url string"
-        )
-    )
-    path = str(tmp_path / "cuckoo_merge")
-    seen_ops.build_cuckoo_sidecar(base, path, n_buckets, n_rows)
-    full = base
-    for lo, hi in ((600, 900), (900, 1200)):
-        delta = _with_hash(
-            spark.createDataFrame(
-                [(f"https://h{i % 5}.test/p/{i}",) for i in range(lo, hi)],
-                "url string",
-            )
-        )
-        seen_ops.merge_cuckoo_sidecar(spark, delta, path, n_buckets, n_rows)
-        full = full.unionByName(delta)
-    # safety: every seen key probes positive after the merges
-    probed = seen_ops.cuckoo_prefilter_sidecar(full, path, n_buckets, n_rows)
-    from pyspark.sql import functions as F2
-    assert probed.filter(~F2.col("maybe_seen")).count() == 0
-    cands = _with_hash(
-        spark.createDataFrame(
-            [(f"https://h{i % 5}.test/p/{i}",) for i in range(800, 1600)],
-            "url string",
-        )
-    )
-    exact = {r["url"] for r in seen_ops.filter_unseen(cands, full).collect()}
-    got = {
-        r["url"]
-        for r in seen_ops.filter_unseen_cuckoo(
-            cands, full, None, n_buckets, n_rows, sidecar_path=path
-        ).collect()
-    }
-    assert got == exact
-
-
 def test_gutted_sidecar_fails_loud_not_false_negative(spark, tmp_path):
     """ADVICE r4: a sidecar dir with a valid geometry but NO parquet files
     (the old non-atomic write's crash window) must REFUSE to load/probe —
@@ -495,31 +190,21 @@ def test_gutted_sidecar_fails_loud_not_false_negative(spark, tmp_path):
             [(f"https://x.test/{i}",) for i in range(50)], "url string"
         )
     )
-    n_rows = seen_ops.cuckoo_params(50)
-    cpath = str(tmp_path / "cuckoo_gut")
-    seen_ops.build_cuckoo_sidecar(seen, cpath, 4, n_rows)
-    for fn in glob.glob(os.path.join(cpath, "*.parquet")):
-        os.remove(fn)
-    assert seen_ops.read_cuckoo_geometry(cpath) is not None  # looks valid...
-    with pytest.raises(FileNotFoundError):
-        seen_ops.read_cuckoo_sidecar(cpath)  # ...but refuses to load
-    with pytest.raises(FileNotFoundError):
-        seen_ops.cuckoo_prefilter_sidecar(seen, cpath, 4, n_rows)
-
     m, k = seen_ops.bloom_params(50)
     bpath = str(tmp_path / "bloom_gut")
     seen_ops.build_bloom_sidecar(seen, bpath, 4, m, k)
     for fn in glob.glob(os.path.join(bpath, "*.parquet")):
         os.remove(fn)
+    assert seen_ops.read_bloom_geometry(bpath) is not None  # looks valid...
     with pytest.raises(FileNotFoundError):
-        seen_ops.bloom_prefilter_sidecar(seen, bpath, 4, m, k)
+        seen_ops.bloom_prefilter_sidecar(seen, bpath, 4, m, k)  # ...refuses
 
 
 def test_sidecar_writes_are_geometry_last(spark, tmp_path):
-    """Crash-safety ordering (ADVICE r4): the pyarrow-direct writers must
-    stage the parquet via a temp name + os.replace and write the geometry
-    only after the data is in place — verified by interposing on the
-    geometry write and asserting the parquet is already complete."""
+    """Crash-safety ordering (ADVICE r4): the sidecar writers must stage
+    the parquet via a temp name + os.replace and write the geometry only
+    after the data is in place — verified by interposing on os.replace and
+    asserting the parquet landed before the geometry file."""
     import os
 
     seen = _with_hash(
@@ -527,9 +212,6 @@ def test_sidecar_writes_are_geometry_last(spark, tmp_path):
             [(f"https://x.test/{i}",) for i in range(64)], "url string"
         )
     )
-    n_rows = seen_ops.cuckoo_params(64)
-    tables = seen_ops.build_bucket_cuckoos(seen, 4, n_rows)
-    path = str(tmp_path / "cuckoo_atomic")
 
     real_replace = os.replace
     order: list[str] = []
@@ -540,23 +222,23 @@ def test_sidecar_writes_are_geometry_last(spark, tmp_path):
 
     import unittest.mock as mock
 
-    with mock.patch("os.replace", side_effect=spy_replace):
-        seen_ops.write_cuckoo_sidecar(tables, path, n_rows=n_rows, n_buckets=4)
-    # data file replaced BEFORE the geometry file landed
-    assert order.index("part-00000.parquet") < order.index(
-        "_cuckoo_geometry.json"
-    )
-    assert seen_ops.read_cuckoo_sidecar(path) == tables
-
     m, k = seen_ops.bloom_params(64)
     blooms = seen_ops.build_bucket_blooms(seen, 4, m, k)
     bpath = str(tmp_path / "bloom_atomic")
-    order.clear()
     with mock.patch("os.replace", side_effect=spy_replace):
         seen_ops.write_bloom_sidecar(
             spark, blooms, bpath, m_bits=m, k=k, n_buckets=4
         )
+    # data file replaced BEFORE the geometry file landed
     assert order.index("part-00000.parquet") < order.index(
         "_bloom_geometry.json"
     )
     assert seen_ops.read_bloom_sidecar(spark, bpath) == blooms
+
+    # the distributed merge swaps its parts in under the same ordering
+    order.clear()
+    with mock.patch("os.replace", side_effect=spy_replace):
+        seen_ops.merge_bloom_sidecar(spark, seen, bpath, 4, m, k)
+    assert order[-1] == "_bloom_geometry.json"
+    assert "part-00000.parquet" in order
+    assert seen_ops.read_bloom_geometry(bpath) == (m, k, 4)

@@ -163,16 +163,6 @@ def test_neardup_dedup_e2e(spark, docs):
     assert all(d < 10_000 for d in kept_ids)
 
 
-def test_neardup_dedup_plain_cc_matches_star(spark, docs):
-    planted = docs.filter(F.col("doc_id") % 6 == 0).withColumn(
-        "doc_id", F.col("doc_id") + F.lit(10_000)
-    )
-    both = docs.unionByName(planted)
-    a = sorted(neardup_dedup(both, use_star=True).collect())
-    b = sorted(neardup_dedup(both, use_star=False).collect())
-    assert a == b
-
-
 def test_paragraph_dedup_strips_boilerplate(spark):
     from mr_crawly_spark.operators.dedup import paragraph_dedup
 
