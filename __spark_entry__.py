@@ -78,8 +78,8 @@ def _url_keyed(df, key_col, extra_cols=()):
 def q_seen_sidecar_bloom(spark, sf_dir):
     """D2/J3 scale path (r4 verdict #1): the SAME anti-join semantics as
     seen_antijoin, but routed through the bucket-partitioned Bloom SIDECAR
-    prefilter (seen.py bloom_prefilter_sidecar) — the residency mode the
-    engine degrades to past the 256 MB driver gate. The prefilter contract
+    prefilter (seen.py bloom_prefilter_sidecar) — the one route the engine
+    takes under use_bloom. The prefilter contract
     (no false negatives; positives re-checked exactly) means the oracle is
     the plain NOT EXISTS."""
     import tempfile
@@ -97,7 +97,7 @@ def q_seen_sidecar_bloom(spark, sf_dir):
     n_buckets = 8
     m, k = seen_ops.bloom_params(1 << 18, fpp=0.01)
     path = tempfile.mkdtemp(prefix="entry_bloom_sc_")
-    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k)
+    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k, round_=0)
     return seen_ops.filter_unseen(
         cands, seen, n_buckets=n_buckets, m_bits=m, k=k, sidecar_path=path
     ).select("c_custkey", "c_name")

@@ -251,14 +251,18 @@ class CrawlEngine:
         # re-counting the frontier every round just to test loop conditions
         self.pending_count: int | None = None
         self.frontier_count: int | None = None
-        self._blooms: dict[int, bytes] | None = None
+        # (m_bits, k) once _ensure_bloom_sidecar has validated or built the
+        # Bloom sidecar; None while the prefilter is off or not yet checked.
+        # The filter itself never comes to the driver: it lives only in the
+        # sidecar parquet, and rounds probe it bucket-partitioned
+        # executor-side (filter_unseen(sidecar_path=...))
         self._bloom_mk: tuple[int, int] | None = None
-        # prefilter residency: past seen_ops.MAX_DRIVER_BLOOM_BYTES the
-        # filter never comes to the driver — it lives in the sidecar
-        # parquet and rounds probe it bucket-partitioned executor-side
-        # (filter_unseen(sidecar_path=...)); the engine degrades to this
-        # automatically instead of raising at the gate (r4 verdict #1)
-        self._bloom_sidecar_mode = False
+        # flush progress, reset by bootstrap() and resume(): the last fully
+        # flushed round, the round whose frontier delta is committed, and
+        # the seen-delta union held until the sidecar merge succeeds
+        self._flushed_round: int | None = None
+        self._frontier_committed_round: int | None = None
+        self._pending_sidecar_seen: DataFrame | None = None
         # (url, rank) from the last refresh_pagerank(); None until computed
         self._ranks: DataFrame | None = None
         # (host, param, ...) stats from the last refresh_trap_stats();
@@ -431,8 +435,6 @@ class CrawlEngine:
                 self.cfg.warehouse,
             )
             self.catalog.reset()
-            self._blooms = None
-            self._bloom_sidecar_mode = False
         details, fallback = expand_sitemaps(self.seeds, self.sitemaps_raw)
         # cut lineage once: details feeds the sitemaps commit AND the
         # frontier build; frontier feeds its own commit AND the seen commit —
@@ -468,6 +470,7 @@ class CrawlEngine:
         self._recrawl_mode = False
         self._deltas = {"pages": [], "links": [], "seen": [], "visits": []}
         self._round_persists = []
+        self._reset_flush_state()
         self._write_run_row(end=False)
         self._write_sitemap_index_json()
         self._commit_round(
@@ -502,8 +505,18 @@ class CrawlEngine:
         self._recrawl_mode = bool(last.get("recrawl_mode"))
         self._deltas = {"pages": [], "links": [], "seen": [], "visits": []}
         self._round_persists = []
+        self._reset_flush_state()
         log.info("resume: round %d, %d visited", self.round, self.visited_count)
         return True
+
+    def _reset_flush_state(self) -> None:
+        """Forget the previous crawl's flush progress and Bloom check — a
+        second run() on the same engine must flush its own rounds and
+        revalidate the sidecar against the round it starts from."""
+        self._bloom_mk = None
+        self._flushed_round = None
+        self._frontier_committed_round = None
+        self._pending_sidecar_seen = None
 
     # ------------------------------------------------------------------ #
     # merge-on-read state views
@@ -538,20 +551,18 @@ class CrawlEngine:
 
         Rows seen SINCE the flush live in self._deltas["seen"]; the round's
         membership test anti-joins base first, then the (small) delta union
-        — exact either way, and the Bloom prefilter is built over the FULL
-        view (_seen_full_view) so it never yields false negatives."""
+        — exact either way. The Bloom sidecar covers at least the base (it
+        is built over the FULL view, _seen_full_view, and merged at every
+        flush), so probing it against the base never yields false
+        negatives."""
         if self._seen is None:
             loaded = self.catalog.load("seen", max_round=self.round)
             n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             part = loaded.repartition(
                 n_parts, F.col("url_hash"), F.col("url")
             ).sortWithinPartitions("url_hash", "url")
-            prev = self.spark.conf.get("spark.sql.adaptive.enabled")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
+            with self._aqe(enabled=False):
                 self._seen = part.localCheckpoint()
-            finally:
-                self.spark.conf.set("spark.sql.adaptive.enabled", prev)
         return self._seen
 
     def _seen_full_view(self) -> DataFrame:
@@ -680,79 +691,43 @@ class CrawlEngine:
 
         return os.path.join(self.cfg.warehouse, "seen_bloom")
 
-    def _maybe_build_blooms(self, seen: DataFrame) -> None:
-        """Build the bucketed Bloom once (full scan of seen), then keep it
-        incrementally updated per round (_bloom_add_delta) — the full build
-        never reruns inside a crawl. On resume the sidecar is reloaded, but
-        ONLY if its persisted geometry (m, k, n_buckets) matches the current
-        config — probing bitmaps with mismatched geometry yields silent
-        false negatives (duplicate crawling) or IndexError; on mismatch the
-        Bloom is rebuilt from the seen table instead.
-
-        RESIDENCY is size-gated (r4 verdict #1): a configured filter past
-        seen_ops.MAX_DRIVER_BLOOM_BYTES (the 10^10-key / ~12 GB class)
-        never comes to the driver — it is built/kept as the sidecar parquet
-        and rounds probe it bucket-partitioned executor-side; the engine
-        degrades automatically instead of raising at the collect gate."""
-        if not self.cfg.use_bloom or self._blooms is not None \
-                or self._bloom_sidecar_mode:
+    def _ensure_bloom_sidecar(self) -> None:
+        """Validate or build the Bloom sidecar once per crawl; each flush
+        then folds the round deltas in (merge_bloom_sidecar), so the full
+        build never reruns inside a crawl. A persisted sidecar is reused
+        only when
+        - its geometry (m, k, n_buckets) matches the config: bitmaps probed
+          with another geometry give silent false negatives;
+        - its round stamp is at least the current round: flushes that ran
+          with use_bloom off never merged into it, so an older stamp misses
+          seen rows (a newer one is a superset — the seen table is
+          append-only — which only costs false positives).
+        Otherwise it is rebuilt from the full seen view (base + uncommitted
+        deltas) and stamped with the current round."""
+        if not self.cfg.use_bloom or self._bloom_mk is not None:
             return
         m, k = seen_ops.bloom_params(self.cfg.bloom_expected_n, self.cfg.bloom_fpp)
-        self._bloom_mk = (m, k)
-        import os
-
         path = self._bloom_sidecar_path()
-        geom = (
-            seen_ops.read_bloom_geometry(path) if os.path.isdir(path) else None
-        )
-        total = self.cfg.bloom_buckets * (m // 8)
-        if total > seen_ops.MAX_DRIVER_BLOOM_BYTES:
-            self._bloom_sidecar_mode = True
-            if geom == (m, k, self.cfg.bloom_buckets):
-                log.info("bloom sidecar mode: reusing persisted filter")
-                return  # probe straight off the persisted sidecar
-            log.info(
-                "bloom of %d bytes exceeds the driver gate — building the "
-                "bucket-partitioned sidecar (no driver residency)", total,
-            )
-            seen_ops.build_bloom_sidecar(
-                seen, path, self.cfg.bloom_buckets, m, k
-            )
-            return
-        if geom is not None:
-            if geom == (m, k, self.cfg.bloom_buckets):
-                try:
-                    self._blooms = seen_ops.read_bloom_sidecar(self.spark, path)
-                    return
-                except Exception as exc:  # gutted dir etc. — rebuild
-                    log.warning("bloom sidecar unreadable (%s) — rebuilding", exc)
-            else:
+        geom = seen_ops.read_bloom_geometry(path)
+        stamp = seen_ops.read_bloom_round(path)
+        if (
+            geom == (m, k, self.cfg.bloom_buckets)
+            and stamp is not None
+            and stamp >= self.round
+        ):
+            log.info("bloom sidecar: reusing persisted filter (round %d)", stamp)
+        else:
+            if geom is not None:
                 log.warning(
-                    "bloom sidecar geometry %s != configured %s — rebuilding",
-                    geom, (m, k, self.cfg.bloom_buckets),
+                    "bloom sidecar %s at round %s unusable for %s at round %d "
+                    "— rebuilding",
+                    geom, stamp, (m, k, self.cfg.bloom_buckets), self.round,
                 )
-        self._blooms = seen_ops.build_bucket_blooms(
-            seen, self.cfg.bloom_buckets, m, k
-        )
-
-    def _bloom_add_delta(self, seen_delta: DataFrame) -> None:
-        """OR the new urls' bitmaps into the cached Bloom (distributed build
-        on the small delta; no driver-side hashing of raw urls)."""
-        if self._blooms is None:
-            return
-        m, k = self._bloom_mk
-        delta = seen_ops.build_bucket_blooms(
-            seen_delta, self.cfg.bloom_buckets, m, k
-        )
-        import numpy as np
-
-        for bucket, bits in delta.items():
-            if bucket in self._blooms:
-                merged = np.frombuffer(self._blooms[bucket], dtype=np.uint8) | \
-                    np.frombuffer(bits, dtype=np.uint8)
-                self._blooms[bucket] = merged.tobytes()
-            else:
-                self._blooms[bucket] = bits
+            seen_ops.build_bloom_sidecar(
+                self._seen_full_view(), path, self.cfg.bloom_buckets, m, k,
+                round_=self.round,
+            )
+        self._bloom_mk = (m, k)
 
     _OUTCOME_KEYS = ("n", "ok", "denied", "err404", "retries", "retry_back")
 
@@ -1024,17 +999,12 @@ class CrawlEngine:
             from mr_crawly_spark.operators.traps import strip_candidate_traps
 
             candidates = strip_candidate_traps(candidates, self._trap_stats)
-        self._maybe_build_blooms(self._seen_full_view())
-        if self._bloom_sidecar_mode:
+        self._ensure_bloom_sidecar()
+        if self._bloom_mk is not None:
             m, k = self._bloom_mk
             fresh = seen_ops.filter_unseen(
                 candidates, seen, n_buckets=self.cfg.bloom_buckets,
                 m_bits=m, k=k, sidecar_path=self._bloom_sidecar_path(),
-            )
-        elif self._blooms is not None:
-            m, k = self._bloom_mk
-            fresh = seen_ops.filter_unseen(
-                candidates, seen, self._blooms, self.cfg.bloom_buckets, m, k
             )
         else:
             fresh = seen_ops.filter_unseen(candidates, seen)
@@ -1118,9 +1088,6 @@ class CrawlEngine:
             .withColumn("first_seen_round", F.lit(r))
             .withColumn("run_id", rc["run_id_plain"])
         )
-        if self.cfg.use_bloom and n_new:
-            self._bloom_add_delta(seen_delta_ck)
-
         # pure-python assignment block: the py4j calls above can be
         # interrupted (streaming wrapper stop()); these assignments cannot,
         # so the engine is always either fully at round r-1 or fully at
@@ -1188,7 +1155,7 @@ class CrawlEngine:
         (written last — the atomic resume point). Persisted round frames are
         released only after every write succeeded."""
         r = self.round
-        if getattr(self, "_flushed_round", None) == r:
+        if self._flushed_round == r:
             return
         # same small-round AQE gate as run_round: the flush writes are
         # bounded by the touched-row counter (links fans out ~4x), except
@@ -1209,7 +1176,7 @@ class CrawlEngine:
     def _flush_impl(self, r: int) -> None:
         # captured before the frontier branch may zero it at compaction
         touched = self._updates_count
-        # the sidecar-mode Bloom folds the round deltas in DISTRIBUTED at
+        # the Bloom sidecar folds the round deltas in DISTRIBUTED at
         # flush cadence (between flushes the drift anti-join covers them);
         # capture the union before _commit_table clears the delta lists —
         # and hold it ON THE ENGINE until the merge below has succeeded: a
@@ -1220,22 +1187,22 @@ class CrawlEngine:
         # released only after the whole flush succeeds, so a held reference
         # stays computable across retries).
         if (
-            self._bloom_sidecar_mode
-            and getattr(self, "_pending_sidecar_seen", None) is None
+            self._bloom_mk is not None
+            and self._pending_sidecar_seen is None
             and self._deltas["seen"]
         ):
             u = self._deltas["seen"][0]
             for d in self._deltas["seen"][1:]:
                 u = u.unionByName(d)
             self._pending_sidecar_seen = u
-        seen_delta_union = getattr(self, "_pending_sidecar_seen", None)
+        seen_delta_union = self._pending_sidecar_seen
         # NOTE: _flushed_round is only set at the END — an interrupted flush
         # (e.g. a streaming wrapper's stop() landing mid-write) must be
         # retryable; each table clears its pending state right after its own
         # commit, so a retry re-commits only what is missing
         if (
             self._frontier_updates is not None
-            and getattr(self, "_frontier_committed_round", None) != r
+            and self._frontier_committed_round != r
         ):
             if self._flushes_since_compact + 1 >= self.cfg.compact_every:
                 merged = self._frontier_view()
@@ -1288,25 +1255,18 @@ class CrawlEngine:
         else:
             for t in pending_tables:
                 _commit_table(t)
-        if self.cfg.use_bloom and self._blooms is not None:
-            # persist the Bloom next to the seen snapshot (resume/scale path)
-            seen_ops.write_bloom_sidecar(
-                self.spark, self._blooms, self._bloom_sidecar_path(),
-                m_bits=self._bloom_mk[0], k=self._bloom_mk[1],
-                n_buckets=self.cfg.bloom_buckets,
-            )
-        # sidecar residency mode: fold the flushed seen delta into the
-        # persisted filter fully distributed (no table bytes touch the
-        # driver). Runs AFTER the table commits and BEFORE the round
-        # manifest, like the dict-mode writes: a crash after the merge but
-        # before the manifest rolls the tables back, leaving the sidecar a
-        # SUPERSET of the seen base — extra keys are false positives (cost
-        # work), never false negatives.
-        if self._bloom_sidecar_mode and seen_delta_union is not None:
+        # fold the flushed seen delta into the Bloom sidecar fully
+        # distributed (no table bytes touch the driver) and stamp it with
+        # this round. Runs AFTER the table commits and BEFORE the round
+        # manifest: a crash after the merge but before the manifest rolls
+        # the tables back, leaving the sidecar a SUPERSET of the seen base
+        # with a newer stamp — extra keys are false positives (cost work),
+        # never false negatives.
+        if self._bloom_mk is not None and seen_delta_union is not None:
             m, k = self._bloom_mk
             seen_ops.merge_bloom_sidecar(
                 self.spark, seen_delta_union, self._bloom_sidecar_path(),
-                self.cfg.bloom_buckets, m, k,
+                self.cfg.bloom_buckets, m, k, round_=r,
             )
         # the sidecar merge succeeded — release the held delta
         self._pending_sidecar_seen = None

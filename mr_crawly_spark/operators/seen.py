@@ -14,11 +14,12 @@ plus Redis SADD sets (cache.py:165-175). Distributed equivalent:
   candidates it flags still anti-join exactly, so false positives only cost
   work, never correctness.
 
-Scale path: at 10^10 seen URLs a 10-bits/key Bloom is ~12 GB — too big for
-one broadcast. The sidecar layout (one row per bucket, written next to the
-snapshot by ``write_bloom_sidecar``) shards it so a bucket-partitioned probe
-loads only the ranges it needs; in-sandbox we broadcast the dict (the corpus
-fits), and the bucket math is identical either way.
+The filter lives in ONE place at every size: a sidecar parquet dir (one row
+per bucket) next to the snapshot. ``build_bloom_sidecar`` writes it,
+``merge_bloom_sidecar`` folds seen deltas in, and
+``bloom_prefilter_sidecar`` probes it bucket-partitioned, each task loading
+only the buckets it needs. At 10^10 seen URLs a 10-bits/key Bloom is
+~12 GB, so no filter bytes ever go through the driver or a broadcast.
 """
 
 from __future__ import annotations
@@ -49,11 +50,6 @@ def _probe_positions(hashes_u64: np.ndarray, m: int, k: int) -> Iterator[np.ndar
         yield (h1 + np.uint64(i) * h2) % np.uint64(m)
 
 
-# refuse driver-side collects of Bloom bitmaps beyond this (the 10^10-key
-# target is ~12 GB of Bloom — it must stay distributed; round-1 verdict #4)
-MAX_DRIVER_BLOOM_BYTES = 256 * 1024 * 1024
-
-
 def _bloom_df(seen: DataFrame, n_buckets: int, m_bits: int, k: int) -> DataFrame:
     """(bucket, bits) rows built DISTRIBUTED via applyInPandas — the full
     Bloom never exists in one place; each task builds its bucket's bitmap."""
@@ -76,37 +72,25 @@ def _bloom_df(seen: DataFrame, n_buckets: int, m_bits: int, k: int) -> DataFrame
     )
 
 
-def build_bucket_blooms(
-    seen: DataFrame, n_buckets: int, m_bits: int, k: int
-) -> dict[int, bytes]:
-    """Driver-resident {bucket: packed bytes} for the broadcast probe path.
-    Size-gated: beyond MAX_DRIVER_BLOOM_BYTES use the sidecar path
-    (build_bloom_sidecar + bloom_prefilter_sidecar) — never collect."""
-    total = n_buckets * (m_bits // 8)
-    if total > MAX_DRIVER_BLOOM_BYTES:
-        raise ValueError(
-            f"bloom of {total} bytes exceeds the driver gate "
-            f"({MAX_DRIVER_BLOOM_BYTES}); use build_bloom_sidecar + "
-            "bloom_prefilter_sidecar (bucket-partitioned, no driver collect)"
-        )
-    rows = _bloom_df(seen, n_buckets, m_bits, k).collect()
-    return {r["bucket"]: bytes(r["bits"]) for r in rows}
-
-
 def _geometry_path(path: str) -> str:
     import os
 
     return os.path.join(path, "_bloom_geometry.json")
 
 
-def _write_geometry(path: str, m_bits: int, k: int, n_buckets: int) -> None:
+def _write_geometry(
+    path: str, m_bits: int, k: int, n_buckets: int, round_: int
+) -> None:
     import json
     import os
 
     os.makedirs(path, exist_ok=True)
     tmp = _geometry_path(path) + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"m_bits": m_bits, "k": k, "n_buckets": n_buckets}, f)
+        json.dump(
+            {"m_bits": m_bits, "k": k, "n_buckets": n_buckets, "round": round_},
+            f,
+        )
     os.replace(tmp, _geometry_path(path))
 
 
@@ -118,10 +102,7 @@ def _remove_geometry(path: str) -> None:
         os.remove(_geometry_path(path))
 
 
-def read_bloom_geometry(path: str) -> tuple[int, int, int] | None:
-    """(m_bits, k, n_buckets) persisted with the sidecar, or None. Loaders
-    MUST validate this against their config before probing: reloaded bitmaps
-    probed with a different geometry give silent false negatives."""
+def _read_geometry_json(path: str) -> dict | None:
     import json
     import os
 
@@ -129,15 +110,33 @@ def read_bloom_geometry(path: str) -> tuple[int, int, int] | None:
     if not os.path.exists(p):
         return None
     with open(p) as f:
-        g = json.load(f)
-    return (g["m_bits"], g["k"], g["n_buckets"])
+        return json.load(f)
+
+
+def read_bloom_geometry(path: str) -> tuple[int, int, int] | None:
+    """(m_bits, k, n_buckets) persisted with the sidecar, or None. Loaders
+    MUST validate this against their config before probing: reloaded bitmaps
+    probed with a different geometry give silent false negatives."""
+    g = _read_geometry_json(path)
+    return None if g is None else (g["m_bits"], g["k"], g["n_buckets"])
+
+
+def read_bloom_round(path: str) -> int | None:
+    """The last crawl round whose seen rows the sidecar holds, or None.
+    A sidecar stamped before the resume round is stale (flushes since then
+    ran without merging into it) and must be rebuilt; a newer stamp is a
+    superset of the seen table, which only costs false positives."""
+    g = _read_geometry_json(path)
+    return None if g is None else g.get("round")
 
 
 def build_bloom_sidecar(
-    seen: DataFrame, path: str, n_buckets: int, m_bits: int, k: int
+    seen: DataFrame, path: str, n_buckets: int, m_bits: int, k: int,
+    *, round_: int,
 ) -> None:
-    """Scale path: build the bucketed Bloom distributed and write it straight
-    to the sidecar parquet — no driver collect at any size.
+    """Build the bucketed Bloom distributed and write it straight to the
+    sidecar parquet — no driver collect at any size. ``round_`` is the last
+    crawl round ``seen`` covers; it is stamped next to the geometry.
 
     Crash-safe ordering: the geometry file is removed FIRST and rewritten
     LAST, so any partial state in between has no geometry and loaders
@@ -146,11 +145,11 @@ def build_bloom_sidecar(
     false negatives across the whole seen set)."""
     _remove_geometry(path)
     _bloom_df(seen, n_buckets, m_bits, k).write.mode("overwrite").parquet(path)
-    _write_geometry(path, m_bits, k, n_buckets)
+    _write_geometry(path, m_bits, k, n_buckets, round_)
 
 
 def _swap_sidecar_parquet(
-    path: str, tmp_dir: str, m_bits: int, k: int, n_buckets: int
+    path: str, tmp_dir: str, m_bits: int, k: int, n_buckets: int, round_: int
 ) -> None:
     """Replace ``path``'s parquet files with a freshly-written tmp dir's,
     geometry-last: the geometry is removed before the first destructive
@@ -169,7 +168,7 @@ def _swap_sidecar_parquet(
     for i, fn in enumerate(parts):
         os.replace(fn, os.path.join(path, f"part-{i:05d}.parquet"))
     shutil.rmtree(tmp_dir, ignore_errors=True)
-    _write_geometry(path, m_bits, k, n_buckets)  # valid again
+    _write_geometry(path, m_bits, k, n_buckets, round_)  # valid again
 
 
 def merge_bloom_sidecar(
@@ -179,14 +178,16 @@ def merge_bloom_sidecar(
     n_buckets: int,
     m_bits: int,
     k: int,
+    *,
+    round_: int,
 ) -> None:
-    """Fold a seen DELTA into the sidecar Bloom fully distributed — the
-    sidecar-mode twin of engine._bloom_add_delta: executors build the
-    delta's per-bucket bitmaps, union them with the existing sidecar rows,
-    and OR-merge per bucket (one applyInPandas task per touched bucket).
-    No bitmap ever reaches the driver; per-flush cost is one scan of the
-    (filter-sized, n_buckets-row) sidecar plus the delta — independent of
-    the seen table's size."""
+    """Fold a seen DELTA into the sidecar Bloom fully distributed: executors
+    build the delta's per-bucket bitmaps, union them with the existing
+    sidecar rows, and OR-merge per bucket (one applyInPandas task per
+    touched bucket). No bitmap ever reaches the driver; per-flush cost is
+    one scan of the (filter-sized, n_buckets-row) sidecar plus the delta —
+    independent of the seen table's size. ``round_`` is the crawl round the
+    merged sidecar covers (the flushed round)."""
     geom = read_bloom_geometry(path)
     if geom is not None and geom != (m_bits, k, n_buckets):
         raise ValueError(f"sidecar geometry {geom} != {(m_bits, k, n_buckets)}")
@@ -211,110 +212,7 @@ def merge_bloom_sidecar(
     )
     tmp = path.rstrip("/") + "._merge_tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    _swap_sidecar_parquet(path, tmp, m_bits, k, n_buckets)
-
-
-def write_bloom_sidecar(
-    spark: SparkSession,
-    blooms: dict[int, bytes],
-    path: str,
-    m_bits: int | None = None,
-    k: int | None = None,
-    n_buckets: int | None = None,
-) -> None:
-    """Persist a driver-resident bucketed Bloom next to the seen snapshot,
-    including its geometry (resume validates it before probing). The dict
-    already lives on the driver (size-gated), so the parquet is written
-    pyarrow-direct — a createDataFrame + write job cost ~0.5 s of pure
-    scheduling on every flush. Spark reads it back like any parquet dir.
-
-    Crash-safe ordering (ADVICE r4): geometry removed FIRST, parquet
-    written to a temp name and os.replace()d, geometry written LAST — a
-    crash at any point leaves either the old complete sidecar or a
-    geometry-less dir that loaders treat as absent and rebuild. The old
-    remove-then-write order could leave a valid geometry over zero
-    parquet files, which probes as all-unseen (silent false negatives)."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    _os.makedirs(path, exist_ok=True)
-    _remove_geometry(path)
-    target = _os.path.join(path, "part-00000.parquet")
-    for old in _glob.glob(_os.path.join(path, "*.parquet")):
-        if old != target:
-            _os.remove(old)  # stale parts from a previous distributed write
-    pq.write_table(
-        pa.table(
-            {
-                "bucket": pa.array(list(blooms.keys()), pa.int32()),
-                "bits": pa.array(list(blooms.values()), pa.binary()),
-            }
-        ),
-        target + ".tmp",
-    )
-    _os.replace(target + ".tmp", target)
-    if m_bits is not None and k is not None and n_buckets is not None:
-        _write_geometry(path, m_bits, k, n_buckets)
-
-
-def read_bloom_sidecar(spark: SparkSession, path: str) -> dict[int, bytes]:
-    return {
-        r["bucket"]: bytes(r["bits"])
-        for r in spark.read.parquet(path).collect()
-    }
-
-
-def bloom_prefilter(
-    candidates: DataFrame,
-    blooms: dict[int, bytes],
-    n_buckets: int,
-    m_bits: int,
-    k: int,
-) -> DataFrame:
-    """Append ``maybe_seen`` via an Arrow-batched membership probe.
-
-    Candidates must carry ``url_hash``. Buckets missing from the dict are
-    empty -> definitely unseen.
-    """
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(blooms)
-    # fresh StructType — StructType.add would mutate the df's cached schema
-    schema = StructType(
-        list(candidates.schema.fields) + [StructField("maybe_seen", BooleanType())]
-    )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bl = bc.value
-        unpacked: dict[int, np.ndarray] = {}
-        for pdf in batches:
-            signed = pdf["url_hash"].to_numpy(dtype=np.int64)
-            h = signed.view(np.uint64)
-            bkt = signed % n_buckets  # numpy % positive -> non-negative == pmod
-            out = np.zeros(len(pdf), dtype=bool)
-            for b in np.unique(bkt):
-                bits_bytes = bl.get(int(b))
-                if bits_bytes is None:
-                    continue
-                if int(b) not in unpacked:
-                    unpacked[int(b)] = np.unpackbits(
-                        np.frombuffer(bits_bytes, dtype=np.uint8)
-                    ).astype(bool)
-                bits = unpacked[int(b)]
-                mask = bkt == b
-                ok = np.ones(int(mask.sum()), dtype=bool)
-                for pos in _probe_positions(h[mask], m_bits, k):
-                    ok &= bits[pos]
-                out[mask] = ok
-            pdf = pdf.copy()
-            pdf["maybe_seen"] = out
-            yield pdf
-
-    return candidates.mapInPandas(probe, schema)
+    _swap_sidecar_parquet(path, tmp, m_bits, k, n_buckets, round_)
 
 
 def bloom_prefilter_sidecar(
@@ -329,8 +227,7 @@ def bloom_prefilter_sidecar(
     range-partitioned by ``pmod(url_hash, n_buckets)`` and each task loads
     ONLY the bucket bitmaps present in its partition, straight from the
     sidecar parquet with a pyarrow bucket-predicate read — the full Bloom is
-    never broadcast or driver-resident (the 10^10-key / ~12 GB case that
-    kills the dict path, round-1 verdict #4).
+    never broadcast or driver-resident (at 10^10 keys it is ~12 GB).
 
     ``debug_loaded_col`` adds ``_buckets_loaded`` = how many distinct bucket
     bitmaps this task has read so far (tests assert locality with it).
@@ -408,7 +305,6 @@ def bloom_prefilter_sidecar(
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame,
-    blooms: dict[int, bytes] | None = None,
     n_buckets: int = 0,
     m_bits: int = 0,
     k: int = 0,
@@ -416,20 +312,14 @@ def filter_unseen(
 ) -> DataFrame:
     """Rows of ``candidates`` (url, url_hash, ...) not present in ``seen``.
 
-    Exact semantics always; the Bloom path only short-circuits the shuffle
-    for definitely-new rows. Pass ``blooms`` (small, broadcast dict) OR
-    ``sidecar_path`` (bucket-partitioned executor-side loads — the scale
-    path; the full Bloom never leaves the cluster).
+    Exact semantics always. With ``sidecar_path`` the Bloom sidecar probe
+    short-circuits the shuffle for definitely-new rows (bucket-partitioned
+    executor-side loads; the full Bloom never leaves the cluster).
     """
     seen_keys = seen.select("url_hash", "url")
-    if blooms is None and sidecar_path is None:
+    if sidecar_path is None:
         return candidates.join(seen_keys, ["url_hash", "url"], "left_anti")
-    if sidecar_path is not None:
-        probed = bloom_prefilter_sidecar(
-            candidates, sidecar_path, n_buckets, m_bits, k
-        )
-    else:
-        probed = bloom_prefilter(candidates, blooms, n_buckets, m_bits, k)
+    probed = bloom_prefilter_sidecar(candidates, sidecar_path, n_buckets, m_bits, k)
     fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = (
         probed.filter(F.col("maybe_seen"))

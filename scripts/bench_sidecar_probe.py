@@ -1,16 +1,18 @@
-"""Seen-prefilter route benchmark: exact anti-join vs driver-dict prefilter
-vs bucket-partitioned SIDECAR probe (the past-the-driver-gate scale path the
-engine auto-falls-back to, r4 verdict #1/#2).
+"""Seen-prefilter route benchmark: exact anti-join vs the bucket-partitioned
+Bloom SIDECAR probe, each over two seen-base layouts:
 
-All three routes must return the IDENTICAL fresh-set count (the prefilter
-no-false-negative contract measured at bench scale, not just in unit
-tests); the JSON records per-route wall time so the sidecar path's cost
-relative to the broadcast dict — its extra repartitionByRange plus
-executor-side pyarrow bucket reads — is a measured number, not an
-assertion. Build costs are reported separately from probe costs: builds
-happen once per flush cadence, probes every round.
+- ``checkpointed``: partitioned+sorted on the join keys and localCheckpoint'ed,
+  as the engine holds its flush base;
+- ``parquet``: the same rows read back from a parquet dir, with no layout.
 
-Writes BENCH/sidecar_probe.json. Usage:
+Both routes must return the IDENTICAL fresh-set count (the prefilter
+no-false-negative contract at bench scale). Build costs are reported
+separately from probe costs: builds happen once per crawl, probes every
+round. BENCH/sidecar_probe_4cpu.json also holds the deleted driver-dict
+route's timings.
+
+Writes BENCH/<out_name> (default sidecar_probe_run.json, so the recorded
+sidecar_probe.json and sidecar_probe_4cpu.json stay as history). Usage:
     python scripts/bench_sidecar_probe.py [n_candidates] [out_name]
 """
 
@@ -38,9 +40,9 @@ M_BITS = 1 << 21  # 256 KiB/bucket; ~17 bits/key at 4M keys over 32 buckets
 K = 5
 
 
-def build_inputs(spark, n_candidates: int):
-    """Frontier-shaped workload: candidates half-seen, JVM-generated, the
-    seen side served as the engine's partitioned+sorted flush base."""
+def build_inputs(spark, n_candidates: int, seen_dir: str):
+    """Frontier-shaped workload: candidates half-seen, JVM-generated; the
+    seen rows are written to ``seen_dir`` and served in both layouts."""
     n_hosts = 10_000
     host = bench_jobs._host_col(F.col("id"), n_hosts)
     url = F.concat(
@@ -53,20 +55,24 @@ def build_inputs(spark, n_candidates: int):
         .localCheckpoint()
     )
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    seen_plan = (
+    rows = (
         spark.range(n_candidates // 2)
         .select(url.alias("url"))
         .withColumn("url_hash", url_hash_col(F.col("url")))
+    )
+    rows.write.mode("overwrite").parquet(seen_dir)
+    seen_plan = (
+        spark.read.parquet(seen_dir)
         .repartition(n_parts, F.col("url_hash"), F.col("url"))
         .sortWithinPartitions("url_hash", "url")
     )
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        seen = seen_plan.localCheckpoint()
+        seen_ck = seen_plan.localCheckpoint()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    return cand, seen
+    return cand, {"checkpointed": seen_ck, "parquet": spark.read.parquet(seen_dir)}
 
 
 def timed(fn):
@@ -77,65 +83,63 @@ def timed(fn):
 
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
-    out_name = sys.argv[2] if len(sys.argv) > 2 else "sidecar_probe.json"
+    out_name = sys.argv[2] if len(sys.argv) > 2 else "sidecar_probe_run.json"
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(
         app_name="sidecar-probe-bench", master=f"local[{cpus}]",
         shuffle_partitions=32,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    cand, seen = build_inputs(spark, n)
     tmp = tempfile.mkdtemp(prefix="sidecar_bench_")
-    bloom_dir = os.path.join(tmp, "bloom")
+    cand, layouts = build_inputs(spark, n, os.path.join(tmp, "seen"))
 
-    # untimed warmup of every stage shape (JIT, Arrow pools, shuffle dirs)
     warm_c = cand.limit(200_000).localCheckpoint()
-    seen_ops.filter_unseen(warm_c, seen).count()
-    wb = seen_ops.build_bucket_blooms(warm_c, N_BUCKETS, M_BITS, K)
-    seen_ops.filter_unseen(warm_c, seen, wb, N_BUCKETS, M_BITS, K).count()
+    for seen in layouts.values():
+        seen_ops.filter_unseen(warm_c, seen).count()
+    warm_dir = os.path.join(tmp, "bloom_warm")
+    seen_ops.build_bloom_sidecar(warm_c, warm_dir, N_BUCKETS, M_BITS, K, round_=0)
+    seen_ops.filter_unseen(
+        warm_c, layouts["checkpointed"], n_buckets=N_BUCKETS, m_bits=M_BITS,
+        k=K, sidecar_path=warm_dir,
+    ).count()
 
-    builds = {}
-    blooms, builds["bloom_dict_build_sec"] = timed(
-        lambda: seen_ops.build_bucket_blooms(seen, N_BUCKETS, M_BITS, K)
-    )
-    _, builds["bloom_sidecar_build_sec"] = timed(
-        lambda: seen_ops.build_bloom_sidecar(seen, bloom_dir, N_BUCKETS, M_BITS, K)
-    )
+    out_layouts = {}
+    counts = []
+    for lname, seen in layouts.items():
+        bloom_dir = os.path.join(tmp, f"bloom_{lname}")
+        builds = {}
+        _, builds["bloom_sidecar_build_sec"] = timed(
+            lambda s=seen, d=bloom_dir: seen_ops.build_bloom_sidecar(
+                s, d, N_BUCKETS, M_BITS, K, round_=0
+            )
+        )
+        routes = {
+            "exact_antijoin": lambda s=seen: seen_ops.filter_unseen(cand, s),
+            "bloom_sidecar": lambda s=seen, d=bloom_dir: seen_ops.filter_unseen(
+                cand, s, n_buckets=N_BUCKETS, m_bits=M_BITS, k=K,
+                sidecar_path=d,
+            ),
+        }
+        results = {}
+        for name, route in routes.items():
+            runs = []
+            for _ in range(2):
+                cnt, secs = timed(lambda r=route: r().count())
+                counts.append(cnt)
+                runs.append(secs)
+            results[name] = {
+                "fresh_count": cnt, "probe_sec": runs, "best_probe_sec": min(runs)
+            }
+        out_layouts[lname] = {"builds": builds, "routes": results}
 
-    routes = {
-        "exact_antijoin": lambda: seen_ops.filter_unseen(cand, seen),
-        "bloom_dict": lambda: seen_ops.filter_unseen(
-            cand, seen, blooms, N_BUCKETS, M_BITS, K
-        ),
-        "bloom_sidecar": lambda: seen_ops.filter_unseen(
-            cand, seen, n_buckets=N_BUCKETS, m_bits=M_BITS, k=K,
-            sidecar_path=bloom_dir,
-        ),
-    }
-    results = {}
-    counts = {}
-    for name, route in routes.items():
-        best = None
-        for _ in range(2):
-            cnt, secs = timed(lambda r=route: r().count())
-            counts[name] = cnt
-            best = secs if best is None else min(best, secs)
-        results[name] = {"fresh_count": counts[name], "best_probe_sec": best}
-
-    identical = len(set(counts.values())) == 1
+    identical = len(set(counts)) == 1
     out = {
         "n_candidates": n,
         "n_seen": n // 2,
+        "master": f"local[{cpus}]",
         "geometry": {"n_buckets": N_BUCKETS, "m_bits": M_BITS, "k": K},
-        "builds": builds,
-        "routes": results,
+        "layouts": out_layouts,
         "all_routes_identical_count": identical,
-        "note": (
-            "probe = full fresh-set materialization (prefilter + exact "
-            "anti-join on maybe-seen rows), best of 2 after warmup; builds "
-            "amortize over a flush cadence. The sidecar routes never hold "
-            "filter bytes on the driver."
-        ),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     with open(os.path.join(REPO, "BENCH", out_name), "w") as f:

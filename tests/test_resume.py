@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from mr_crawly_spark.datagen import corpus_to_spark
 from mr_crawly_spark.engine import CrawlConfig, CrawlEngine
+from mr_crawly_spark.operators import seen as seen_ops
 from mr_crawly_spark.sources.corpus import CorpusFetcher
+
+BLOOM = dict(use_bloom=True, bloom_buckets=4, bloom_expected_n=4096)
 
 
 def _engine(spark, corpus, wh, **kw):
@@ -27,6 +32,34 @@ def _final_state(engine):
         for r in engine.table("links").collect()
     }
     return order, seen, links
+
+
+def _sidecar_bits(spark, path):
+    return {r["bucket"]: bytes(r["bits"]) for r in spark.read.parquet(path).collect()}
+
+
+def _count_builds(monkeypatch):
+    builds = {"n": 0}
+    real_build = seen_ops.build_bloom_sidecar
+
+    def counting_build(*a, **kw):
+        builds["n"] += 1
+        return real_build(*a, **kw)
+
+    monkeypatch.setattr(seen_ops, "build_bloom_sidecar", counting_build)
+    return builds
+
+
+def _unseen_probes(eng):
+    """How many committed seen keys the engine's Bloom sidecar probes
+    definitely-unseen (prefilter false negatives; must be 0)."""
+    seen = eng.table("seen").select("url", "url_hash")
+    m, k = eng._bloom_mk
+    probed = seen_ops.bloom_prefilter_sidecar(
+        seen, eng._bloom_sidecar_path(), eng.cfg.bloom_buckets, m, k
+    )
+    assert seen.count() > 0
+    return probed.filter(~F.col("maybe_seen")).count()
 
 
 @pytest.fixture(scope="module")
@@ -91,8 +124,11 @@ def test_bloom_engine_equals_exact_engine(spark, tiny_corpus, exact_state):
         use_bloom=True, bloom_buckets=4,
     )
     bloomed.run()
-    assert bloomed._blooms is not None  # built and maintained
-    assert any(any(v) for v in bloomed._blooms.values())
+    # built, merged at every flush, stamped with the last flushed round
+    path = bloomed._bloom_sidecar_path()
+    assert bloomed._bloom_mk is not None
+    assert any(any(v) for v in _sidecar_bits(spark, path).values())
+    assert seen_ops.read_bloom_round(path) == bloomed.round
     assert _final_state(bloomed) == exact_state
 
 
@@ -137,94 +173,92 @@ def test_resume_discards_orphaned_table_commits(spark, tiny_corpus, ci1_run):
 
 
 def test_bloom_sidecar_resume(spark, tiny_corpus, monkeypatch):
-    """The Bloom prefilter persists to a sidecar at flush and resume
-    reloads it byte-identical instead of rebuilding — but ONLY when the
-    persisted geometry matches; a mismatched config rebuilds from the seen
-    table (mismatched m_bits would probe false negatives)."""
-    import os
-
-    from mr_crawly_spark.operators import seen as seen_ops
-
+    """Resume reuses the persisted Bloom sidecar untouched instead of
+    rebuilding — but ONLY when the persisted geometry matches; a mismatched
+    config rebuilds from the seen table (mismatched m_bits would probe
+    false negatives)."""
     wh = tempfile.mkdtemp(prefix="crawl_blsc_")
-    cfg = dict(use_bloom=True, bloom_buckets=4, bloom_expected_n=4096)
-    eng = _engine(spark, tiny_corpus, wh, **cfg)
+    eng = _engine(spark, tiny_corpus, wh, **BLOOM)
     eng.run()
-    assert os.path.isdir(os.path.join(wh, "seen_bloom"))
-    saved = dict(eng._blooms)
+    path = os.path.join(wh, "seen_bloom")
+    saved = _sidecar_bits(spark, path)
 
-    builds = {"n": 0}
-    real_build = seen_ops.build_bucket_blooms
-
-    def counting_build(*a, **kw):
-        builds["n"] += 1
-        return real_build(*a, **kw)
-
-    monkeypatch.setattr(seen_ops, "build_bucket_blooms", counting_build)
-    resumed = _engine(spark, tiny_corpus, wh, **cfg)
+    builds = _count_builds(monkeypatch)
+    resumed = _engine(spark, tiny_corpus, wh, **BLOOM)
     assert resumed.resume()
-    resumed._maybe_build_blooms(resumed._seen_full_view())
-    assert resumed._blooms == saved  # reloaded byte-identical...
-    assert builds["n"] == 0  # ...not rebuilt
+    resumed._ensure_bloom_sidecar()
+    assert builds["n"] == 0  # not rebuilt...
+    assert resumed._bloom_mk == eng._bloom_mk
+    assert _sidecar_bits(spark, path) == saved  # ...and left byte-identical
 
     # different expected_n -> different m_bits -> geometry mismatch:
-    # must NOT load the stale sidecar (silent false negatives); rebuilds
-    other = _engine(
-        spark, tiny_corpus, wh,
-        use_bloom=True, bloom_buckets=4, bloom_expected_n=65536,
-    )
+    # must NOT reuse the stale sidecar (silent false negatives); rebuilds
+    other = _engine(spark, tiny_corpus, wh, **{**BLOOM, "bloom_expected_n": 65536})
     assert other.resume()
-    other._maybe_build_blooms(other._seen_full_view())
+    other._ensure_bloom_sidecar()
     assert builds["n"] == 1
-    assert other._blooms is not None
     assert other._bloom_mk != eng._bloom_mk
-    m_bits = other._bloom_mk[0]
-    assert all(len(v) == m_bits // 8 for v in other._blooms.values())
+    m_bits, k = other._bloom_mk
+    assert seen_ops.read_bloom_geometry(path) == (m_bits, k, 4)
+    assert all(len(v) == m_bits // 8 for v in _sidecar_bits(spark, path).values())
 
 
-def test_bloom_gate_degrades_to_sidecar_mode(spark, tiny_corpus, monkeypatch,
-                                             exact_state):
-    """r4 verdict #1: past MAX_DRIVER_BLOOM_BYTES the engine must NOT raise
-    at the collect gate — it keeps the filter in the sidecar parquet and
-    routes rounds through the bucket-partitioned probe, with identical
-    outputs to the exact engine."""
-    from mr_crawly_spark.operators import seen as seen_ops
+def test_stale_bloom_sidecar_rebuilt_after_bloom_off_rounds(
+    spark, tiny_corpus, exact_state
+):
+    """Round 1 with use_bloom on, rounds 2-3 resumed with it off (their
+    flushes never merge into the sidecar), then resumed with it on again:
+    the sidecar is stamped round 1 < 3, so it must be rebuilt. Reusing it
+    would probe the round 2-3 urls definitely-unseen and crawl them again."""
+    wh = tempfile.mkdtemp(prefix="crawl_onoff_")
+    _engine(spark, tiny_corpus, wh, max_rounds=1, checkpoint_interval=1,
+            **BLOOM).run()
+    off = _engine(spark, tiny_corpus, wh, max_rounds=3, checkpoint_interval=1)
+    off.run(fresh=False)
+    assert off.round == 3
 
-    monkeypatch.setattr(seen_ops, "MAX_DRIVER_BLOOM_BYTES", 1024)
-    gated = _engine(
-        spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_blg_"),
-        use_bloom=True, bloom_buckets=4, bloom_expected_n=4096,
+    again = _engine(spark, tiny_corpus, wh, max_rounds=100, **BLOOM)
+    again.run(fresh=False)
+    assert _unseen_probes(again) == 0
+    assert _final_state(again) == exact_state
+
+
+def test_second_run_on_same_engine_flushes(spark, tiny_corpus):
+    """A second run() on the same engine re-bootstraps (force_reset) and
+    must flush its own rounds: flush progress left from the first run made
+    flush() return early, so the round manifest stayed at 0 and the seen
+    table lost every round's delta."""
+    eng = _engine(
+        spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_rerun_"),
+        max_rounds=2, checkpoint_interval=2, force_reset=True,
     )
-    gated.run()
-    assert gated._bloom_sidecar_mode      # degraded to the sidecar probe...
-    assert gated._blooms is None          # ...nothing driver-resident
-    assert _final_state(gated) == exact_state
+    eng.run()
+    first = (eng.catalog.last_round()["round"], eng.table("seen").count())
+    assert first[0] == 2
+    eng.run()
+    assert (eng.catalog.last_round()["round"], eng.table("seen").count()) == first
 
 
 def test_sidecar_mode_resume_mid_crawl(spark, tiny_corpus, monkeypatch,
                                        exact_state):
-    """Kill a sidecar-mode Bloom crawl after round 2, resume in a NEW
-    engine (same gate): the persisted geometry revalidates, the sidecar
-    keeps being probed/merged, final state identical to uninterrupted.
-    The prefilter-only contract makes the shared exact crawl the baseline
-    (a separate sidecar-mode baseline run would assert the same equality
-    transitively at twice the cost)."""
-    from mr_crawly_spark.operators import seen as seen_ops
-
-    monkeypatch.setattr(seen_ops, "MAX_DRIVER_BLOOM_BYTES", 1024)
-    cfg = dict(
-        use_bloom=True, bloom_buckets=4, bloom_expected_n=4096,
-        checkpoint_interval=1,
-    )
+    """Kill a Bloom crawl after round 2, resume in a NEW engine: the
+    persisted geometry and round stamp revalidate (no rebuild), the
+    sidecar keeps being probed/merged, final state identical to
+    uninterrupted. The prefilter-only contract makes the shared exact
+    crawl the baseline (a separate Bloom baseline run would assert the
+    same equality transitively at twice the cost)."""
+    cfg = dict(BLOOM, checkpoint_interval=1)
     wh = tempfile.mkdtemp(prefix="crawl_scres_")
     first = _engine(spark, tiny_corpus, wh, max_rounds=2, **cfg)
     first.run()
-    assert first._bloom_sidecar_mode
+    assert first._bloom_mk is not None
 
+    builds = _count_builds(monkeypatch)
     resumed = _engine(spark, tiny_corpus, wh, max_rounds=100, **cfg)
     assert resumed.resume()
     resumed.run(fresh=False)
-    assert resumed._bloom_sidecar_mode
-    assert resumed._blooms is None
+    assert resumed._bloom_mk is not None
+    assert builds["n"] == 0
     assert _final_state(resumed) == exact_state
 
 
@@ -236,11 +270,6 @@ def test_sidecar_merge_survives_flush_retry(spark, tiny_corpus, monkeypatch,
     committed-but-unmerged keys probe definitely-unseen forever: prefilter
     false negatives in exactly the retry scenario the flush contract
     promises to survive."""
-    from pyspark.sql import functions as F
-
-    from mr_crawly_spark.operators import seen as seen_ops
-
-    monkeypatch.setattr(seen_ops, "MAX_DRIVER_BLOOM_BYTES", 1024)
     calls = {"n": 0}
     real_merge = seen_ops.merge_bloom_sidecar
 
@@ -253,20 +282,12 @@ def test_sidecar_merge_survives_flush_retry(spark, tiny_corpus, monkeypatch,
     monkeypatch.setattr(seen_ops, "merge_bloom_sidecar", flaky_merge)
     eng = _engine(
         spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_retry_"),
-        use_bloom=True, bloom_buckets=4, bloom_expected_n=4096,
-        checkpoint_interval=1,
+        checkpoint_interval=1, **BLOOM,
     )
     with pytest.raises(RuntimeError, match="injected"):
         eng.run()
-    assert eng._bloom_sidecar_mode
+    assert eng._bloom_mk is not None
     eng.flush()  # the documented retry path — must re-run the merge
     assert calls["n"] >= 2
     # no-false-negative audit: every committed seen key probes maybe_seen
-    seen = eng._seen_full_view().select("url", "url_hash")
-    m, k = eng._bloom_mk
-    probed = seen_ops.bloom_prefilter_sidecar(
-        seen, eng._bloom_sidecar_path(), eng.cfg.bloom_buckets, m, k
-    )
-    n_seen = seen.count()
-    assert n_seen > 0
-    assert probed.filter(F.col("maybe_seen")).count() == n_seen
+    assert _unseen_probes(eng) == 0

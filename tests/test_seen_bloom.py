@@ -13,7 +13,7 @@ def _with_hash(df):
     return df.withColumn("url_hash", url_hash_col(F.col("url")))
 
 
-def test_bloom_path_equals_exact_antijoin(spark):
+def test_bloom_path_equals_exact_antijoin(spark, tmp_path):
     seen = _with_hash(
         spark.createDataFrame(
             [(f"https://h{i % 7}.test/p/{i}",) for i in range(500)], "url string"
@@ -31,18 +31,19 @@ def test_bloom_path_equals_exact_antijoin(spark):
     }
     n_buckets = 8
     m, k = seen_ops.bloom_params(500, fpp=0.05)
-    blooms = seen_ops.build_bucket_blooms(seen, n_buckets, m, k)
+    path = str(tmp_path / "bloom")
+    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k, round_=0)
     got = {
         r["url"]
         for r in seen_ops.filter_unseen(
-            cands, seen, blooms, n_buckets, m, k
+            cands, seen, n_buckets=n_buckets, m_bits=m, k=k, sidecar_path=path
         ).collect()
     }
     assert got == exact
     assert got == {f"https://h{i % 7}.test/p/{i}" for i in range(500, 750)}
 
 
-def test_bloom_no_false_negatives(spark):
+def test_bloom_no_false_negatives(spark, tmp_path):
     """Every seen url must probe positive (the safety property)."""
     seen = _with_hash(
         spark.createDataFrame(
@@ -51,21 +52,31 @@ def test_bloom_no_false_negatives(spark):
     )
     n_buckets = 4
     m, k = seen_ops.bloom_params(1000, fpp=0.01)
-    blooms = seen_ops.build_bucket_blooms(seen, n_buckets, m, k)
-    probed = seen_ops.bloom_prefilter(seen, blooms, n_buckets, m, k)
+    path = str(tmp_path / "bloom")
+    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k, round_=0)
+    probed = seen_ops.bloom_prefilter_sidecar(seen, path, n_buckets, m, k)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_bloom_sidecar_roundtrip(spark, tmp_path):
+    """The sidecar persists one m_bits/8-byte bitmap per bucket plus its
+    geometry and the round it covers; a merge restamps the round."""
     seen = _with_hash(
         spark.createDataFrame([(f"https://x.test/{i}",) for i in range(100)], "url string")
     )
     m, k = seen_ops.bloom_params(100)
-    blooms = seen_ops.build_bucket_blooms(seen, 4, m, k)
     path = str(tmp_path / "bloom")
-    seen_ops.write_bloom_sidecar(spark, blooms, path, m_bits=m, k=k, n_buckets=4)
-    assert seen_ops.read_bloom_sidecar(spark, path) == blooms
+    seen_ops.build_bloom_sidecar(seen, path, 4, m, k, round_=3)
     assert seen_ops.read_bloom_geometry(path) == (m, k, 4)
+    assert seen_ops.read_bloom_round(path) == 3
+    rows = spark.read.parquet(path).collect()
+    assert sorted(r["bucket"] for r in rows) == [0, 1, 2, 3]
+    assert all(len(r["bits"]) == m // 8 for r in rows)
+
+    seen_ops.merge_bloom_sidecar(spark, seen, path, 4, m, k, round_=5)
+    assert seen_ops.read_bloom_geometry(path) == (m, k, 4)
+    assert seen_ops.read_bloom_round(path) == 5
+    assert seen_ops.read_bloom_round(str(tmp_path / "absent")) is None
 
 
 def test_sidecar_probe_equals_exact_and_is_bucket_local(spark, tmp_path):
@@ -86,7 +97,7 @@ def test_sidecar_probe_equals_exact_and_is_bucket_local(spark, tmp_path):
     n_buckets = 8
     m, k = seen_ops.bloom_params(500, fpp=0.05)
     path = str(tmp_path / "bloom_sc")
-    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k)
+    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k, round_=0)
     assert seen_ops.read_bloom_geometry(path) == (m, k, n_buckets)
 
     exact = {r["url"] for r in seen_ops.filter_unseen(cands, seen).collect()}
@@ -115,21 +126,11 @@ def test_sidecar_geometry_mismatch_rejected(spark, tmp_path):
     )
     m, k = seen_ops.bloom_params(50)
     path = str(tmp_path / "bloom_geo")
-    seen_ops.build_bloom_sidecar(seen, path, 4, m, k)
+    seen_ops.build_bloom_sidecar(seen, path, 4, m, k, round_=0)
     import pytest
 
     with pytest.raises(ValueError, match="geometry"):
         seen_ops.bloom_prefilter_sidecar(seen, path, 8, m, k).count()
-
-
-def test_driver_bloom_size_gate():
-    import pytest
-
-    from pyspark.sql import DataFrame  # noqa: F401
-
-    with pytest.raises(ValueError, match="driver gate"):
-        # 10^10-key shape: 4096 buckets x ~12 GB total — must refuse collect
-        seen_ops.build_bucket_blooms(None, 4096, 95_850_584_000 // 4096, 7)
 
 
 def test_merge_bloom_sidecar_distributed(spark, tmp_path):
@@ -144,16 +145,18 @@ def test_merge_bloom_sidecar_distributed(spark, tmp_path):
         )
     )
     path = str(tmp_path / "bloom_merge")
-    seen_ops.build_bloom_sidecar(base, path, n_buckets, m, k)
+    seen_ops.build_bloom_sidecar(base, path, n_buckets, m, k, round_=0)
     full = base
-    for lo, hi in ((600, 900), (900, 1200)):
+    for rnd, (lo, hi) in enumerate(((600, 900), (900, 1200)), start=1):
         delta = _with_hash(
             spark.createDataFrame(
                 [(f"https://h{i % 5}.test/p/{i}",) for i in range(lo, hi)],
                 "url string",
             )
         )
-        seen_ops.merge_bloom_sidecar(spark, delta, path, n_buckets, m, k)
+        seen_ops.merge_bloom_sidecar(
+            spark, delta, path, n_buckets, m, k, round_=rnd
+        )
         full = full.unionByName(delta)
     assert seen_ops.read_bloom_geometry(path) == (m, k, n_buckets)
     # safety: every seen key still probes positive after the merges
@@ -192,7 +195,7 @@ def test_gutted_sidecar_fails_loud_not_false_negative(spark, tmp_path):
     )
     m, k = seen_ops.bloom_params(50)
     bpath = str(tmp_path / "bloom_gut")
-    seen_ops.build_bloom_sidecar(seen, bpath, 4, m, k)
+    seen_ops.build_bloom_sidecar(seen, bpath, 4, m, k, round_=0)
     for fn in glob.glob(os.path.join(bpath, "*.parquet")):
         os.remove(fn)
     assert seen_ops.read_bloom_geometry(bpath) is not None  # looks valid...
@@ -201,18 +204,46 @@ def test_gutted_sidecar_fails_loud_not_false_negative(spark, tmp_path):
 
 
 def test_sidecar_writes_are_geometry_last(spark, tmp_path):
-    """Crash-safety ordering (ADVICE r4): the sidecar writers must stage
-    the parquet via a temp name + os.replace and write the geometry only
-    after the data is in place — verified by interposing on os.replace and
-    asserting the parquet landed before the geometry file."""
+    """Crash-safety ordering (ADVICE r4): both sidecar writers drop the
+    geometry before touching the bitmaps and write it only after the new
+    parquet is in place, so a crash in between leaves a geometry-less dir
+    that loaders rebuild — never a valid geometry over partial bitmaps."""
+    import glob
     import os
+    import unittest.mock as mock
 
     seen = _with_hash(
         spark.createDataFrame(
             [(f"https://x.test/{i}",) for i in range(64)], "url string"
         )
     )
+    m, k = seen_ops.bloom_params(64)
+    bpath = str(tmp_path / "bloom_atomic")
 
+    # the build: geometry removed first, written last over a full dir
+    events: list[tuple[str, int]] = []
+    real_remove = seen_ops._remove_geometry
+    real_write = seen_ops._write_geometry
+
+    def n_parquet() -> int:
+        return len(glob.glob(os.path.join(bpath, "*.parquet")))
+
+    def spy_remove(path):
+        events.append(("remove", n_parquet()))
+        return real_remove(path)
+
+    def spy_write(path, *a):
+        events.append(("write", n_parquet()))
+        return real_write(path, *a)
+
+    with mock.patch.object(seen_ops, "_remove_geometry", spy_remove), \
+            mock.patch.object(seen_ops, "_write_geometry", spy_write):
+        seen_ops.build_bloom_sidecar(seen, bpath, 4, m, k, round_=0)
+    assert [e for e, _ in events] == ["remove", "write"]
+    assert events[-1][1] > 0  # the bitmaps were on disk before the geometry
+    assert seen_ops.read_bloom_geometry(bpath) == (m, k, 4)
+
+    # the distributed merge swaps its parts in with os.replace, geometry last
     real_replace = os.replace
     order: list[str] = []
 
@@ -220,25 +251,8 @@ def test_sidecar_writes_are_geometry_last(spark, tmp_path):
         order.append(os.path.basename(str(dst)))
         return real_replace(src, dst)
 
-    import unittest.mock as mock
-
-    m, k = seen_ops.bloom_params(64)
-    blooms = seen_ops.build_bucket_blooms(seen, 4, m, k)
-    bpath = str(tmp_path / "bloom_atomic")
     with mock.patch("os.replace", side_effect=spy_replace):
-        seen_ops.write_bloom_sidecar(
-            spark, blooms, bpath, m_bits=m, k=k, n_buckets=4
-        )
-    # data file replaced BEFORE the geometry file landed
-    assert order.index("part-00000.parquet") < order.index(
-        "_bloom_geometry.json"
-    )
-    assert seen_ops.read_bloom_sidecar(spark, bpath) == blooms
-
-    # the distributed merge swaps its parts in under the same ordering
-    order.clear()
-    with mock.patch("os.replace", side_effect=spy_replace):
-        seen_ops.merge_bloom_sidecar(spark, seen, bpath, 4, m, k)
+        seen_ops.merge_bloom_sidecar(spark, seen, bpath, 4, m, k, round_=1)
     assert order[-1] == "_bloom_geometry.json"
     assert "part-00000.parquet" in order
     assert seen_ops.read_bloom_geometry(bpath) == (m, k, 4)
