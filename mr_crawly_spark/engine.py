@@ -61,6 +61,14 @@ from mr_crawly_spark.operators.sitemap import bootstrap_frontier_urls, expand_si
 from mr_crawly_spark.plans.catalog import SnapshotCatalog
 from mr_crawly_spark.sources.corpus import CorpusFetcher
 
+# Pages per task of the canonicalizer's Python stage (see _python_width),
+# from two costs measured on a 4-CPU host: each Arrow-UDF task pays a fixed
+# ~0.2 worker CPU-s whatever its row count, and each href costs ~7.6 us.
+# The fixed cost equals the per-row work at ~26k hrefs, ~260 pages at 100
+# links per page; so a task gets ~250 pages, and the fixed cost stays at
+# most about half of a full task's Python time.
+PAGES_PER_PYTHON_TASK = 250
+
 
 @dataclass
 class CrawlConfig:
@@ -781,6 +789,18 @@ class CrawlEngine:
             -(-int(approx_rows) // self.cfg.rows_per_write_task),
         )
 
+    def _python_width(self, bound: int | None) -> int | None:
+        """Partition width of a canonicalizer stage for ``bound`` input
+        rows: ceil(bound / PAGES_PER_PYTHON_TASK), at least 1. None (keep
+        the upstream width, add no exchange) when the bound is unknown or
+        the width would not be below the session's shuffle width, the
+        width the stage inherits from the slice's shuffle."""
+        if bound is None:
+            return None
+        width = max(1, -(-int(bound) // PAGES_PER_PYTHON_TASK))
+        upstream = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return width if width < upstream else None
+
     def _robots_row_bound(self) -> int:
         """Rules-table row count, measured ONCE per crawl (the frame is
         checkpointed and static). It size-gates both the robots-rules and
@@ -961,9 +981,12 @@ class CrawlEngine:
 
         # --- parse + links (A1/A2/F1/D1/A4, S7) ------------------------------
         # persisted: feeds the links sink AND the seen/frontier merge — without
-        # it the canonicalize UDF + dedup shuffles would run once per consumer
+        # it the canonicalize UDF + dedup shuffles would run once per consumer.
+        # The slice processes at most pending_count pages, the bound the
+        # fetch broadcast gate uses too.
         links_pairs = extract_outlinks(
-            successes.select("url", "host", "spans")
+            successes.select("url", "host", "spans"),
+            width=self._python_width(self.pending_count),
         ).persist()
         self._round_persists.append(links_pairs)
         links_delta = links_pairs.join(

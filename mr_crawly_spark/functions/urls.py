@@ -265,23 +265,31 @@ def _canonicalize_udf_det(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
 
     Replaces the per-row ``urljoin`` at parser.py:51. String work must run in
     Python (urllib semantics are the contract); Arrow batching keeps the
-    transfer columnar — ~10-100x over row-at-a-time UDFs. (An Arrow-native
-    pyarrow.compute rewrite of the common shapes was prototyped in r06 and
-    measured WITHIN NOISE of this form once the scalar fast path landed —
-    the boundary cost is no longer the bottleneck — so the simpler form
-    stays.)
+    transfer columnar — ~10-100x over row-at-a-time UDFs. The per-row work
+    is ~7.6 us per href; what dominates a small crawl round is the fixed
+    cost of each Python task, ~0.2 worker CPU-s whatever its row count
+    (4 CPUs, CPython 3.11; an identity pandas UDF costs the same). About
+    80% of it is pyspark's per-task ``setup_spark_files``, whose
+    ``importlib.invalidate_caches()`` makes every cached zipimporter
+    re-read the pyspark.zip directory. So callers size the UDF's stage
+    from their row bound (engine._python_width) instead of letting it
+    inherit the upstream shuffle width.
     """
     return canonicalize_pairs(bases, hrefs)
 
 
 # Exported as NON-DETERMINISTIC (it is pure — this is an optimizer fence,
-# not a semantics change): every consumer filters the UDF's output
-# (isNotNull, same-domain), and Catalyst pushes such filters BELOW the
-# projection by re-evaluating the UDF inside the filter — the measured
-# plans carried 4 ArrowEvalPython nodes on the frontier candidate path and
-# 6 on extract_outlinks, i.e. the whole corpus crossed the Python boundary
-# up to 6x per crawl round. asNondeterministic() forbids the duplication
-# (one ArrowEvalPython per plan); the blocked
+# not a semantics change). Spark rejects it in a join condition
+# (INVALID_NON_DETERMINISTIC_EXPRESSIONS) and in other operators that need
+# deterministic input; a groupBy key still works only because the analyzer
+# first pulls it into a Project. Use _canonicalize_udf_det, the
+# deterministic form of the same UDF, there. Every consumer filters the
+# UDF's output (isNotNull, same-domain), and Catalyst pushes such filters
+# BELOW the projection by re-evaluating the UDF inside the filter — the
+# measured plans carried 4 ArrowEvalPython nodes on the frontier candidate
+# path and 6 on extract_outlinks, i.e. the whole corpus crossed the Python
+# boundary up to 6x per crawl round. asNondeterministic() forbids the
+# duplication (one ArrowEvalPython per plan); the blocked
 # filter-pushdown-past-the-UDF is worthless here anyway (the filters all
 # depend on the UDF's own output).
 canonicalize_udf = _canonicalize_udf_det.asNondeterministic()

@@ -6,7 +6,9 @@ our documents are already span arrays (input_hint), so extraction is:
 1. JVM-side: ``F.filter(spans, kind='link')`` + ``explode`` — whole-stage
    codegen, no Python;
 2. the only Python in the path is the RFC-3986 canonicalizer, an
-   Arrow-batched pandas UDF (urljoin semantics are the contract);
+   Arrow-batched pandas UDF (urljoin semantics are the contract); the
+   caller sets the width of its Python stage (``width``), because every
+   Python task pays a fixed start-up cost whatever its row count;
 3. same-domain filter (parser.py:56) as a plain column equality;
 4. in-page set dedup (parser.py:45) as dropDuplicates;
 5. self-link quirk A4 (parser.py:58): the source URL joins the page's link
@@ -53,15 +55,24 @@ def _outlink_cols() -> dict:
     }
 
 
-def extract_outlinks(fetched: DataFrame) -> DataFrame:
+def extract_outlinks(fetched: DataFrame, width: int | None = None) -> DataFrame:
     """(url, host, spans) -> distinct (source_url, linked_url) pairs.
 
-    ``linked_url`` is canonical; includes the A4 self-link rows.
+    ``linked_url`` is canonical; includes the A4 self-link rows. ``width``
+    (None = inherit the upstream width) is the partition count of the
+    canonicalizer's Python stage: the href rows are repartitioned to it
+    just before the UDF.
     """
     c = session_cached(fetched.sparkSession, "parse.outlinks", _outlink_cols)
     hrefs = (
         fetched.select(*c["explode"]).select(*c["href"]).filter(c["href_ok"])
     )
+    if width is not None:
+        # round-robin, not coalesce: coalesce is narrow, so it would also
+        # run every operator back to the previous shuffle (the fetch's
+        # streamed corpus scan, say) in `width` tasks; this exchange only
+        # moves the small href rows
+        hrefs = hrefs.repartition(width)
     canon = hrefs.withColumn("linked_url", c["canon"]).filter(c["canon_ok"])
     same_domain = canon.filter(c["same_domain"]).select("source_url", "linked_url")
     # A4: add (source, source) for every source that produced >= 1 link.

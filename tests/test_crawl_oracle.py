@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from mr_crawly_spark.datagen import corpus_to_spark
 from mr_crawly_spark.engine import CrawlConfig, CrawlEngine
-from mr_crawly_spark.operators.parse import spans_in_order
+from mr_crawly_spark.operators.parse import extract_outlinks, spans_in_order
 from mr_crawly_spark.sources.corpus import CorpusFetcher
 from oracle.crawler import OracleCrawler
 
@@ -203,3 +203,48 @@ def test_delay_knob_changes_round_shape(spark, small_corpus):
     assert oracle_slow.crawl_order and (
         set(oracle_slow.crawl_order) == set(oracle_default.crawl_order)
     )  # throttling changes WHEN, never WHAT
+
+
+def _crawl_with_widths(spark, corpus, monkeypatch):
+    """Run one crawl, recording the width each round gives the
+    canonicalizer stage."""
+    import mr_crawly_spark.engine as engine_mod
+
+    widths = []
+
+    def spy(fetched, width=None):
+        widths.append(width)
+        return extract_outlinks(fetched, width=width)
+
+    monkeypatch.setattr(engine_mod, "extract_outlinks", spy)
+    engine = build_engine(spark, corpus)
+    engine.run()
+    order = [r["url"] for r in engine.crawl_order().orderBy("rank").collect()]
+    seen = {r["url"] for r in engine.table("seen").collect()}
+    links = {
+        (r["seed_url"], r["source_url"], r["linked_url"])
+        for r in engine.table("links").collect()
+    }
+    return widths, (order, seen, links)
+
+
+def test_python_stage_width_does_not_change_the_crawl(
+    spark, tiny_corpus, monkeypatch
+):
+    """Every test corpus is small, so by default each round's canonicalizer
+    runs as ONE Python task. With one page per task the width follows the
+    round's page count instead, and a round with at least as many pending
+    pages as the shuffle width gets None: no repartition, the plan every
+    round ran before the stage was sized. Both must give the oracle's
+    crawl."""
+    import mr_crawly_spark.engine as engine_mod
+
+    o = OracleCrawler(tiny_corpus).run()
+    want = (o.crawl_order, o.seen, o.links)
+    narrow, got_narrow = _crawl_with_widths(spark, tiny_corpus, monkeypatch)
+    monkeypatch.setattr(engine_mod, "PAGES_PER_PYTHON_TASK", 1)
+    wide, got_wide = _crawl_with_widths(spark, tiny_corpus, monkeypatch)
+    assert set(narrow) == {1}
+    assert None in wide
+    assert got_narrow == want
+    assert got_wide == want

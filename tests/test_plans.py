@@ -62,12 +62,17 @@ def hash_or_range_exchanges(plan: str) -> list[str]:
 
 
 def test_text_ops_are_pure_jvm(spark):
-    plan = plan_of(entry_mod.q_text_quality(spark, SF_DIR))
     # higher-order lambdas (filter/aggregate) evaluate JVM-side but outside
-    # codegen; the scan stage is codegen'd (the *(n) markers) — under a
-    # not-yet-final AdaptiveSparkPlan the markers are not printed, so
-    # accept the AQE wrapper as evidence the plan is JVM-planned
-    assert "*(" in plan or "AdaptiveSparkPlan" in plan
+    # codegen; the scan stage is codegen'd (the *(n) markers). A
+    # not-yet-final AdaptiveSparkPlan prints no markers, so plan with AQE off
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        plan = plan_of(entry_mod.q_text_quality(spark, SF_DIR))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert "AdaptiveSparkPlan" not in plan
+    assert "*(" in plan
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python
     assert "ArrowEvalPython" not in plan  # text ops are pure JVM
 
@@ -272,6 +277,18 @@ def test_extract_outlinks_single_dedup_exchange(spark, corpus):
     )
     plan = plan_of(extract_outlinks(docs))
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
+    # a sized Python stage: a round-robin exchange of the href rows sits
+    # just below the one UDF, nothing is coalesced (the operators below
+    # keep their width), and the dedup exchange after it keeps its width
+    lines = plan_of(extract_outlinks(docs, width=2)).splitlines()
+    udf = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    rr = [i for i, ln in enumerate(lines) if "RoundRobinPartitioning(2)" in ln]
+    assert len(udf) == 1 and len(rr) == 1, "\n".join(lines)
+    assert rr[0] == udf[0] + 1, "\n".join(lines)
+    assert "Coalesce" not in "\n".join(lines)
+    exchanges = [ln for ln in lines if "Exchange hashpartitioning" in ln]
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert len(exchanges) == 1 and f", {width})" in exchanges[0], exchanges
 
 
 @pytest.mark.parametrize(
