@@ -65,44 +65,6 @@ def q_seen_antijoin(spark, sf_dir):
     )
 
 
-def _url_keyed(df, key_col, extra_cols=()):
-    """(url, url_hash, *extra) frame keyed like the engine's seen set."""
-    from mr_crawly_spark.functions.urls import url_hash_col
-
-    url = F.concat(F.lit("https://c.test/"), F.col(key_col).cast("string"))
-    return df.select(
-        url.alias("url"), *[F.col(c) for c in extra_cols]
-    ).withColumn("url_hash", url_hash_col(F.col("url")))
-
-
-def q_seen_sidecar_bloom(spark, sf_dir):
-    """D2/J3 scale path (r4 verdict #1): the SAME anti-join semantics as
-    seen_antijoin, but routed through the bucket-partitioned Bloom SIDECAR
-    prefilter (seen.py bloom_prefilter_sidecar) — the one route the engine
-    takes under use_bloom. The prefilter contract
-    (no false negatives; positives re-checked exactly) means the oracle is
-    the plain NOT EXISTS."""
-    import tempfile
-
-    from mr_crawly_spark.operators import seen as seen_ops
-
-    customer = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_custkey") % 3 == 0
-    )
-    cands = _url_keyed(customer, "c_custkey", ("c_custkey", "c_name"))
-    seen = _url_keyed(
-        orders.select("o_custkey").dropDuplicates(), "o_custkey"
-    )
-    n_buckets = 8
-    m, k = seen_ops.bloom_params(1 << 18, fpp=0.01)
-    path = tempfile.mkdtemp(prefix="entry_bloom_sc_")
-    seen_ops.build_bloom_sidecar(seen, path, n_buckets, m, k, round_=0)
-    return seen_ops.filter_unseen(
-        cands, seen, n_buckets=n_buckets, m_bits=m, k=k, sidecar_path=path
-    ).select("c_custkey", "c_name")
-
-
 def q_host_window_topk(spark, sf_dir):
     """O3: host-keyed priority window -> per-key top-k."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -2001,7 +1963,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "change_rate": q_change_rate,
         # --- previously driver-sampled entries (green in r01-r05) ---------
         "seen_antijoin": q_seen_antijoin,
-        "seen_sidecar_bloom": q_seen_sidecar_bloom,
         "host_window_topk": q_host_window_topk,
         "frontier_merge": q_frontier_merge,
         "fetch_left_join": q_fetch_left_join,
@@ -2358,15 +2319,6 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{crawl_seen_path}')
         """,
         "seen_antijoin": """
-            SELECT c_custkey, c_name FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o
-                              WHERE o.o_custkey = c.c_custkey
-                                AND o.o_custkey % 3 = 0)
-        """,
-        # the sidecar Bloom is a PREFILTER (no false negatives, positives
-        # re-checked exactly), so its oracle is the identical plain
-        # anti-join — any deviation is a contract violation
-        "seen_sidecar_bloom": """
             SELECT c_custkey, c_name FROM customer c
             WHERE NOT EXISTS (SELECT 1 FROM orders o
                               WHERE o.o_custkey = c.c_custkey

@@ -42,7 +42,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--log-level", default=None)
     # crawl knobs default to None so the TOML/CLI merge can tell "explicitly
     # passed" from "unset" — an explicit value ALWAYS wins over the config
-    # file, including explicit defaults and --no-use-bloom (ADVICE r2)
+    # file, including explicit defaults and --no-use-freshness (ADVICE r2)
     p.add_argument("--max-pages", type=int, default=None)
     p.add_argument("--max-rounds", type=int, default=None)
     p.add_argument("--retries", type=int, default=None,
@@ -56,7 +56,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--corpus-path", default=None,
                    help="bucketed parquet corpus (else generate in-memory)")
     p.add_argument("--salt-partitions", type=int, default=None)
-    p.add_argument("--use-bloom", action=argparse.BooleanOptionalAction, default=None)
     p.add_argument("--use-freshness", action=argparse.BooleanOptionalAction,
                    default=None,
                    help="measured recrawl scheduling: schedule_recrawl "
@@ -93,9 +92,9 @@ def build_parser() -> argparse.ArgumentParser:
 def resolve_config(args: argparse.Namespace) -> CrawlConfig:
     """Merge precedence: explicit CLI > TOML > CrawlConfig defaults. Every
     crawl knob defaults to None in argparse, so "explicitly passed" is
-    distinguishable from "unset" — --no-use-bloom really disables a
-    TOML-enabled bloom, and passing a value equal to the dataclass default
-    still overrides the config file (ADVICE r2)."""
+    distinguishable from "unset" — --no-use-freshness really disables a
+    TOML-enabled freshness scheduler, and passing a value equal to the
+    dataclass default still overrides the config file (ADVICE r2)."""
     from mr_crawly_spark.config import config_from_toml
 
     overrides = dict(
@@ -104,7 +103,6 @@ def resolve_config(args: argparse.Namespace) -> CrawlConfig:
         max_retries=args.retries,
         default_delay=args.delay,
         salt_partitions=args.salt_partitions,
-        use_bloom=args.use_bloom,
         use_freshness=args.use_freshness,
         archive_dedup=args.archive_dedup,
         use_adaptive_politeness=args.adaptive_politeness,

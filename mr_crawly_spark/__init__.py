@@ -5,7 +5,7 @@ robots + per-host politeness, sitemap expansion, interleaved text+media span
 documents) as an idiomatic Spark DataFrame pipeline:
 
 - Redis/RQ queues      -> micro-batch rounds over a ``frontier`` DataFrame
-- visited_urls set     -> ``seen`` table + partitioned Bloom prefilter + anti-join
+- visited_urls set     -> ``seen`` table + exact anti-join
 - BeautifulSoup parse  -> span-array documents + vectorized Arrow/pandas UDFs
 - SQLite sinks         -> snapshot-versioned parquet tables with manifests
 - RQ retry/backoff     -> ``retry_count``/``next_attempt_ts`` columns (logical time)

@@ -9,7 +9,7 @@ Example crawl.toml:
     [crawl]
     max_pages = 100
     max_rounds = 50
-    use_bloom = true
+    use_freshness = true
     checkpoint_interval = 4
 
     [logging]

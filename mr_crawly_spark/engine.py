@@ -7,7 +7,7 @@ One round = one deterministic driver iteration (Trigger.AvailableNow-style):
     outcome  = robots (F2) / 404 / transient-503 retry (F7) / 200
     links    = explode link spans (A1) → canonicalize (P2) → hash (P3)
                → same-domain (F1) → dedup + self-link quirk (D1/A4)
-    fresh    = links ⟖̸ seen (J3, Bloom-prefiltered anti-join)
+    fresh    = links ⟖̸ seen (J3, exact anti-join)
     frontier' = status rewrites + merge (D6); seen' += fresh
     snapshot (S11): frontier snapshot, seen/pages/links deltas, round manifest
 
@@ -78,12 +78,6 @@ class CrawlConfig:
     max_rounds: int = 100
     salt_partitions: int | None = None   # repartition width for hot-host salting
     salt: int = 16
-    use_bloom: bool = False
-    bloom_buckets: int = 32
-    bloom_fpp: float = 0.01
-    # Bloom is sized once for the expected final seen-set cardinality; FPP
-    # degrades (never correctness — it's a prefilter) if the crawl outgrows it
-    bloom_expected_n: int = 1 << 20
     # parquet-snapshot cadence: rounds in between keep state as
     # localCheckpoint()ed in-memory DataFrames (lineage truncated, no disk
     # I/O); resume points exist at flushed rounds only. 1 = flush every
@@ -259,18 +253,10 @@ class CrawlEngine:
         # re-counting the frontier every round just to test loop conditions
         self.pending_count: int | None = None
         self.frontier_count: int | None = None
-        # (m_bits, k) once _ensure_bloom_sidecar has validated or built the
-        # Bloom sidecar; None while the prefilter is off or not yet checked.
-        # The filter itself never comes to the driver: it lives only in the
-        # sidecar parquet, and rounds probe it bucket-partitioned
-        # executor-side (filter_unseen(sidecar_path=...))
-        self._bloom_mk: tuple[int, int] | None = None
         # flush progress, reset by bootstrap() and resume(): the last fully
-        # flushed round, the round whose frontier delta is committed, and
-        # the seen-delta union held until the sidecar merge succeeds
+        # flushed round and the round whose frontier delta is committed
         self._flushed_round: int | None = None
         self._frontier_committed_round: int | None = None
-        self._pending_sidecar_seen: DataFrame | None = None
         # (url, rank) from the last refresh_pagerank(); None until computed
         self._ranks: DataFrame | None = None
         # (host, param, ...) stats from the last refresh_trap_stats();
@@ -518,13 +504,10 @@ class CrawlEngine:
         return True
 
     def _reset_flush_state(self) -> None:
-        """Forget the previous crawl's flush progress and Bloom check — a
-        second run() on the same engine must flush its own rounds and
-        revalidate the sidecar against the round it starts from."""
-        self._bloom_mk = None
+        """Forget the previous crawl's flush progress — a second run() on
+        the same engine must flush its own rounds."""
         self._flushed_round = None
         self._frontier_committed_round = None
-        self._pending_sidecar_seen = None
 
     # ------------------------------------------------------------------ #
     # merge-on-read state views
@@ -559,10 +542,7 @@ class CrawlEngine:
 
         Rows seen SINCE the flush live in self._deltas["seen"]; the round's
         membership test anti-joins base first, then the (small) delta union
-        — exact either way. The Bloom sidecar covers at least the base (it
-        is built over the FULL view, _seen_full_view, and merged at every
-        flush), so probing it against the base never yields false
-        negatives."""
+        — exact either way."""
         if self._seen is None:
             loaded = self.catalog.load("seen", max_round=self.round)
             n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -572,13 +552,6 @@ class CrawlEngine:
             with self._aqe(enabled=False):
                 self._seen = part.localCheckpoint()
         return self._seen
-
-    def _seen_full_view(self) -> DataFrame:
-        """Base + uncommitted round deltas — every url ever seen."""
-        view = self._seen_base()
-        for d in self._deltas["seen"]:
-            view = view.unionByName(d)
-        return view
 
     def _pages_cache_view(self) -> DataFrame | None:
         """(url_hash, url, spans) of successfully fetched pages — the
@@ -694,49 +667,6 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------ #
-    def _bloom_sidecar_path(self) -> str:
-        import os
-
-        return os.path.join(self.cfg.warehouse, "seen_bloom")
-
-    def _ensure_bloom_sidecar(self) -> None:
-        """Validate or build the Bloom sidecar once per crawl; each flush
-        then folds the round deltas in (merge_bloom_sidecar), so the full
-        build never reruns inside a crawl. A persisted sidecar is reused
-        only when
-        - its geometry (m, k, n_buckets) matches the config: bitmaps probed
-          with another geometry give silent false negatives;
-        - its round stamp is at least the current round: flushes that ran
-          with use_bloom off never merged into it, so an older stamp misses
-          seen rows (a newer one is a superset — the seen table is
-          append-only — which only costs false positives).
-        Otherwise it is rebuilt from the full seen view (base + uncommitted
-        deltas) and stamped with the current round."""
-        if not self.cfg.use_bloom or self._bloom_mk is not None:
-            return
-        m, k = seen_ops.bloom_params(self.cfg.bloom_expected_n, self.cfg.bloom_fpp)
-        path = self._bloom_sidecar_path()
-        geom = seen_ops.read_bloom_geometry(path)
-        stamp = seen_ops.read_bloom_round(path)
-        if (
-            geom == (m, k, self.cfg.bloom_buckets)
-            and stamp is not None
-            and stamp >= self.round
-        ):
-            log.info("bloom sidecar: reusing persisted filter (round %d)", stamp)
-        else:
-            if geom is not None:
-                log.warning(
-                    "bloom sidecar %s at round %s unusable for %s at round %d "
-                    "— rebuilding",
-                    geom, stamp, (m, k, self.cfg.bloom_buckets), self.round,
-                )
-            seen_ops.build_bloom_sidecar(
-                self._seen_full_view(), path, self.cfg.bloom_buckets, m, k,
-                round_=self.round,
-            )
-        self._bloom_mk = (m, k)
-
     _OUTCOME_KEYS = ("n", "ok", "denied", "err404", "retries", "retry_back")
 
     def _outcome_aggs(self) -> list:
@@ -1022,15 +952,7 @@ class CrawlEngine:
             from mr_crawly_spark.operators.traps import strip_candidate_traps
 
             candidates = strip_candidate_traps(candidates, self._trap_stats)
-        self._ensure_bloom_sidecar()
-        if self._bloom_mk is not None:
-            m, k = self._bloom_mk
-            fresh = seen_ops.filter_unseen(
-                candidates, seen, n_buckets=self.cfg.bloom_buckets,
-                m_bits=m, k=k, sidecar_path=self._bloom_sidecar_path(),
-            )
-        else:
-            fresh = seen_ops.filter_unseen(candidates, seen)
+        fresh = seen_ops.filter_unseen(candidates, seen)
         # rows seen since the last flush (not yet folded into the base):
         # one anti-join against the small delta union — `fresh` leaves the
         # base join already partitioned on the keys, so only the (round-
@@ -1199,26 +1121,6 @@ class CrawlEngine:
     def _flush_impl(self, r: int) -> None:
         # captured before the frontier branch may zero it at compaction
         touched = self._updates_count
-        # the Bloom sidecar folds the round deltas in DISTRIBUTED at
-        # flush cadence (between flushes the drift anti-join covers them);
-        # capture the union before _commit_table clears the delta lists —
-        # and hold it ON THE ENGINE until the merge below has succeeded: a
-        # flush retried after the seen commit cleared the list would
-        # otherwise skip the merge forever (committed-but-unmerged keys
-        # probe definitely-unseen = prefilter false negatives). Captured at
-        # most once per round (the delta frames are persisted round frames,
-        # released only after the whole flush succeeds, so a held reference
-        # stays computable across retries).
-        if (
-            self._bloom_mk is not None
-            and self._pending_sidecar_seen is None
-            and self._deltas["seen"]
-        ):
-            u = self._deltas["seen"][0]
-            for d in self._deltas["seen"][1:]:
-                u = u.unionByName(d)
-            self._pending_sidecar_seen = u
-        seen_delta_union = self._pending_sidecar_seen
         # NOTE: _flushed_round is only set at the END — an interrupted flush
         # (e.g. a streaming wrapper's stop() landing mid-write) must be
         # retryable; each table clears its pending state right after its own
@@ -1278,21 +1180,6 @@ class CrawlEngine:
         else:
             for t in pending_tables:
                 _commit_table(t)
-        # fold the flushed seen delta into the Bloom sidecar fully
-        # distributed (no table bytes touch the driver) and stamp it with
-        # this round. Runs AFTER the table commits and BEFORE the round
-        # manifest: a crash after the merge but before the manifest rolls
-        # the tables back, leaving the sidecar a SUPERSET of the seen base
-        # with a newer stamp — extra keys are false positives (cost work),
-        # never false negatives.
-        if self._bloom_mk is not None and seen_delta_union is not None:
-            m, k = self._bloom_mk
-            seen_ops.merge_bloom_sidecar(
-                self.spark, seen_delta_union, self._bloom_sidecar_path(),
-                self.cfg.bloom_buckets, m, k, round_=r,
-            )
-        # the sidecar merge succeeded — release the held delta
-        self._pending_sidecar_seen = None
         # reload derived state from the flushed parquet (bounds partition
         # counts), then release the round frames the lazy deltas referenced
         self._seen = None
@@ -1544,7 +1431,8 @@ class CrawlEngine:
         indexed pages.
 
         The high-water mark is the committed round (``_indexed.json``,
-        tmp+os.replace like every sidecar marker): within a run the seen
+        written to a tmp file then os.replace'd, so a crash leaves the old
+        marker or the new one, never a torn one): within a run the seen
         set guarantees each URL is fetched at most once, so round-sliced
         deltas stay doc-disjoint (the merge_index contract). A
         schedule_recrawl cycle re-fetches URLs — call

@@ -187,9 +187,10 @@ def write_index(
     would defeat the build-once point). One repartition by bucket before
     the write keeps file count at ~n_term_buckets instead of
     tasks x buckets small files. Geometry (n_term_buckets) is committed
-    LAST via tmp + os.replace (the seen.py sidecar convention): a crashed
-    write leaves no geometry file, so load_index refuses a partial index
-    instead of silently pruning to wrong buckets."""
+    LAST, written to a tmp file and renamed over with os.replace so it is
+    never seen half-written: a crashed write leaves no geometry file, so
+    load_index refuses a partial index instead of silently pruning to
+    wrong buckets."""
     if n_term_buckets < 1:
         raise ValueError(
             f"n_term_buckets must be >= 1, got {n_term_buckets}"

@@ -52,6 +52,19 @@ class SnapshotCatalog:
     def _manifest_path(self, table: str, version: int) -> str:
         return os.path.join(self.warehouse, table, f"manifest-{version:05d}.json")
 
+    def _write_manifest(self, manifest: dict) -> dict:
+        """Publish a table manifest atomically: write a tmp file, then
+        os.replace it into place. The tmp name starts with a dot, outside
+        the ``manifest-`` prefix every reader scans, so a write killed
+        midway leaves no torn manifest behind — only an inert data dir
+        whose version the next commit reuses."""
+        path = self._manifest_path(manifest["table"], manifest["snapshot_id"])
+        tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        os.replace(tmp, path)
+        return manifest
+
     def commit(
         self,
         table: str,
@@ -107,9 +120,7 @@ class SnapshotCatalog:
             "partitions": per_file,
             "metrics": metrics or {},
         }
-        with open(self._manifest_path(table, version), "w") as f:
-            json.dump(manifest, f, indent=1)
-        return manifest
+        return self._write_manifest(manifest)
 
     def commit_pylist(
         self,
@@ -155,9 +166,7 @@ class SnapshotCatalog:
             "partitions": [{"file": "part-00000.parquet", "rows": len(rows)}],
             "metrics": metrics or {},
         }
-        with open(self._manifest_path(table, version), "w") as f:
-            json.dump(manifest, f, indent=1)
-        return manifest
+        return self._write_manifest(manifest)
 
     def _manifests(self, table: str, max_round: int | None = None) -> list[dict]:
         """All manifests for a table up to max_round, in version order."""
@@ -227,20 +236,8 @@ class SnapshotCatalog:
         ).unionByName(latest)
 
     def latest_manifest(self, table: str, max_round: int | None = None) -> dict | None:
-        tdir = os.path.join(self.warehouse, table)
-        if not os.path.isdir(tdir):
-            return None
-        best: dict | None = None
-        for fn in sorted(os.listdir(tdir)):
-            if not fn.startswith("manifest-"):
-                continue
-            with open(os.path.join(tdir, fn)) as f:
-                m = json.load(f)
-            if max_round is not None and m["round"] > max_round:
-                continue
-            if best is None or m["snapshot_id"] > best["snapshot_id"]:
-                best = m
-        return best
+        manifests = self._manifests(table, max_round)
+        return manifests[-1] if manifests else None
 
     def load(self, table: str, max_round: int | None = None) -> DataFrame | None:
         """Load a table's current state: latest snapshot, or union of deltas.
@@ -248,23 +245,14 @@ class SnapshotCatalog:
         ``max_round`` implements time travel for resume: ignore commits made
         after that round.
         """
-        latest = self.latest_manifest(table, max_round)
-        if latest is None:
+        manifests = self._manifests(table, max_round)
+        if not manifests:
             return None
+        latest = manifests[-1]
         if latest["kind"] == "snapshot":
             return self.spark.read.parquet(latest["data_dir"])
         # delta table: read every delta dir up to max_round at once
-        dirs = []
-        tdir = os.path.join(self.warehouse, table)
-        for fn in sorted(os.listdir(tdir)):
-            if not fn.startswith("manifest-"):
-                continue
-            with open(os.path.join(tdir, fn)) as f:
-                m = json.load(f)
-            if max_round is not None and m["round"] > max_round:
-                continue
-            if m["n_rows"] > 0:
-                dirs.append(m["data_dir"])
+        dirs = [m["data_dir"] for m in manifests if m["n_rows"] > 0]
         if not dirs:
             return self.spark.read.parquet(latest["data_dir"])  # schema-only
         return self.spark.read.parquet(*dirs)
@@ -295,16 +283,11 @@ class SnapshotCatalog:
             if fn.startswith("round-") and int(fn.split("-")[1].split(".")[0]) > round_:
                 os.remove(os.path.join(rdir, fn))
         for table in os.listdir(self.warehouse):
-            tdir = os.path.join(self.warehouse, table)
-            if table.startswith("_") or not os.path.isdir(tdir):
+            if table.startswith("_"):
                 continue
-            for fn in os.listdir(tdir):
-                if not fn.startswith("manifest-"):
-                    continue
-                with open(os.path.join(tdir, fn)) as f:
-                    m = json.load(f)
+            for m in self._manifests(table):
                 if m["round"] > round_:
-                    os.remove(os.path.join(tdir, fn))
+                    os.remove(self._manifest_path(table, m["snapshot_id"]))
 
     def destroy(self) -> None:
         shutil.rmtree(self.warehouse, ignore_errors=True)

@@ -103,7 +103,7 @@ def streaming_dedup(
     arriving later than the watermark delay are NOT suppressed — that is
     the documented trade). For all-time exactness at scale, the batch
     path (exact_dedup over the accumulated table, or the engine's
-    Bloom-prefiltered anti-join) is the right tool; this operator
+    seen-set anti-join) is the right tool; this operator
     is the ingest-time gate.
 
     Works identically on a batch frame (dropDuplicates without state) so

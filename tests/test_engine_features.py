@@ -239,11 +239,11 @@ def test_config_from_toml(tmp_path):
 
     p = tmp_path / "crawl.toml"
     p.write_text(
-        "[crawl]\nmax_pages = 7\nuse_bloom = true\ncheckpoint_interval = 2\n"
+        "[crawl]\nmax_pages = 7\nuse_freshness = true\ncheckpoint_interval = 2\n"
         "\n[logging]\nlevel = \"DEBUG\"\n"
     )
     cfg = config_from_toml(str(p), "/tmp/wh", max_rounds=9)
-    assert (cfg.max_pages, cfg.use_bloom, cfg.checkpoint_interval) == (7, True, 2)
+    assert (cfg.max_pages, cfg.use_freshness, cfg.checkpoint_interval) == (7, True, 2)
     assert cfg.max_rounds == 9  # explicit override wins
     assert cfg.warehouse == "/tmp/wh"
     assert logging_level_from_toml(str(p)) == "DEBUG"
@@ -251,17 +251,22 @@ def test_config_from_toml(tmp_path):
     bad.write_text("[crawl]\nmax_pagez = 7\n")
     with pytest.raises(ValueError, match="max_pagez"):
         config_from_toml(str(bad), "/tmp/wh")
+    # a retired prefilter knob is an unknown key, not silently ignored
+    retired = tmp_path / "retired.toml"
+    retired.write_text("[crawl]\nuse_bloom = true\n")
+    with pytest.raises(ValueError, match="unknown \\[crawl\\] keys"):
+        config_from_toml(str(retired), "/tmp/wh")
 
 
 def test_cli_toml_merge_precedence(tmp_path):
     """CLI > TOML > defaults, with explicit values always winning — incl.
-    --no-use-bloom over a TOML-enabled bloom and explicitly-passed values
+    --no-use-freshness over a TOML-enabled one and explicitly-passed values
     equal to the dataclass defaults (ADVICE r2: the old sentinel comparison
     treated those as unset)."""
     from main import build_parser, resolve_config
 
     toml = tmp_path / "crawl.toml"
-    toml.write_text("[crawl]\nmax_pages = 7\nuse_bloom = true\nmax_rounds = 50\n")
+    toml.write_text("[crawl]\nmax_pages = 7\nuse_freshness = true\nmax_rounds = 50\n")
 
     def cfg(argv):
         return resolve_config(build_parser().parse_args(argv))
@@ -269,9 +274,9 @@ def test_cli_toml_merge_precedence(tmp_path):
     base = ["--warehouse", "/tmp/wh", "--config", str(toml)]
     # TOML applies when the CLI is silent
     c = cfg(base)
-    assert (c.max_pages, c.use_bloom, c.max_rounds) == (7, True, 50)
+    assert (c.max_pages, c.use_freshness, c.max_rounds) == (7, True, 50)
     # the CLI can DISABLE a TOML-enabled boolean
-    assert cfg(base + ["--no-use-bloom"]).use_bloom is False
+    assert cfg(base + ["--no-use-freshness"]).use_freshness is False
     # an explicit CLI value equal to the dataclass default still overrides
     assert cfg(base + ["--max-rounds", "100"]).max_rounds == 100
     assert cfg(base + ["--max-pages", str(10**9)]).max_pages == 10**9
@@ -279,9 +284,10 @@ def test_cli_toml_merge_precedence(tmp_path):
     c2 = cfg(["--warehouse", "/tmp/wh", "--retries", "1"])
     assert c2.max_retries == 1
     assert cfg(["--warehouse", "/tmp/wh"]).max_retries == 3
-    # a retired prefilter flag is rejected, not silently accepted
-    with pytest.raises(SystemExit):
-        build_parser().parse_args(["--warehouse", "/tmp/wh", "--use-cuckoo"])
+    # retired prefilter flags are rejected, not silently accepted
+    for retired in ("--use-cuckoo", "--use-bloom"):
+        with pytest.raises(SystemExit):
+            build_parser().parse_args(["--warehouse", "/tmp/wh", retired])
 
 
 def test_python_width_is_ceil_of_bound(crawled):

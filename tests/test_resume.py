@@ -2,18 +2,16 @@
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from mr_crawly_spark.datagen import corpus_to_spark
 from mr_crawly_spark.engine import CrawlConfig, CrawlEngine
-from mr_crawly_spark.operators import seen as seen_ops
+from mr_crawly_spark.plans.catalog import SnapshotCatalog
 from mr_crawly_spark.sources.corpus import CorpusFetcher
-
-BLOOM = dict(use_bloom=True, bloom_buckets=4, bloom_expected_n=4096)
 
 
 def _engine(spark, corpus, wh, **kw):
@@ -32,34 +30,6 @@ def _final_state(engine):
         for r in engine.table("links").collect()
     }
     return order, seen, links
-
-
-def _sidecar_bits(spark, path):
-    return {r["bucket"]: bytes(r["bits"]) for r in spark.read.parquet(path).collect()}
-
-
-def _count_builds(monkeypatch):
-    builds = {"n": 0}
-    real_build = seen_ops.build_bloom_sidecar
-
-    def counting_build(*a, **kw):
-        builds["n"] += 1
-        return real_build(*a, **kw)
-
-    monkeypatch.setattr(seen_ops, "build_bloom_sidecar", counting_build)
-    return builds
-
-
-def _unseen_probes(eng):
-    """How many committed seen keys the engine's Bloom sidecar probes
-    definitely-unseen (prefilter false negatives; must be 0)."""
-    seen = eng.table("seen").select("url", "url_hash")
-    m, k = eng._bloom_mk
-    probed = seen_ops.bloom_prefilter_sidecar(
-        seen, eng._bloom_sidecar_path(), eng.cfg.bloom_buckets, m, k
-    )
-    assert seen.count() > 0
-    return probed.filter(~F.col("maybe_seen")).count()
 
 
 @pytest.fixture(scope="module")
@@ -116,22 +86,6 @@ def test_rollback_then_rerun(spark, tiny_corpus, ci1_run):
     assert _final_state(again) == want
 
 
-def test_bloom_engine_equals_exact_engine(spark, tiny_corpus, exact_state):
-    """use_bloom=True must not change any output (prefilter-only contract
-    end-to-end, not just at the operator level)."""
-    bloomed = _engine(
-        spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_bl_"),
-        use_bloom=True, bloom_buckets=4,
-    )
-    bloomed.run()
-    # built, merged at every flush, stamped with the last flushed round
-    path = bloomed._bloom_sidecar_path()
-    assert bloomed._bloom_mk is not None
-    assert any(any(v) for v in _sidecar_bits(spark, path).values())
-    assert seen_ops.read_bloom_round(path) == bloomed.round
-    assert _final_state(bloomed) == exact_state
-
-
 def test_partition_invariance(spark, tiny_corpus, exact_state):
     """Same outputs under explicit hot-host salting / different partitioning —
     the determinism-under-parallelism property (SURVEY.md §5.2-5)."""
@@ -172,57 +126,6 @@ def test_resume_discards_orphaned_table_commits(spark, tiny_corpus, ci1_run):
     assert "https://orphan.test/x" not in got[1]  # ...orphan delta is gone
 
 
-def test_bloom_sidecar_resume(spark, tiny_corpus, monkeypatch):
-    """Resume reuses the persisted Bloom sidecar untouched instead of
-    rebuilding — but ONLY when the persisted geometry matches; a mismatched
-    config rebuilds from the seen table (mismatched m_bits would probe
-    false negatives)."""
-    wh = tempfile.mkdtemp(prefix="crawl_blsc_")
-    eng = _engine(spark, tiny_corpus, wh, **BLOOM)
-    eng.run()
-    path = os.path.join(wh, "seen_bloom")
-    saved = _sidecar_bits(spark, path)
-
-    builds = _count_builds(monkeypatch)
-    resumed = _engine(spark, tiny_corpus, wh, **BLOOM)
-    assert resumed.resume()
-    resumed._ensure_bloom_sidecar()
-    assert builds["n"] == 0  # not rebuilt...
-    assert resumed._bloom_mk == eng._bloom_mk
-    assert _sidecar_bits(spark, path) == saved  # ...and left byte-identical
-
-    # different expected_n -> different m_bits -> geometry mismatch:
-    # must NOT reuse the stale sidecar (silent false negatives); rebuilds
-    other = _engine(spark, tiny_corpus, wh, **{**BLOOM, "bloom_expected_n": 65536})
-    assert other.resume()
-    other._ensure_bloom_sidecar()
-    assert builds["n"] == 1
-    assert other._bloom_mk != eng._bloom_mk
-    m_bits, k = other._bloom_mk
-    assert seen_ops.read_bloom_geometry(path) == (m_bits, k, 4)
-    assert all(len(v) == m_bits // 8 for v in _sidecar_bits(spark, path).values())
-
-
-def test_stale_bloom_sidecar_rebuilt_after_bloom_off_rounds(
-    spark, tiny_corpus, exact_state
-):
-    """Round 1 with use_bloom on, rounds 2-3 resumed with it off (their
-    flushes never merge into the sidecar), then resumed with it on again:
-    the sidecar is stamped round 1 < 3, so it must be rebuilt. Reusing it
-    would probe the round 2-3 urls definitely-unseen and crawl them again."""
-    wh = tempfile.mkdtemp(prefix="crawl_onoff_")
-    _engine(spark, tiny_corpus, wh, max_rounds=1, checkpoint_interval=1,
-            **BLOOM).run()
-    off = _engine(spark, tiny_corpus, wh, max_rounds=3, checkpoint_interval=1)
-    off.run(fresh=False)
-    assert off.round == 3
-
-    again = _engine(spark, tiny_corpus, wh, max_rounds=100, **BLOOM)
-    again.run(fresh=False)
-    assert _unseen_probes(again) == 0
-    assert _final_state(again) == exact_state
-
-
 def test_second_run_on_same_engine_flushes(spark, tiny_corpus):
     """A second run() on the same engine re-bootstraps (force_reset) and
     must flush its own rounds: flush progress left from the first run made
@@ -239,55 +142,93 @@ def test_second_run_on_same_engine_flushes(spark, tiny_corpus):
     assert (eng.catalog.last_round()["round"], eng.table("seen").count()) == first
 
 
-def test_sidecar_mode_resume_mid_crawl(spark, tiny_corpus, monkeypatch,
-                                       exact_state):
-    """Kill a Bloom crawl after round 2, resume in a NEW engine: the
-    persisted geometry and round stamp revalidate (no rebuild), the
-    sidecar keeps being probed/merged, final state identical to
-    uninterrupted. The prefilter-only contract makes the shared exact
-    crawl the baseline (a separate Bloom baseline run would assert the
-    same equality transitively at twice the cost)."""
-    cfg = dict(BLOOM, checkpoint_interval=1)
-    wh = tempfile.mkdtemp(prefix="crawl_scres_")
-    first = _engine(spark, tiny_corpus, wh, max_rounds=2, **cfg)
-    first.run()
-    assert first._bloom_mk is not None
+def _manifest_rounds(wh):
+    """{table: [round of each manifest]} over every table dir."""
+    out = {}
+    for table in sorted(os.listdir(wh)):
+        tdir = os.path.join(wh, table)
+        if table.startswith("_") or not os.path.isdir(tdir):
+            continue
+        rounds = []
+        for fn in os.listdir(tdir):
+            if fn.startswith("manifest-"):
+                with open(os.path.join(tdir, fn)) as f:
+                    rounds.append(json.load(f)["round"])
+        out[table] = rounds
+    return out
 
-    builds = _count_builds(monkeypatch)
-    resumed = _engine(spark, tiny_corpus, wh, max_rounds=100, **cfg)
+
+def test_flush_retry_commits_each_table_once(spark, tiny_corpus, monkeypatch,
+                                             exact_state):
+    """A flush that fails midway is retryable: the retry commits only the
+    tables the failed attempt missed, so no table gets two manifests for
+    the round, and a fresh engine resumes from it to the uninterrupted
+    final state."""
+    real_commit = SnapshotCatalog.commit
+    calls = {"links": 0}
+
+    def flaky_commit(self, table, *a, **kw):
+        if table == "links":
+            calls["links"] += 1
+            if calls["links"] == 1:
+                raise RuntimeError("injected links-commit failure")
+        return real_commit(self, table, *a, **kw)
+
+    monkeypatch.setattr(SnapshotCatalog, "commit", flaky_commit)
+    wh = tempfile.mkdtemp(prefix="crawl_retry_")
+    eng = _engine(spark, tiny_corpus, wh, checkpoint_interval=1)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run()
+    r = eng.round
+    assert eng.catalog.last_round()["round"] == r - 1  # round r not complete
+    eng.flush()  # the documented retry path
+    assert eng.catalog.last_round()["round"] == r
+    per_round = {
+        t: rounds.count(r) for t, rounds in _manifest_rounds(wh).items()
+        if r in rounds
+    }
+    assert {"frontier", "seen", "pages", "links"} <= set(per_round)
+    assert set(per_round.values()) == {1}, per_round
+
+    resumed = _engine(spark, tiny_corpus, wh, max_rounds=100)
     assert resumed.resume()
+    assert resumed.round == r
     resumed.run(fresh=False)
-    assert resumed._bloom_mk is not None
-    assert builds["n"] == 0
     assert _final_state(resumed) == exact_state
 
 
-def test_sidecar_merge_survives_flush_retry(spark, tiny_corpus, monkeypatch,
-                                            exact_state):
-    """A flush retried AFTER the seen commit cleared the delta list must
-    still fold that delta into the sidecar filter (the captured union is
-    held on the engine until the merge succeeds) — otherwise the
-    committed-but-unmerged keys probe definitely-unseen forever: prefilter
-    false negatives in exactly the retry scenario the flush contract
-    promises to survive."""
-    calls = {"n": 0}
-    real_merge = seen_ops.merge_bloom_sidecar
+def test_torn_manifest_write_leaves_no_manifest(spark, tiny_corpus,
+                                               monkeypatch, exact_state):
+    """A table manifest whose write dies partway must not be published: a
+    torn manifest-*.json would make every later load() and resume() fail
+    in json.load. The tmp+os.replace writer leaves only its dot-tmp file,
+    which readers never scan."""
+    real_dump = json.dump
+    torn = {"n": 0}
 
-    def flaky_merge(*a, **kw):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("injected sidecar-merge failure")
-        return real_merge(*a, **kw)
+    def dump_then_die(obj, f, *a, **kw):
+        if isinstance(obj, dict) and (obj.get("table"), obj.get("round")) == (
+            "links", 2
+        ):
+            torn["n"] += 1
+            f.write(json.dumps(obj)[:40])
+            f.flush()
+            raise OSError("injected: disk full mid-manifest")
+        return real_dump(obj, f, *a, **kw)
 
-    monkeypatch.setattr(seen_ops, "merge_bloom_sidecar", flaky_merge)
-    eng = _engine(
-        spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_retry_"),
-        checkpoint_interval=1, **BLOOM,
-    )
-    with pytest.raises(RuntimeError, match="injected"):
+    monkeypatch.setattr(json, "dump", dump_then_die)
+    wh = tempfile.mkdtemp(prefix="crawl_torn_")
+    eng = _engine(spark, tiny_corpus, wh, checkpoint_interval=1)
+    with pytest.raises(OSError, match="injected"):
         eng.run()
-    assert eng._bloom_mk is not None
-    eng.flush()  # the documented retry path — must re-run the merge
-    assert calls["n"] >= 2
-    # no-false-negative audit: every committed seen key probes maybe_seen
-    assert _unseen_probes(eng) == 0
+    assert torn["n"] == 1
+    monkeypatch.setattr(json, "dump", real_dump)
+    # every published manifest parses; the torn one was never published
+    rounds = _manifest_rounds(wh)
+    assert 2 not in rounds["links"]
+
+    resumed = _engine(spark, tiny_corpus, wh, max_rounds=100)
+    assert resumed.resume()
+    assert resumed.round == 1
+    resumed.run(fresh=False)
+    assert _final_state(resumed) == exact_state
