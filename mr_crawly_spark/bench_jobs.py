@@ -20,9 +20,10 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from mr_crawly_spark import sizing
 from mr_crawly_spark.functions.urls import canonicalize_udf, url_hash_col
 from mr_crawly_spark.operators.frontier import select_slice
-from mr_crawly_spark.operators.seen import filter_unseen
+from mr_crawly_spark.operators.seen import filter_unseen, seen_base
 
 
 def _host_col(id_col, n_hosts: int):
@@ -98,27 +99,16 @@ def frontier_throughput_job(
         else spark.range(n_candidates // 2)
     )
     # the seen set enters the timed section the way the engine serves it: as
-    # the flush-cadence BASE — hash-partitioned and sorted on the join keys,
-    # checkpointed with AQE off so the layout survives (engine._seen_base).
-    # The per-round cost being measured is then candidates-only, which is
-    # the engine's actual round shape; the base build happens once per
-    # flush cycle, outside any round.
+    # the flush-cadence BASE in the seen_base layout. The per-round cost
+    # being measured is then candidates-only, which is the engine's actual
+    # round shape; the base build happens once per flush cycle, outside any
+    # round (materialized here, outside the timing).
     spark_ = seen_ids.sparkSession
-    n_parts = int(spark_.conf.get("spark.sql.shuffle.partitions"))
-    seen_plan = (
+    seen = seen_base(
         seen_ids.select(
             canonical_col(F.col("id"), _host_col(F.col("id"), n_hosts)).alias("url")
-        )
-        .withColumn("url_hash", url_hash_col(F.col("url")))
-        .repartition(n_parts, F.col("url_hash"), F.col("url"))
-        .sortWithinPartitions("url_hash", "url")
+        ).withColumn("url_hash", url_hash_col(F.col("url")))
     )
-    prev_aqe = spark_.conf.get("spark.sql.adaptive.enabled")
-    spark_.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        seen = seen_plan.localCheckpoint()  # materialized outside the timing
-    finally:
-        spark_.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
     # budgets are per-crawl static (the engine builds+checkpoints them once,
     # engine.__init__) — build them JVM-side, OUTSIDE the timed round: a
@@ -184,14 +174,10 @@ def crawl_e2e_job(spark: SparkSession, warehouse: str,
     # size shuffle width to the (tiny) per-round state: the e2e number
     # measures round mechanics, not shuffle fan-out (the fan-out story is
     # frontier_throughput_job); on a cluster this is set per input size
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    t0 = time.monotonic()
-    try:
+    with sizing.pinned_shuffle_width(spark, 8):
+        t0 = time.monotonic()
         eng.run()
         elapsed = time.monotonic() - t0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return {
         "rounds": eng.round,
         "visited": eng.visited_count,

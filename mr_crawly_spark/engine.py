@@ -25,7 +25,6 @@ only runs on rounds that can actually hit the budget (short-circuit).
 from __future__ import annotations
 
 import logging
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -34,6 +33,7 @@ from pyspark.sql import functions as F
 log = logging.getLogger("mr_crawly_spark.engine")
 
 from mr_crawly_spark import schemas as S
+from mr_crawly_spark import sizing
 from mr_crawly_spark.datagen import (
     BACKOFF,
     DEFAULT_CRAWL_DELAY,
@@ -60,14 +60,6 @@ from mr_crawly_spark.operators.politeness import (
 from mr_crawly_spark.operators.sitemap import bootstrap_frontier_urls, expand_sitemaps
 from mr_crawly_spark.plans.catalog import SnapshotCatalog
 from mr_crawly_spark.sources.corpus import CorpusFetcher
-
-# Pages per task of the canonicalizer's Python stage (see _python_width),
-# from two costs measured on a 4-CPU host: each Arrow-UDF task pays a fixed
-# ~0.2 worker CPU-s whatever its row count, and each href costs ~7.6 us.
-# The fixed cost equals the per-row work at ~26k hrefs, ~260 pages at 100
-# links per page; so a task gets ~250 pages, and the fixed cost stays at
-# most about half of a full task's Python time.
-PAGES_PER_PYTHON_TASK = 250
 
 
 @dataclass
@@ -167,23 +159,6 @@ class CrawlConfig:
     throttle_fail_threshold: float = 0.3
     throttle_decrease: float = 0.5
     throttle_increase: float = 0.25
-    # width of the round's materializing checkpoint and the flush deltas:
-    # max(min_write_partitions, ceil(rows / rows_per_write_task)). At
-    # sandbox scale this floors at min_write_partitions (bounded file
-    # count); a cluster round of millions of touched rows widens instead of
-    # funneling its final projection through 8 tasks (verdict r2 #2).
-    rows_per_write_task: int = 1_000_000
-    min_write_partitions: int = 8
-    # AQE gate for the round's materializing actions: a round whose
-    # touched-row upper bound is below this runs them with AQE OFF. On a
-    # small round, wall time is pure driver latency — AQE turns the fused
-    # round job into ~26 sequential sub-jobs (one per exchange, each with
-    # a driver re-planning gap; measured on the bench corpus), while its
-    # skew-split/coalesce value only exists when partitions carry real
-    # data. Large rounds keep AQE on (the hot-host skew story needs it).
-    # The rule itself is scale-adaptive: a cluster round over millions of
-    # touched rows takes the AQE branch automatically.
-    aqe_small_round_rows: int = 200_000
 
 
 def _throttle_outcomes(processed: DataFrame) -> DataFrame:
@@ -528,29 +503,18 @@ class CrawlEngine:
         ).unionByName(self._frontier_updates)
 
     def _seen_base(self) -> DataFrame:
-        """The seen-set BASE: as-of the last flush, hash-partitioned AND
-        sorted on the join keys, lineage-cut. Rebuilt only at flush cadence.
-
-        The layout is the point: the per-round anti-join's merge side is
-        already clustered+ordered on (url_hash, url), so EnsureRequirements
-        inserts NO exchange and NO sort on the seen side — each round
-        shuffles only its (slice-sized) candidates. At a 10^10-row seen set
-        that converts a full-table shuffle+sort per round into one partition
-        pass at flush cadence. (localCheckpoint must run with AQE off: under
-        AQE the captured plan reports UnknownPartitioning and the layout is
-        lost — verified in tests/test_plans.py.)
+        """The seen-set BASE: as-of the last flush, in the seen_ops.seen_base
+        layout (partitioned and sorted on the join keys, lineage-cut), so
+        each round's anti-join shuffles only its candidates. Rebuilt only
+        at flush cadence.
 
         Rows seen SINCE the flush live in self._deltas["seen"]; the round's
         membership test anti-joins base first, then the (small) delta union
         — exact either way."""
         if self._seen is None:
-            loaded = self.catalog.load("seen", max_round=self.round)
-            n_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            part = loaded.repartition(
-                n_parts, F.col("url_hash"), F.col("url")
-            ).sortWithinPartitions("url_hash", "url")
-            with self._aqe(enabled=False):
-                self._seen = part.localCheckpoint()
+            self._seen = seen_ops.seen_base(
+                self.catalog.load("seen", max_round=self.round)
+            )
         return self._seen
 
     def _pages_cache_view(self) -> DataFrame | None:
@@ -692,51 +656,12 @@ class CrawlEngine:
         row = df.agg(*self._rc["aggs"]).first()
         return {k: int(row[k] or 0) for k in self._OUTCOME_KEYS}
 
-    @contextmanager
-    def _aqe(self, enabled: bool):
-        """Temporarily pin spark.sql.adaptive.enabled for a materializing
-        action (see CrawlConfig.aqe_small_round_rows)."""
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.adaptive.enabled")
-        want = "true" if enabled else "false"
-        if prev == want:
-            yield
-            return
-        conf.set("spark.sql.adaptive.enabled", want)
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev)
-
-    def _write_width(self, approx_rows: int | None) -> int:
-        """Partition width for a materializing write, scaled off the caller's
-        driver-tracked row bound (never a count job). Floors at
-        min_write_partitions so tiny rounds keep small file counts."""
-        if approx_rows is None:
-            return self.cfg.min_write_partitions
-        return max(
-            self.cfg.min_write_partitions,
-            -(-int(approx_rows) // self.cfg.rows_per_write_task),
-        )
-
-    def _python_width(self, bound: int | None) -> int | None:
-        """Partition width of a canonicalizer stage for ``bound`` input
-        rows: ceil(bound / PAGES_PER_PYTHON_TASK), at least 1. None (keep
-        the upstream width, add no exchange) when the bound is unknown or
-        the width would not be below the session's shuffle width, the
-        width the stage inherits from the slice's shuffle."""
-        if bound is None:
-            return None
-        width = max(1, -(-int(bound) // PAGES_PER_PYTHON_TASK))
-        upstream = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return width if width < upstream else None
-
     def _robots_row_bound(self) -> int:
         """Rules-table row count, measured ONCE per crawl (the frame is
         checkpointed and static). It size-gates both the robots-rules and
-        the per-host-budgets broadcast: under BROADCAST_ROW_LIMIT the hint
-        is forced, above it the joins are left to AQE (verdict r2 #1 — an
-        unconditional broadcast OOMs the driver at ~10^7 ruled hosts).
+        the per-host-budgets broadcast: under sizing.BROADCAST_ROW_LIMIT the
+        hint is forced, above it the joins are left to AQE (verdict r2 #1 —
+        an unconditional broadcast OOMs the driver at ~10^7 ruled hosts).
         budgets has at most one row per ruled host, so the same bound
         covers it."""
         if self._robots_rows is None:
@@ -808,26 +733,33 @@ class CrawlEngine:
             self.pending_count is None
             or self.visited_count + self.pending_count > self.cfg.max_pages
         )
-        # small-round AQE gate (CrawlConfig.aqe_small_round_rows): decide
-        # once per round off the same driver-tracked bound the write width
-        # uses — unknown bounds (fresh resume) keep AQE on
+        # the round's touched-row bound: carried updates + this round's
+        # slice (at most pending_count) + last round's link discovery as
+        # the new-url proxy (exact counts only exist after materialization
+        # — an underestimate just means slightly larger partitions, never
+        # wrong results). It sizes the update checkpoint, and decides AQE
+        # for every materializing action of the round; an unknown pending
+        # count (fresh resume) keeps AQE on.
         round_bound = (
-            None
-            if self.pending_count is None
-            else self._updates_count
-            + self.pending_count
+            self._updates_count
+            + (self.pending_count or 0)
             + int(self._last_metrics.get("new_urls", 0) or 0)
         )
-        small_round = (
-            round_bound is not None
-            and round_bound < self.cfg.aqe_small_round_rows
+        aqe_on = sizing.use_aqe(
+            None if self.pending_count is None else round_bound
+        )
+        write_width = sizing.write_width(round_bound)
+        # The slice processes at most pending_count pages, the bound the
+        # fetch broadcast gate uses too.
+        py_width = sizing.python_width(
+            self.pending_count, sizing.shuffle_width(self.spark)
         )
         obs_cls: Observation | None = None
         cnt: dict | None = None
         if budget_risk:
             classified = classified_base.persist()
             self._round_persists.append(classified)
-            with self._aqe(enabled=not small_round):
+            with sizing.aqe(self.spark, aqe_on):
                 cnt = self._outcome_counts(classified)  # eager job
             if cnt["n"] == 0:
                 self.round = r
@@ -853,7 +785,7 @@ class CrawlEngine:
                 ).persist()
                 self._round_persists.append(classified)  # both released at flush
                 processed = classified.filter(F.col("_processed"))
-                with self._aqe(enabled=not small_round):
+                with sizing.aqe(self.spark, aqe_on):
                     cnt = self._outcome_counts(processed)
             else:
                 processed = classified
@@ -912,11 +844,8 @@ class CrawlEngine:
         # --- parse + links (A1/A2/F1/D1/A4, S7) ------------------------------
         # persisted: feeds the links sink AND the seen/frontier merge — without
         # it the canonicalize UDF + dedup shuffles would run once per consumer.
-        # The slice processes at most pending_count pages, the bound the
-        # fetch broadcast gate uses too.
         links_pairs = extract_outlinks(
-            successes.select("url", "host", "spans"),
-            width=self._python_width(self.pending_count),
+            successes.select("url", "host", "spans"), width=py_width
         ).persist()
         self._round_persists.append(links_pairs)
         links_delta = links_pairs.join(
@@ -998,19 +927,9 @@ class CrawlEngine:
         # THE round's materializing action: one localCheckpoint runs the
         # whole pipeline (slice -> fetch -> classify -> parse -> anti-join ->
         # updates); the Observations deliver every count for free. Width
-        # tracks the update-set bound: carried updates + this round's slice
-        # + last round's link discovery as the new-url proxy (exact counts
-        # only exist after materialization — an underestimate just means
-        # slightly larger partitions, never wrong results).
-        updates_bound = (
-            self._updates_count
-            + (self.pending_count or 0)
-            + int(self._last_metrics.get("new_urls", 0) or 0)
-        )
-        with self._aqe(enabled=not small_round):
-            updates_ck = round_updates.coalesce(
-                self._write_width(updates_bound)
-            ).localCheckpoint()
+        # tracks the round bound.
+        with sizing.aqe(self.spark, aqe_on):
+            updates_ck = round_updates.coalesce(write_width).localCheckpoint()
         n_new = int(obs_new.get["n_new"] or 0)
         if cnt is None:
             cnt = {k: int(obs_cls.get[k] or 0) for k in self._OUTCOME_KEYS}
@@ -1085,9 +1004,11 @@ class CrawlEngine:
             self._throttle = t_new if t_new.count() > 0 else None
         log.info(
             "round %d: slice=%d ok=%d denied=%d 404=%d retry=%d new=%d "
-            "visited=%d pending=%s",
+            "visited=%d pending=%s aqe=%s write_width=%d py_width=%s",
             r, n_slice, n_ok, cnt["denied"], cnt["err404"], cnt["retries"],
             n_new, self.visited_count, self.pending_count,
+            "on" if aqe_on else "off", write_width,
+            "-" if py_width is None else py_width,
         )
         if r % self.cfg.checkpoint_interval == 0:
             self.flush()
@@ -1102,20 +1023,17 @@ class CrawlEngine:
         r = self.round
         if self._flushed_round == r:
             return
-        # same small-round AQE gate as run_round: the flush writes are
-        # bounded by the touched-row counter (links fans out ~4x), except
-        # a compaction flush which rewrites the whole frontier
+        # same AQE rule as run_round: the flush writes are bounded by the
+        # touched-row counter (links fans out), except a compaction flush,
+        # which rewrites the whole frontier (unknown count: AQE on)
         will_compact = (
             self._frontier_updates is not None
             and self._flushes_since_compact + 1 >= self.cfg.compact_every
         )
-        gate_rows = self._updates_count * 4
+        rows = self._updates_count * sizing.LINKS_FANOUT
         if will_compact:
-            gate_rows = max(
-                gate_rows,
-                self.frontier_count or self.cfg.aqe_small_round_rows,
-            )
-        with self._aqe(enabled=gate_rows >= self.cfg.aqe_small_round_rows):
+            rows = max(rows, self.frontier_count) if self.frontier_count else None
+        with sizing.aqe(self.spark, sizing.use_aqe(rows)):
             self._flush_impl(r)
 
     def _flush_impl(self, r: int) -> None:
@@ -1158,9 +1076,9 @@ class CrawlEngine:
             # width off the touched-row bound since the last flush (the
             # update-set counter upper-bounds every per-table delta
             # except links, which fans out per page — scale it)
-            bound = touched * (4 if table == "links" else 1)
+            bound = touched * (sizing.LINKS_FANOUT if table == "links" else 1)
             self.catalog.commit(
-                table, df.coalesce(self._write_width(bound)), r, mode="delta"
+                table, df.coalesce(sizing.write_width(bound)), r, mode="delta"
             )
             self._deltas[table] = []
 

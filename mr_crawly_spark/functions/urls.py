@@ -272,7 +272,7 @@ def _canonicalize_udf_det(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
     80% of it is pyspark's per-task ``setup_spark_files``, whose
     ``importlib.invalidate_caches()`` makes every cached zipimporter
     re-read the pyspark.zip directory. So callers size the UDF's stage
-    from their row bound (engine._python_width) instead of letting it
+    from their row bound (sizing.python_width) instead of letting it
     inherit the upstream shuffle width.
     """
     return canonicalize_pairs(bases, hrefs)

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from mr_crawly_spark import sizing
 from mr_crawly_spark.functions.text import (
     fingerprint,
     shingles,
@@ -490,12 +491,11 @@ def connected_components(
     # checkpointed edge frame carries no stats, so the planner would
     # otherwise sort-merge both star joins every round); past it the
     # shuffle join is the right shape for cluster-sized graphs
-    _BC_LIMIT = 2_000_000
     for _ in range(max_iterations):
         rounds += 1
 
         def bc(state: DataFrame) -> DataFrame:
-            return F.broadcast(state) if n_edges <= _BC_LIMIT else state
+            return sizing.broadcast_if_small(state, n_edges)
 
         # --- large-star: larger neighbors attach to u's min neighborhood --
         m_large = (

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from mr_crawly_spark import sizing
 from mr_crawly_spark.datagen import DEFAULT_PRIORITY
 from mr_crawly_spark.functions.colcache import session_cached
 from mr_crawly_spark.functions.urls import url_hash_col, url_host_col
@@ -51,11 +52,9 @@ def select_slice(
 
     ``budget_rows``: caller's upper bound on the budgets table (one row per
     host with robots rules). The broadcast is forced only under
-    sources.corpus.BROADCAST_ROW_LIMIT — at ~10^7+ ruled hosts the budgets
-    frame is left to AQE instead of an unconditional driver broadcast.
+    sizing.BROADCAST_ROW_LIMIT — at ~10^7+ ruled hosts the budgets frame
+    is left to AQE instead of an unconditional driver broadcast.
     """
-    from mr_crawly_spark.sources.corpus import BROADCAST_ROW_LIMIT
-
     def build_static() -> dict:
         """Round-invariant plan fragments (colcache): the slice runs every
         crawl round; only the t_round literal varies."""
@@ -93,9 +92,7 @@ def select_slice(
         build_static,
     )
     eligible = frontier.filter(c["pending"] & (c["next_at"] <= F.lit(t_round)))
-    b = budgets
-    if budget_rows is not None and budget_rows <= BROADCAST_ROW_LIMIT:
-        b = F.broadcast(b)
+    b = sizing.broadcast_if_small(budgets, budget_rows)
     eligible = eligible.join(b, "host", "left").withColumn("k_host", c["k_host"])
     pri = F.col("priority")
     if ranks is not None:
@@ -294,18 +291,6 @@ def apply_updates(frontier: DataFrame, updates: DataFrame) -> DataFrame:
     )
 
 
-# Size gate for broadcasting the O(nodes) iteration state of the link-
-# analysis loops (pagerank/hits). localCheckpoint()ed frames carry no
-# size statistics, so without the hint every per-iteration join of the
-# (cached, large) edge table against the (small) state frame planned as a
-# sort-merge join — re-exchanging and re-sorting the edges every
-# half-step. Under the gate the state is broadcast (per-iteration cost =
-# one map-side hash join + one combined agg exchange); past it the plan
-# falls back to the shuffle join, which is the right shape for
-# billion-node graphs where the state itself is too big to ship.
-BROADCAST_STATE_ROW_LIMIT = 2_000_000
-
-
 def pagerank(
     edges: DataFrame,
     n_iterations: int = 10,
@@ -347,7 +332,7 @@ def pagerank(
 
     def bc(state: DataFrame) -> DataFrame:
         # state frames carry <= n rows by construction
-        return F.broadcast(state) if n <= BROADCAST_STATE_ROW_LIMIT else state
+        return sizing.broadcast_if_small(state, n)
 
     for _ in range(n_iterations):
         rk = bc(ranks)
@@ -416,7 +401,7 @@ def hits(
 
     def bc(state: DataFrame) -> DataFrame:
         # mass/score frames carry <= n rows by construction
-        return F.broadcast(state) if n <= BROADCAST_STATE_ROW_LIMIT else state
+        return sizing.broadcast_if_small(state, n)
 
     def _half_step(
         mass: DataFrame, mass_col: str, out_col: str, key_in: str, key_out: str
@@ -431,7 +416,7 @@ def hits(
         set every half-step — 2·n_iterations joins of the whole graph's
         node table — changes no score. Zeros are restored once, at the
         final left join (measured 10.9 s → ~7 s at sf0.1, same output).
-        The mass side is broadcast under BROADCAST_STATE_ROW_LIMIT so the
+        The mass side is broadcast under sizing.BROADCAST_ROW_LIMIT so the
         cached edge table is probed map-side instead of re-exchanged and
         re-sorted twice per iteration; the scalar max stays a partial-
         aggregated collect (scale-safe — a single-partition window over

@@ -12,7 +12,7 @@ wins via a ``min(struct(rule_order, allow))`` aggregation (struct min orders
 lexicographically, rule_order first). At 10^10-URL scale the robots table
 for the crawled hosts is millions of rows, so the broadcast is SIZE-GATED
 like the fetch join (sources/corpus.py): forced only when the caller's row
-bound fits BROADCAST_ROW_LIMIT, else the plan is left to AQE to pick
+bound fits sizing.BROADCAST_ROW_LIMIT, else the plan is left to AQE to pick
 broadcast vs host-partitioned shuffle from runtime sizes. There is no
 Python in the hot path either way.
 """
@@ -22,13 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mr_crawly_spark import sizing
 from mr_crawly_spark.datagen import (
     DEFAULT_CRAWL_DELAY,
     MAX_PER_HOST_PER_ROUND,
     ROUND_SECONDS,
 )
 from mr_crawly_spark.functions.urls import url_path_col
-from mr_crawly_spark.sources.corpus import BROADCAST_ROW_LIMIT
 
 
 def robots_gate(
@@ -44,8 +44,9 @@ def robots_gate(
 
     ``approx_rule_rows``: caller's cheap upper bound on the rules-table size
     (the engine counts its checkpointed robots frame once per crawl). The
-    broadcast is FORCED only under BROADCAST_ROW_LIMIT; unknown or huge ->
-    plain join, AQE converts to broadcast at runtime iff actually small.
+    broadcast is FORCED only under sizing.BROADCAST_ROW_LIMIT; unknown or
+    huge -> plain join, AQE converts to broadcast at runtime iff actually
+    small.
     """
     from mr_crawly_spark.functions.colcache import session_cached
 
@@ -63,9 +64,10 @@ def robots_gate(
         },
     )
     cand = candidates.withColumn("_path", c["path"])
-    rules = robots.select("host", "rule_order", "allow", "path_prefix")
-    if approx_rule_rows is not None and approx_rule_rows <= BROADCAST_ROW_LIMIT:
-        rules = F.broadcast(rules)
+    rules = sizing.broadcast_if_small(
+        robots.select("host", "rule_order", "allow", "path_prefix"),
+        approx_rule_rows,
+    )
     matched = (
         cand.select("url", "host", "_path")
         .join(rules, "host", "inner")

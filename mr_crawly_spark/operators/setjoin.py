@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mr_crawly_spark import sizing
+
 
 def _sorted_token_arrays(
     docs: DataFrame, id_col: str, text_col: str, shingle: int = 1
@@ -142,9 +144,7 @@ def similarity_join(
     # Explicit-width repartitions on the candidate side are exempt from
     # coalescing and carry only (id_a, id_b) pairs; the width is the
     # session's shuffle-partition setting, i.e. cluster-adaptive.
-    n_parts = int(
-        docs.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_parts = sizing.shuffle_width(docs.sparkSession)
     return (
         cand.repartition(n_parts, "id_a")
         .join(ta, "id_a")

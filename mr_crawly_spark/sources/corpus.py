@@ -20,13 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mr_crawly_spark import schemas as S
+from mr_crawly_spark import sizing
 
 N_BUCKETS = 64
-# above this many build-side rows (fetch slice, robots rules, host budgets)
-# we stop FORCING a broadcast and let AQE pick the physical join from runtime
-# sizes (a 10^7-hosts round could put ~10^8 rows in the slice — force-
-# broadcasting that OOMs the driver; round-1 verdict #3)
-BROADCAST_ROW_LIMIT = 1_000_000
 
 
 def write_bucketed_corpus(documents: DataFrame, path: str, n_buckets: int = N_BUCKETS) -> None:
@@ -73,10 +69,10 @@ class CorpusFetcher:
 
         ``approx_rows``: caller's cheap upper bound on the slice size (the
         engine passes its driver-tracked pending count). The broadcast hint
-        is only FORCED when that bound fits BROADCAST_ROW_LIMIT; otherwise
-        the plan is left to AQE, which converts to broadcast at runtime iff
-        the actual built side is small — never an unconditional 10^8-row
-        broadcast (round-1 verdict #3).
+        is only FORCED when that bound fits sizing.BROADCAST_ROW_LIMIT;
+        otherwise the plan is left to AQE, which converts to broadcast at
+        runtime iff the actual built side is small — never an unconditional
+        10^8-row broadcast (round-1 verdict #3).
         """
         corp = self.df.select(F.col("doc_id").alias("url"), "spans", *(
             ["bucket"] if self.bucketed else []
@@ -93,13 +89,12 @@ class CorpusFetcher:
                 .collect()
             ]
             corp = corp.filter(F.col("bucket").isin(buckets)).drop("bucket")
-        force_bcast = approx_rows is not None and approx_rows <= BROADCAST_ROW_LIMIT
-        built = F.broadcast(slice_df) if force_bcast else slice_df
         # found: stream the (pruned) corpus, build side = the slice
-        found = corp.join(built, "url", "inner")
-        found_urls = found.select("url")
+        found = corp.join(
+            sizing.broadcast_if_small(slice_df, approx_rows), "url", "inner"
+        )
         missed = slice_df.join(
-            F.broadcast(found_urls) if force_bcast else found_urls,
+            sizing.broadcast_if_small(found.select("url"), approx_rows),
             "url",
             "left_anti",
         ).withColumn("spans", F.lit(None).cast(S.DOCUMENTS["spans"].dataType))

@@ -6,38 +6,25 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mr_crawly_spark import sizing
+
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
 
-# Parallelism restore (r06, guide §2.5 "input skew"): the fixture tables
-# arrive as ONE parquet file with ONE row group, so a scan — and every
-# map operator whole-stage-fused into it (hashing, shingling, explodes,
-# partial aggregation: most of each query's CPU) — runs on a single core
-# regardless of session width (measured: the cms build stage ran 3 tasks,
-# one of which did all 600k rows' work). A parquet row group is the unit
-# of split parallelism, so byte-range splitting cannot help; a cheap
-# round-robin exchange right after the scan can. Gates keep the rule
-# scale-honest rather than local-tuned:
-#  - only when the file layout's natural split count (row groups across
-#    files) is below the session parallelism — a cluster-sized table with
-#    hundreds of row groups is left alone;
-#  - only under a byte ceiling (the exchange must be trivially cheap;
-#    big inputs have enough natural splits anyway);
-#  - only past a row floor (5-row dimension tables would pay scheduling
-#    overhead for nothing).
-_REPARTITION_BYTE_CEILING = 1 << 30
-_REPARTITION_ROW_FLOOR = 500
-
-_layout_cache: dict[str, tuple[int, int, int]] = {}
+# footer reads keyed on (path, st_mtime_ns, st_size): a file rewritten at
+# the same path gets a new key, so its layout is read again
+_layout_cache: dict[tuple[str, int, int], tuple[int, int, int]] = {}
 
 
 def _parquet_layout(path: str) -> tuple[int, int, int]:
     """(total_bytes, total_rows, total_row_groups) for a parquet file or
     directory of files, read from footers on the driver (no Spark job)."""
-    if path in _layout_cache:
-        return _layout_cache[path]
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key in _layout_cache:
+        return _layout_cache[key]
     import pyarrow.parquet as pq
 
     files = []
@@ -54,11 +41,13 @@ def _parquet_layout(path: str) -> tuple[int, int, int]:
         meta = pq.ParquetFile(f).metadata
         total_rows += meta.num_rows
         total_groups += meta.num_row_groups
-    _layout_cache[path] = (total_bytes, total_rows, total_groups)
-    return _layout_cache[path]
+    _layout_cache[key] = (total_bytes, total_rows, total_groups)
+    return _layout_cache[key]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan of table ``name``, round-robin repartitioned when its file
+    layout would leave cores idle (sizing.scan_width)."""
     assert name in TABLES, name
     path = os.path.join(sf_dir, f"{name}.parquet")
     df = spark.read.parquet(path)
@@ -66,11 +55,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         total_bytes, total_rows, total_groups = _parquet_layout(path)
     except Exception:
         return df  # unreadable footer: serve the plain scan
-    width = spark.sparkContext.defaultParallelism
-    if (
-        total_groups < width
-        and total_bytes < _REPARTITION_BYTE_CEILING
-        and total_rows >= _REPARTITION_ROW_FLOOR
-    ):
-        df = df.repartition(width)
-    return df
+    width = sizing.scan_width(
+        total_groups, total_bytes, total_rows,
+        spark.sparkContext.defaultParallelism,
+    )
+    return df if width is None else df.repartition(width)

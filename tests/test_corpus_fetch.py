@@ -53,8 +53,8 @@ def test_bucket_pruning_reads_only_needed_buckets(spark, tiny_corpus, tmp_path):
 
 def test_fetch_broadcast_is_size_gated(spark, tiny_corpus, tmp_path):
     """verdict #3: the slice is broadcast only when the caller's row bound
-    fits BROADCAST_ROW_LIMIT; a huge bound leaves the plan to AQE instead of
-    force-broadcasting ~10^8 rows through the driver."""
+    fits sizing.BROADCAST_ROW_LIMIT; a huge bound leaves the plan to AQE
+    instead of force-broadcasting ~10^8 rows through the driver."""
     docs, *_ = corpus_to_spark(spark, tiny_corpus)
     corpus_path = str(tmp_path / "corpus3")
     write_bucketed_corpus(docs, corpus_path, n_buckets=8)

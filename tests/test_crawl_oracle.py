@@ -237,12 +237,12 @@ def test_python_stage_width_does_not_change_the_crawl(
     pages as the shuffle width gets None: no repartition, the plan every
     round ran before the stage was sized. Both must give the oracle's
     crawl."""
-    import mr_crawly_spark.engine as engine_mod
+    from mr_crawly_spark import sizing
 
     o = OracleCrawler(tiny_corpus).run()
     want = (o.crawl_order, o.seen, o.links)
     narrow, got_narrow = _crawl_with_widths(spark, tiny_corpus, monkeypatch)
-    monkeypatch.setattr(engine_mod, "PAGES_PER_PYTHON_TASK", 1)
+    monkeypatch.setattr(sizing, "PAGES_PER_PYTHON_TASK", 1)
     wide, got_wide = _crawl_with_widths(spark, tiny_corpus, monkeypatch)
     assert set(narrow) == {1}
     assert None in wide

@@ -256,6 +256,12 @@ def test_config_from_toml(tmp_path):
     retired.write_text("[crawl]\nuse_bloom = true\n")
     with pytest.raises(ValueError, match="unknown \\[crawl\\] keys"):
         config_from_toml(str(retired), "/tmp/wh")
+    # size rules live in sizing.py; their retired knobs are unknown keys too
+    for knob in ("aqe_small_round_rows", "rows_per_write_task",
+                 "min_write_partitions"):
+        retired.write_text(f"[crawl]\n{knob} = 1\n")
+        with pytest.raises(ValueError, match=knob):
+            config_from_toml(str(retired), "/tmp/wh")
 
 
 def test_cli_toml_merge_precedence(tmp_path):
@@ -290,48 +296,41 @@ def test_cli_toml_merge_precedence(tmp_path):
             build_parser().parse_args(["--warehouse", "/tmp/wh", retired])
 
 
-def test_python_width_is_ceil_of_bound(crawled):
-    """The canonicalizer stage width: an unknown bound keeps the upstream
-    width (None), an empty round still gets one task, otherwise
-    ceil(bound / PAGES_PER_PYTHON_TASK) while that is below the session's
-    shuffle width (8 here), and None (no repartition) from there on."""
-    from mr_crawly_spark.engine import PAGES_PER_PYTHON_TASK as per
-
-    eng, _ = crawled
-    width = eng._python_width
-    assert eng.spark.conf.get("spark.sql.shuffle.partitions") == "8"
-    assert width(None) is None
-    assert width(0) == 1
-    assert width(1) == 1
-    assert width(per) == 1
-    assert width(per + 1) == 2
-    assert width(7 * per) == 7
-    assert width(7 * per + 1) is None
-    assert width(10**10) is None
-
-
-def test_write_width_scales_with_round_volume(spark, tiny_corpus, crawled):
+def test_write_width_scales_with_round_volume(
+    spark, tiny_corpus, crawled, monkeypatch, caplog
+):
     """verdict r2 #2: the round's materializing checkpoint width is a
     function of the touched-row bound, not a hard-coded coalesce(8) — a
-    cluster round of millions of rows must not funnel through 8 tasks."""
-    # pure width math first
-    eng = _engine(spark, tiny_corpus, rows_per_write_task=1_000_000)
-    assert eng._write_width(None) == 8
-    assert eng._write_width(100) == 8          # sandbox floor
-    assert eng._write_width(80_000_000) == 80  # cluster round widens
-    # end-to-end: coalesce is a CAP — it follows the natural (shuffle)
-    # partitioning up to the computed width. With 24 shuffle partitions and
-    # rows_per_write_task=1 the frontier delta must land with >8 files
-    # (the old hard-coded coalesce(8) always funneled to <=8).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "24")
-    try:
-        wide = _engine(
-            spark, tiny_corpus, rows_per_write_task=1, checkpoint_interval=1
-        )
+    cluster round of millions of rows must not funnel through 8 tasks
+    (the width math itself: tests/test_sizing.py). Each round's log line
+    reports the size decisions it took."""
+    import logging
+    import re
+
+    from mr_crawly_spark import sizing
+
+    # coalesce is a CAP — it follows the natural (shuffle) partitioning up
+    # to the computed width. With 24 shuffle partitions and one row per
+    # write task the frontier delta must land with >8 files (the old
+    # hard-coded coalesce(8) always funneled to <=8).
+    monkeypatch.setattr(sizing, "ROWS_PER_WRITE_TASK", 1)
+    # config.setup_logging stops propagation; caplog listens on the root
+    monkeypatch.setattr(logging.getLogger("mr_crawly_spark"), "propagate", True)
+    with sizing.pinned_shuffle_width(spark, 24), caplog.at_level(
+        logging.INFO, logger="mr_crawly_spark.engine"
+    ):
+        wide = _engine(spark, tiny_corpus, checkpoint_interval=1)
         wide.run()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    # a tiny round: AQE off, one Python task, a write width of one task
+    # per touched row (floored at 8)
+    decisions = [
+        re.search(r"aqe=(\w+) write_width=(\d+) py_width=(\S+)$", m).groups()
+        for m in caplog.messages
+        if re.match(r"round \d+: ", m)
+    ]
+    assert decisions
+    assert {(aqe, py) for aqe, _, py in decisions} == {("off", "1")}
+    assert max(int(w) for _, w, _ in decisions) > 8
     deltas = [
         mm for mm in wide.catalog._manifests("frontier") if mm["kind"] == "delta"
     ]

@@ -213,22 +213,17 @@ def test_slice_window_has_map_side_group_limit(spark):
 
 
 def test_seen_base_layout_skips_exchange_and_sort(spark):
-    """The engine's seen BASE (repartition + sortWithinPartitions on the
-    join keys, localCheckpoint'ed with AQE off) must satisfy the anti-join's
-    distribution+ordering so EnsureRequirements touches ONLY the candidate
-    side — the mechanism that keeps a 10^10-row seen set from being
-    reshuffled and re-sorted every round (engine._seen_base)."""
+    """The engine's seen BASE (seen.seen_base: repartition +
+    sortWithinPartitions on the join keys, localCheckpoint'ed with AQE off)
+    must satisfy the anti-join's distribution+ordering so EnsureRequirements
+    touches ONLY the candidate side — the mechanism that keeps a 10^10-row
+    seen set from being reshuffled and re-sorted every round."""
+    from mr_crawly_spark.operators.seen import seen_base
+
     seen = spark.range(100000).select(
         F.concat(F.lit("https://h/p/"), F.col("id").cast("string")).alias("url")
     ).withColumn("url_hash", F.xxhash64("url"))
-    part = seen.repartition(8, F.col("url_hash"), F.col("url")) \
-               .sortWithinPartitions("url_hash", "url")
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        base = part.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    base = seen_base(seen)
     assert "hashpartitioning" in (
         base._jdf.queryExecution().executedPlan().outputPartitioning().toString()
     )
