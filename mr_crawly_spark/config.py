@@ -14,6 +14,10 @@ Example crawl.toml:
 
     [logging]
     level = "INFO"
+
+The [crawl] keys are exactly CrawlConfig's fields. The PageRank slice
+ordering and the crawl-trap gate have no key: a caller arms them with
+CrawlEngine.refresh_pagerank() / refresh_trap_stats().
 """
 
 from __future__ import annotations

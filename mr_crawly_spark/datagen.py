@@ -259,11 +259,3 @@ def corpus_to_spark(spark, c: Corpus):
     )
     return docs, robots, sitemaps, seeds
 
-
-def write_corpus(spark, c: Corpus, out_dir: str) -> None:
-    """Write the corpus as parquet (documents partitioned for scan parallelism)."""
-    docs, robots, sitemaps, seeds = corpus_to_spark(spark, c)
-    docs.repartition(8).write.mode("overwrite").parquet(f"{out_dir}/documents")
-    robots.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/robots")
-    sitemaps.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/sitemaps_raw")
-    seeds.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/seeds")

@@ -43,8 +43,10 @@ from mr_crawly_spark.datagen import (
     TRANSIENT_FAIL_MOD,
 )
 from mr_crawly_spark.functions.urls import url_hash_col
+from mr_crawly_spark.operators import politeness
 from mr_crawly_spark.operators import seen as seen_ops
 from mr_crawly_spark.operators.frontier import (
+    CHANGE_FREQ_SECONDS,
     new_frontier_entries,
     recrawl_schedule,
     select_slice,
@@ -61,6 +63,13 @@ from mr_crawly_spark.operators.sitemap import bootstrap_frontier_urls, expand_si
 from mr_crawly_spark.plans.catalog import SnapshotCatalog
 from mr_crawly_spark.sources.corpus import CorpusFetcher
 
+# frontier compaction cadence: flushes in between commit only the touched
+# rows as merge-on-read deltas; every COMPACT_EVERY-th flush rewrites the
+# full snapshot. At a 10^10-row frontier the per-round write cost tracks
+# the round's slice, not the table (round-1 verdict #7). The search index
+# (update_search_index) compacts its deltas on the same cadence.
+COMPACT_EVERY = 4
+
 
 @dataclass
 class CrawlConfig:
@@ -69,17 +78,11 @@ class CrawlConfig:
     max_pages: int = 10**9
     max_rounds: int = 100
     salt_partitions: int | None = None   # repartition width for hot-host salting
-    salt: int = 16
     # parquet-snapshot cadence: rounds in between keep state as
     # localCheckpoint()ed in-memory DataFrames (lineage truncated, no disk
     # I/O); resume points exist at flushed rounds only. 1 = flush every
     # round (max resumability), larger = fewer commit jobs per round.
     checkpoint_interval: int = 4
-    # frontier compaction cadence: flushes in between commit only the
-    # touched rows as merge-on-read deltas; every compact_every-th flush
-    # rewrites the full snapshot. At a 10^10-row frontier the per-round
-    # write cost tracks the round's slice, not the table (round-1 verdict #7).
-    compact_every: int = 4
     # page-cache read path (S4/J2, reference cache.py:102-111): re-serve
     # previously fetched 200 content from the pages table instead of
     # refetching (hits occur on recrawl/reparse; the default drain-loop
@@ -99,24 +102,6 @@ class CrawlConfig:
     # k = clamp(ROUND_SECONDS / delay); robots Crawl-delay always wins for
     # hosts that set one. Oracle takes the same value (lockstep).
     default_delay: float = DEFAULT_CRAWL_DELAY
-    # opt-in link-authority frontier ordering (beyond the reference, whose
-    # priority is sitemap-declared only): when enabled AND ranks have been
-    # computed (refresh_pagerank), the round's slice orders by
-    # priority + pagerank_weight * rank. OFF by default — the golden
-    # oracle-lockstep ordering is unchanged unless an operator opts in.
-    use_pagerank_priority: bool = False
-    pagerank_weight: float = 1.0
-    # opt-in crawl-trap gate (beyond the reference; operators/traps.py):
-    # when enabled AND stats have been mined (refresh_trap_stats), each
-    # round's candidate outlinks are rewritten WITHOUT their host's
-    # flagged parameters before the seen anti-join — an infinite URL axis
-    # (session ids, tracking params) collapses to its canonical form
-    # instead of consuming frontier rows and the max_pages budget. OFF by
-    # default — golden oracle-lockstep link/url behavior is unchanged
-    # unless an operator opts in (same contract as use_pagerank_priority).
-    use_trap_gate: bool = False
-    trap_min_urls: int = 20
-    trap_value_ratio: float = 0.5
     # opt-in freshness-measured recrawl ordering (beyond the reference,
     # which trusts sitemap <changefreq>/<priority> at face value;
     # operators/freshness.py, Cho & Garcia-Molina TODS'03): when enabled,
@@ -127,13 +112,12 @@ class CrawlConfig:
     # merely claims they do. Urls without change evidence (single visit)
     # keep their sitemap priority (cold-start policy). OFF by default —
     # golden oracle-lockstep ordering is unchanged unless an operator
-    # opts in (same contract as use_pagerank_priority/use_trap_gate).
+    # opts in (same contract as refresh_pagerank/refresh_trap_stats).
     # The measured revisit CADENCE follows too: next_attempt_at =
-    # t_now + clamp(1/rate, min, max) — hot pages come due sooner, dead
-    # ones settle at the ceiling (never a never-recrawl NULL).
+    # t_now + clamp(1/rate, ROUND_SECONDS, yearly) — hot pages come due
+    # sooner, dead ones settle at the sitemaps.org 'yearly' ceiling (never
+    # a never-recrawl NULL).
     use_freshness: bool = False
-    freshness_min_interval: float = 60.0        # one logical round
-    freshness_max_interval: float = 31536000.0  # 'yearly' (sitemaps.org cap)
     # opt-in content-addressed archive: recrawl cycles append a pages row
     # ONLY when the fetched content differs from the url's latest archived
     # version; every successful visit instead logs a ~100-byte row in the
@@ -154,11 +138,9 @@ class CrawlConfig:
     # State is ephemeral (resets on resume — it re-learns within a few
     # rounds) and holds only currently-throttled hosts. OFF by default —
     # golden oracle-lockstep budgets are unchanged unless an operator
-    # opts in (same contract as the other opt-in gates).
+    # opts in (same contract as the other opt-in gates). The AIMD
+    # constants live in operators/politeness.py (THROTTLE_*).
     use_adaptive_politeness: bool = False
-    throttle_fail_threshold: float = 0.3
-    throttle_decrease: float = 0.5
-    throttle_increase: float = 0.25
 
 
 def _throttle_outcomes(processed: DataFrame) -> DataFrame:
@@ -222,47 +204,7 @@ class CrawlEngine:
         # budget for hosts with no robots rows at all (--delay knob)
         self._default_k = default_k_host(config.default_delay)
         self._robots_rows: int | None = None
-        self.visited_count = 0
-        self.round = 0
-        # driver-tracked counters (exact, updated per round) — avoid
-        # re-counting the frontier every round just to test loop conditions
-        self.pending_count: int | None = None
-        self.frontier_count: int | None = None
-        # flush progress, reset by bootstrap() and resume(): the last fully
-        # flushed round and the round whose frontier delta is committed
-        self._flushed_round: int | None = None
-        self._frontier_committed_round: int | None = None
-        # (url, rank) from the last refresh_pagerank(); None until computed
-        self._ranks: DataFrame | None = None
-        # (host, param, ...) stats from the last refresh_trap_stats();
-        # None until mined — the trap gate stays inert until then
-        self._trap_stats: DataFrame | None = None
-        # adaptive-politeness state (host, mult) — only currently-throttled
-        # hosts; ephemeral by design (resume re-learns in a few rounds)
-        self._throttle: DataFrame | None = None
-        # in-memory state between parquet snapshots. The frontier is held
-        # merge-on-read: an immutable base (last snapshot) + a small
-        # localCheckpoint'ed last-writer-wins update set — a round never
-        # joins or rewrites the full table (scale: verdict #7).
-        self._frontier_base: DataFrame | None = None
-        self._frontier_updates: DataFrame | None = None
-        self._updates_count = 0
-        self._flushes_since_compact = 0
-        self._seen: DataFrame | None = None
-        self._pages_cache: DataFrame | None = None
-        # latest archived fingerprint per url (content-addressed archive
-        # mode): built by schedule_recrawl, None during the first crawl —
-        # the dedup-write filter is a no-op until something is archived
-        self._archive_fp: DataFrame | None = None
-        # armed by schedule_recrawl(): only then can a fetch hit the page
-        # cache, so only then does the fetch path pay the cache joins
-        self._recrawl_mode = False
-        self._deltas: dict[str, list[DataFrame]] = {"pages": [], "links": [], "seen": [], "visits": []}
-        # frames persisted during rounds; released only after flush writes
-        # (pages/links deltas stay LAZY until the flush job — zero extra
-        # materialization jobs per round)
-        self._round_persists: list[DataFrame] = []
-        self._last_metrics: dict = {}
+        self._reset_state(round_=0, visited=0, pending=None, new_crawl=True)
         # round-invariant Column expression trees, built ONCE per engine:
         # rebuilding them every round cost ~1.5k py4j round-trips (~1 s of
         # pure driver latency per round — the dominant share of the
@@ -424,22 +366,11 @@ class CrawlEngine:
         self.catalog.commit_pylist("pages", S.PAGES, [], 0, mode="delta")
         self.catalog.commit_pylist("visits", S.VISITS, [], 0, mode="delta")
         self.catalog.commit_pylist("links", S.LINKS, [], 0, mode="delta")
-        self.round = 0
-        self.visited_count = 0
-        self.pending_count = m["n_rows"]
+        self._reset_state(
+            round_=0, visited=0, pending=m["n_rows"], new_crawl=True
+        )
         self.frontier_count = m["n_rows"]
         self._frontier_base = self.catalog.load("frontier", max_round=0)
-        self._frontier_updates = None
-        self._updates_count = 0
-        self._flushes_since_compact = 0
-        self._seen = None  # base built lazily (partitioned layout) on use
-        self._pages_cache = None
-        self._archive_fp = None
-        self._throttle = None
-        self._recrawl_mode = False
-        self._deltas = {"pages": [], "links": [], "seen": [], "visits": []}
-        self._round_persists = []
-        self._reset_flush_state()
         self._write_run_row(end=False)
         self._write_sitemap_index_json()
         self._commit_round(
@@ -459,30 +390,79 @@ class CrawlEngine:
         # the re-run's fresh commits — duplicate seen/pages/links rows and
         # stale frontier versions. Roll them back first.
         self.catalog.rollback_to(last["round"])
-        self.round = last["round"]
-        self.visited_count = last["visited_count"]
-        self.pending_count = last.get("pending_count")  # None -> recount lazily
-        self.frontier_count = None
-        self._frontier_base = None  # reload (merge-on-read) lazily
-        self._frontier_updates = None
-        self._updates_count = 0
-        self._flushes_since_compact = 0
-        self._seen = None
-        self._pages_cache = None
-        self._archive_fp = None
-        self._throttle = None
-        self._recrawl_mode = bool(last.get("recrawl_mode"))
-        self._deltas = {"pages": [], "links": [], "seen": [], "visits": []}
-        self._round_persists = []
-        self._reset_flush_state()
+        self._reset_state(
+            round_=last["round"],
+            visited=last["visited_count"],
+            pending=last.get("pending_count"),  # None -> recount lazily
+            recrawl_mode=bool(last.get("recrawl_mode")),
+        )
         log.info("resume: round %d, %d visited", self.round, self.visited_count)
         return True
 
-    def _reset_flush_state(self) -> None:
-        """Forget the previous crawl's flush progress — a second run() on
-        the same engine must flush its own rounds."""
-        self._flushed_round = None
-        self._frontier_committed_round = None
+    def _reset_state(
+        self,
+        round_: int,
+        visited: int,
+        pending: int | None,
+        recrawl_mode: bool = False,
+        new_crawl: bool = False,
+    ) -> None:
+        """Reset every in-memory crawl field to the state as of ``round_``
+        (construction, bootstrap() and resume()); the merge-on-read views
+        reload lazily from the catalog. ``new_crawl`` also drops what was
+        mined from an earlier crawl: refresh_pagerank() ranks,
+        refresh_trap_stats() stats and the last round's metrics. A resume
+        continues the same crawl, so it keeps them; a re-bootstrapped
+        engine must not, or the discarded crawl's ranks and trap stats
+        would silently reorder and rewrite the new one."""
+        self.round = round_
+        self.visited_count = visited
+        # driver-tracked counters (exact, updated per round) — avoid
+        # re-counting the frontier every round just to test loop conditions
+        self.pending_count = pending
+        self.frontier_count: int | None = None
+        # flush progress: the last fully flushed round and the round whose
+        # frontier delta is committed — a second run() on the same engine
+        # must flush its own rounds
+        self._flushed_round: int | None = None
+        self._frontier_committed_round: int | None = None
+        # adaptive-politeness state (host, mult) — only currently-throttled
+        # hosts; ephemeral by design (resume re-learns in a few rounds)
+        self._throttle: DataFrame | None = None
+        # in-memory state between parquet snapshots. The frontier is held
+        # merge-on-read: an immutable base (last snapshot) + a small
+        # localCheckpoint'ed last-writer-wins update set — a round never
+        # joins or rewrites the full table (scale: verdict #7).
+        self._frontier_base: DataFrame | None = None
+        self._frontier_updates: DataFrame | None = None
+        self._updates_count = 0
+        self._flushes_since_compact = 0
+        # seen base, built lazily (partitioned layout) on use
+        self._seen: DataFrame | None = None
+        self._pages_cache: DataFrame | None = None
+        # latest archived fingerprint per url (content-addressed archive
+        # mode): built by schedule_recrawl, None during the first crawl —
+        # the dedup-write filter is a no-op until something is archived
+        self._archive_fp: DataFrame | None = None
+        # armed by schedule_recrawl() and persisted in the round payload:
+        # only then can a fetch hit the page cache, so only then does the
+        # fetch path pay the cache joins
+        self._recrawl_mode = recrawl_mode
+        self._deltas: dict[str, list[DataFrame]] = {
+            "pages": [], "links": [], "seen": [], "visits": []
+        }
+        # frames persisted during rounds; released only after flush writes
+        # (pages/links deltas stay LAZY until the flush job — zero extra
+        # materialization jobs per round)
+        self._round_persists: list[DataFrame] = []
+        if new_crawl:
+            # (url, rank) from the last refresh_pagerank(); None until
+            # computed — the slice keeps the golden ordering until then
+            self._ranks: DataFrame | None = None
+            # (host, param, ...) stats from the last refresh_trap_stats();
+            # None until mined — the trap gate stays inert until then
+            self._trap_stats: DataFrame | None = None
+            self._last_metrics: dict = {}
 
     # ------------------------------------------------------------------ #
     # merge-on-read state views
@@ -701,16 +681,14 @@ class CrawlEngine:
             )
         sliced = select_slice(
             frontier, budgets, t,
-            salt_partitions=self.cfg.salt_partitions, salt=self.cfg.salt,
+            salt_partitions=self.cfg.salt_partitions,
             # host_budgets clamps every k_host to this, so the literal cap is
             # lossless — and it unlocks the map-side WindowGroupLimit
             k_cap=MAX_PER_HOST_PER_ROUND,
             budget_rows=self._robots_row_bound(),
             default_k=self._default_k,
-            ranks=(
-                self._ranks if self.cfg.use_pagerank_priority else None
-            ),
-            rank_weight=self.cfg.pagerank_weight,
+            # None until refresh_pagerank() arms the blended ordering
+            ranks=self._ranks,
         )
         gated = robots_gate(
             sliced, self.robots, approx_rule_rows=self._robots_row_bound()
@@ -877,7 +855,7 @@ class CrawlEngine:
         # their host's flagged parameters BEFORE the seen anti-join, so an
         # infinite URL axis (session ids / tracking params) collapses to
         # its canonical form instead of consuming frontier + fetch budget
-        if self.cfg.use_trap_gate and self._trap_stats is not None:
+        if self._trap_stats is not None:
             from mr_crawly_spark.operators.traps import strip_candidate_traps
 
             candidates = strip_candidate_traps(candidates, self._trap_stats)
@@ -995,11 +973,13 @@ class CrawlEngine:
             # same _outcome == 'retry' rows n_transient sums), the fold is
             # provably a no-op, so the checkpoint+count job pair is
             # skipped outright (ADVICE r5 #2).
+            # the AIMD constants are read at call time, so a caller (or a
+            # test) can retune them on the politeness module
             t_new = update_throttle(
                 self._throttle, _throttle_outcomes(processed),
-                fail_threshold=self.cfg.throttle_fail_threshold,
-                decrease=self.cfg.throttle_decrease,
-                increase=self.cfg.throttle_increase,
+                fail_threshold=politeness.THROTTLE_FAIL_THRESHOLD,
+                decrease=politeness.THROTTLE_DECREASE,
+                increase=politeness.THROTTLE_INCREASE,
             ).localCheckpoint()
             self._throttle = t_new if t_new.count() > 0 else None
         log.info(
@@ -1028,7 +1008,7 @@ class CrawlEngine:
         # which rewrites the whole frontier (unknown count: AQE on)
         will_compact = (
             self._frontier_updates is not None
-            and self._flushes_since_compact + 1 >= self.cfg.compact_every
+            and self._flushes_since_compact + 1 >= COMPACT_EVERY
         )
         rows = self._updates_count * sizing.LINKS_FANOUT
         if will_compact:
@@ -1047,7 +1027,7 @@ class CrawlEngine:
             self._frontier_updates is not None
             and self._frontier_committed_round != r
         ):
-            if self._flushes_since_compact + 1 >= self.cfg.compact_every:
+            if self._flushes_since_compact + 1 >= COMPACT_EVERY:
                 merged = self._frontier_view()
                 self.catalog.commit(
                     "frontier", merged, r, mode="snapshot",
@@ -1115,12 +1095,15 @@ class CrawlEngine:
     # ------------------------------------------------------------------ #
     def refresh_pagerank(self, n_iterations: int = 10) -> int:
         """Compute link-authority ranks over the links table and arm the
-        frontier's opt-in PageRank ordering (cfg.use_pagerank_priority):
-        subsequent rounds slice by priority + pagerank_weight * rank. Rank
-        refresh is an explicit operator action (like schedule_recrawl), not
-        a per-round cost — power iteration is n_iterations jobs over the
-        full link graph, so at 10^10-edge scale it runs at recrawl cadence.
-        Returns the number of ranked urls."""
+        frontier's opt-in PageRank ordering: subsequent rounds slice by
+        priority + rank (select_slice's default rank_weight). This is
+        beyond the reference, whose priority is sitemap-declared only.
+        Calling it IS the opt-in: until the first call, and again after a
+        bootstrap(), the golden oracle-lockstep ordering is unchanged.
+        Rank refresh is an explicit operator action (like
+        schedule_recrawl), not a per-round cost — power iteration is
+        n_iterations jobs over the full link graph, so at 10^10-edge scale
+        it runs at recrawl cadence. Returns the number of ranked urls."""
         from mr_crawly_spark.operators.frontier import pagerank
 
         links = self.table("links")  # flushes pending round state first
@@ -1136,23 +1119,27 @@ class CrawlEngine:
     def refresh_trap_stats(self) -> int:
         """Mine per-(host, param) value-cardinality trap stats over every
         URL the crawl has enqueued (the frontier view) and arm the opt-in
-        trap gate (cfg.use_trap_gate): subsequent rounds strip the flagged
-        parameters from candidate outlinks before the seen anti-join. An
-        explicit operator action like refresh_pagerank — stats are ONE
-        map-side-combined agg bounded by the host x param vocabulary, run
-        at recrawl cadence, not per round. Returns the number of flagged
-        (host, param) pairs; 0 leaves the gate armed but inert (clean
-        frontiers pass through byte-identical)."""
+        crawl-trap gate (beyond the reference; operators/traps.py, with
+        trap_param_stats' default thresholds): each later round's
+        candidate outlinks are rewritten WITHOUT their host's flagged
+        parameters before the seen anti-join, so an infinite URL axis
+        (session ids, tracking params) collapses to its canonical form
+        instead of consuming frontier rows and the max_pages budget.
+        Calling it IS the opt-in: until the first call, and again after a
+        bootstrap(), golden oracle-lockstep link/url behavior is
+        unchanged. An explicit operator action like refresh_pagerank —
+        stats are ONE map-side-combined agg bounded by the host x param
+        vocabulary, run at recrawl cadence, not per round. Returns the
+        number of flagged (host, param) pairs; 0 leaves the gate armed but
+        inert (clean frontiers pass through byte-identical)."""
         from mr_crawly_spark.operators.traps import trap_param_stats
 
         frontier = self.table("frontier")  # flushes pending round state
         if frontier is None:
             return 0
-        stats = trap_param_stats(
-            frontier.select("host", "url"),
-            min_urls=self.cfg.trap_min_urls,
-            value_ratio=self.cfg.trap_value_ratio,
-        ).filter(F.col("is_trap"))
+        stats = trap_param_stats(frontier.select("host", "url")).filter(
+            F.col("is_trap")
+        )
         self._trap_stats = stats.localCheckpoint()
         return self._trap_stats.count()
 
@@ -1232,7 +1219,8 @@ class CrawlEngine:
         fetches swap their sitemap priority for the measured staleness
         probability at t_now (measured_change_rates), and their revisit
         cadence for the measured one (next_attempt_at = t_now +
-        clamp(1/rate, freshness_min/max_interval)). Eligibility to be
+        clamp(1/rate, ROUND_SECONDS, CHANGE_FREQ_SECONDS["yearly"]) — one
+        logical round up to the sitemaps.org 'yearly' cap). Eligibility to be
         re-pended still follows change_freq — the sitemap metadata decides
         who is IN the queue; measurement decides order and cadence."""
         if any(self._deltas.values()) or self._frontier_updates is not None:
@@ -1261,17 +1249,17 @@ class CrawlEngine:
                     F.col("status") == "pending"
                 ) & F.col("recrawl_priority").isNotNull()
                 # Cho & Garcia-Molina cadence: revisit interval ~ 1/rate
-                # (expected time between changes), clamped to the config
-                # bounds. rate == 0 (never changed yet) gets the max-
-                # interval ceiling explicitly, not a never-recrawl NULL —
-                # change evidence can go stale too.
-                max_i = F.lit(float(self.cfg.freshness_max_interval))
+                # (expected time between changes), clamped to [one
+                # logical round, 'yearly']. rate == 0 (never changed yet)
+                # gets the max-interval ceiling explicitly, not a
+                # never-recrawl NULL — change evidence can go stale too.
+                max_i = F.lit(CHANGE_FREQ_SECONDS["yearly"])
                 m_interval = F.when(
                     F.col("change_rate") > 0.0,
                     F.least(
                         F.greatest(
                             F.lit(1.0) / F.col("change_rate"),
-                            F.lit(float(self.cfg.freshness_min_interval)),
+                            F.lit(ROUND_SECONDS),
                         ),
                         max_i,
                     ),
@@ -1401,7 +1389,7 @@ class CrawlEngine:
             "n_docs": state["n_docs"] + n_new,
             "deltas": state["deltas"] + 1,
         }
-        if state["deltas"] >= self.cfg.compact_every:
+        if state["deltas"] >= COMPACT_EVERY:
             compact_index(self.spark, path, n_term_buckets=16)
             state["deltas"] = 0
         tmp = marker + ".tmp"

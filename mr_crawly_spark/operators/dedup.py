@@ -971,106 +971,3 @@ def cdc_dedup_ratio(chunks: DataFrame) -> DataFrame:
             4,
         ).alias("dedup_ratio"),
     )
-
-
-# FastCDC-style spread mask: 6 one-bits far from the low end, so the gear
-# hash's boundary test depends on up to ~56 trailing bytes of context
-# (low-bit masks would see only log2(avg_size) bytes — barely
-# content-defined). P(boundary) = 2^-6 = 1/64 per byte.
-CDC_GEAR_MASK = sum(1 << p for p in (16, 24, 32, 40, 48, 56))
-
-
-def _cdc_gear_table():
-    """256-entry uint64 gear table derived from md5 (deterministic across
-    runs/workers — no RNG seed to disagree about)."""
-    import hashlib
-
-    import numpy as np
-
-    return np.array(
-        [
-            int(hashlib.md5(bytes([b])).hexdigest()[:16], 16)
-            for b in range(256)
-        ],
-        dtype=np.uint64,
-    )
-
-
-def cdc_chunks_fast(
-    docs: DataFrame,
-    avg_size: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """The PRODUCTION-speed twin of cdc_chunks: gear rolling hash (FastCDC,
-    Xia et al. USENIX ATC 2016) instead of an md5 per position — O(1) work
-    per byte, here as fully vectorized numpy inside an Arrow mapInPandas
-    (the repo's only sanctioned Python seam). Cut points differ from
-    cdc_chunks' md5-window rule (different hash), but the CONTRACT is the
-    same and is what the tests pin: boundaries depend only on trailing
-    local content, so edits re-align at the next cut point, and expected
-    chunk length is ``avg_size`` bytes (boundary test: gear hash ANDed
-    with a 6-bit SPREAD mask — low-bit masks would shrink the effective
-    context window to log2(avg) bytes).
-
-    Operates on the UTF-8 bytes of ``text_col`` (chunk_len is in BYTES);
-    the same code path handles opaque binary payloads. Output schema
-    matches cdc_chunks: (id_col, chunk_idx, chunk_len, chunk_md5).
-
-    Scale shape: chunking is embarrassingly parallel per row (no shuffle,
-    no state across rows); the gear recurrence h = (h<<1) + gear[b] is
-    evaluated as 64 shifted vector adds over the whole batch's bytes —
-    no per-byte Python. Downstream joins/aggs shuffle 16-byte digests
-    only, exactly like cdc_chunks."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    assert avg_size == 64, "mask is tuned for avg_size=64 (6 spread bits)"
-    mask = np.uint64(CDC_GEAR_MASK)
-
-    def chunk_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gear = _cdc_gear_table()  # built once per task, worker-side
-
-        for pdf in batches:
-            ids, idxs, lens, digests = [], [], [], []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                raw = (text or "").encode("utf-8")
-                n = len(raw)
-                if n == 0:
-                    continue
-                b = np.frombuffer(raw, dtype=np.uint8)
-                g = gear[b]
-                # h_i = sum_{s<64} gear[b_{i-s}] << s  (mod 2^64): the gear
-                # recurrence unrolled into shifted vector adds
-                h = np.zeros(n, dtype=np.uint64)
-                for s in range(min(64, n)):
-                    if s == 0:
-                        h += g
-                    else:
-                        h[s:] += g[:-s] << np.uint64(s)
-                # boundary AFTER byte i (i.e. next chunk starts at i+1);
-                # never at the last byte (the final bound is n anyway)
-                cut = np.flatnonzero((h[:-1] & mask) == 0) + 1 if n > 1 else []
-                bounds = [0, *cut.tolist(), n] if len(cut) else [0, n]
-                for k in range(len(bounds) - 1):
-                    lo, hi = bounds[k], bounds[k + 1]
-                    ids.append(doc_id)
-                    idxs.append(k)
-                    lens.append(hi - lo)
-                    digests.append(hashlib.md5(raw[lo:hi]).hexdigest())
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "chunk_idx": pd.Series(idxs, dtype="int64"),
-                    "chunk_len": pd.Series(lens, dtype="int64"),
-                    "chunk_md5": pd.Series(digests, dtype="object"),
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        chunk_batch,
-        f"{id_col} long, chunk_idx long, chunk_len long, chunk_md5 string",
-    )

@@ -264,33 +264,6 @@ def recrawl_schedule(
     return out if keep_marker else out.drop("_flipped")
 
 
-def apply_updates(frontier: DataFrame, updates: DataFrame) -> DataFrame:
-    """Rewrite status/retry columns for processed rows (P10 — the status
-    transitions of cache.py:140-159 as column rewrites, not per-key mutation).
-
-    ``updates``: (url_hash, url, new_status, new_retry_count, new_next_attempt_at).
-    """
-    u = updates.select(
-        "url_hash",
-        "url",
-        F.col("new_status"),
-        F.col("new_retry_count"),
-        F.col("new_next_attempt_at"),
-    )
-    return (
-        frontier.join(u, ["url_hash", "url"], "left")
-        .withColumn("status", F.coalesce(F.col("new_status"), F.col("status")))
-        .withColumn(
-            "retry_count", F.coalesce(F.col("new_retry_count"), F.col("retry_count"))
-        )
-        .withColumn(
-            "next_attempt_at",
-            F.coalesce(F.col("new_next_attempt_at"), F.col("next_attempt_at")),
-        )
-        .drop("new_status", "new_retry_count", "new_next_attempt_at")
-    )
-
-
 def pagerank(
     edges: DataFrame,
     n_iterations: int = 10,

@@ -212,14 +212,20 @@ DEFAULT_K_HOST = default_k_host(DEFAULT_CRAWL_DELAY)
 # ASKING for less load — robots metadata can't say that mid-crawl.
 
 THROTTLE_FLOOR = 1.0 / 16.0
+# the engine's AIMD settings, read at each fold: a host whose transient
+# rate exceeds the threshold has its multiplier scaled by the decrease
+# factor; a healthy host recovers by the increase step toward 1.0
+THROTTLE_FAIL_THRESHOLD = 0.3
+THROTTLE_DECREASE = 0.5
+THROTTLE_INCREASE = 0.25
 
 
 def update_throttle(
     throttle: DataFrame | None,
     round_outcomes: DataFrame,
-    fail_threshold: float = 0.3,
-    decrease: float = 0.5,
-    increase: float = 0.25,
+    fail_threshold: float = THROTTLE_FAIL_THRESHOLD,
+    decrease: float = THROTTLE_DECREASE,
+    increase: float = THROTTLE_INCREASE,
 ) -> DataFrame:
     """Fold one round's per-host outcome counts into the throttle state.
 

@@ -367,7 +367,7 @@ def append_index_delta(
     delta_index: DataFrame, path: str, batch_id: int
 ) -> None:
     """Merge-on-read index maintenance (the engine's frontier-delta
-    pattern, engine.py compact_every): append a NEW doc batch's index as
+    pattern, engine.py COMPACT_EVERY): append a NEW doc batch's index as
     its own parquet directory instead of rewriting the base — O(batch)
     per commit, never O(corpus). Query-side no merge is needed at all:
     search_topk explodes postings and re-aggregates per doc, and df is

@@ -35,7 +35,6 @@ bucket hash, same ln/smoothing arithmetic, round(…,4) outputs).
 
 from __future__ import annotations
 
-import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -117,16 +116,6 @@ def dsir_weights(
         - F.log((F.coalesce(F.col("r_cnt"), F.lit(0)) + F.lit(a)) / F.lit(r_denom))
     )
     return joined.select("bucket", w.alias("w"))
-
-
-def unseen_bucket_weight(
-    t_total: int, r_total: int, n_buckets: int, smoothing: float
-) -> float:
-    """Weight of a bucket absent from both corpora (the coalesce default)."""
-    a = smoothing
-    return math.log(a / (t_total + a * n_buckets)) - math.log(
-        a / (r_total + a * n_buckets)
-    )
 
 
 def dsir_scores(

@@ -52,13 +52,42 @@ class SnapshotCatalog:
     def _manifest_path(self, table: str, version: int) -> str:
         return os.path.join(self.warehouse, table, f"manifest-{version:05d}.json")
 
-    def _write_manifest(self, manifest: dict) -> dict:
-        """Publish a table manifest atomically: write a tmp file, then
-        os.replace it into place. The tmp name starts with a dot, outside
-        the ``manifest-`` prefix every reader scans, so a write killed
-        midway leaves no torn manifest behind — only an inert data dir
-        whose version the next commit reuses."""
-        path = self._manifest_path(manifest["table"], manifest["snapshot_id"])
+    def _new_data_dir(self, table: str, mode: str) -> tuple[int, str]:
+        """Next version of ``table`` and the data dir its commit writes."""
+        assert mode in ("snapshot", "delta")
+        version = self._next_version(table)
+        kind = "snap" if mode == "snapshot" else "delta"
+        return version, os.path.join(self.warehouse, table, f"{kind}-{version:05d}")
+
+    def _write_manifest(
+        self,
+        table: str,
+        version: int,
+        mode: str,
+        round_: int,
+        data_dir: str,
+        per_file: list[dict],
+        metrics: dict | None,
+    ) -> dict:
+        """Build the table manifest of one commit and publish it
+        atomically: write a tmp file, then os.replace it into place. The
+        tmp name starts with a dot, outside the ``manifest-`` prefix every
+        reader scans, so a write killed midway leaves no torn manifest
+        behind — only an inert data dir whose version the next commit
+        reuses."""
+        manifest = {
+            "table": table,
+            "snapshot_id": version,
+            "parent_id": version - 1 if version > 1 else None,
+            "kind": mode,
+            "round": round_,
+            "data_dir": data_dir,
+            "n_rows": sum(p["rows"] for p in per_file),
+            "n_files": len(per_file),
+            "partitions": per_file,
+            "metrics": metrics or {},
+        }
+        path = self._manifest_path(table, version)
         tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
@@ -80,10 +109,7 @@ class SnapshotCatalog:
         the 'per-partition lineage + metrics' the north_rule asks for. Pass
         ``n_rows`` when the caller already knows it (skips a re-count job).
         """
-        assert mode in ("snapshot", "delta")
-        version = self._next_version(table)
-        kind = "snap" if mode == "snapshot" else "delta"
-        data_dir = os.path.join(self.warehouse, table, f"{kind}-{version:05d}")
+        version, data_dir = self._new_data_dir(table, mode)
         df.write.mode("overwrite").parquet(data_dir)
         files = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))
         if not files:
@@ -108,19 +134,9 @@ class SnapshotCatalog:
                 f"commit {table} v{version}: caller expected {n_rows} rows, "
                 f"footers say {footer_rows}"
             )
-        manifest = {
-            "table": table,
-            "snapshot_id": version,
-            "parent_id": version - 1 if version > 1 else None,
-            "kind": mode,
-            "round": round_,
-            "data_dir": data_dir,
-            "n_rows": footer_rows,
-            "n_files": len(files),
-            "partitions": per_file,
-            "metrics": metrics or {},
-        }
-        return self._write_manifest(manifest)
+        return self._write_manifest(
+            table, version, mode, round_, data_dir, per_file, metrics
+        )
 
     def commit_pylist(
         self,
@@ -142,10 +158,7 @@ class SnapshotCatalog:
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        assert mode in ("snapshot", "delta")
-        version = self._next_version(table)
-        kind = "snap" if mode == "snapshot" else "delta"
-        data_dir = os.path.join(self.warehouse, table, f"{kind}-{version:05d}")
+        version, data_dir = self._new_data_dir(table, mode)
         os.makedirs(data_dir, exist_ok=True)
         arrow_schema = to_arrow_schema(spark_schema)
         cols = [
@@ -154,19 +167,10 @@ class SnapshotCatalog:
         ]
         part = os.path.join(data_dir, "part-00000.parquet")
         pq.write_table(pa.Table.from_arrays(cols, schema=arrow_schema), part)
-        manifest = {
-            "table": table,
-            "snapshot_id": version,
-            "parent_id": version - 1 if version > 1 else None,
-            "kind": mode,
-            "round": round_,
-            "data_dir": data_dir,
-            "n_rows": len(rows),
-            "n_files": 1,
-            "partitions": [{"file": "part-00000.parquet", "rows": len(rows)}],
-            "metrics": metrics or {},
-        }
-        return self._write_manifest(manifest)
+        return self._write_manifest(
+            table, version, mode, round_, data_dir,
+            [{"file": "part-00000.parquet", "rows": len(rows)}], metrics,
+        )
 
     def _manifests(self, table: str, max_round: int | None = None) -> list[dict]:
         """All manifests for a table up to max_round, in version order."""
@@ -194,7 +198,7 @@ class SnapshotCatalog:
         This is the 100-TB shape for per-round status updates: a round
         commits only its touched rows (KBs) instead of rewriting a 10^10-row
         snapshot; the full rewrite cost is paid only at compaction
-        (engine.flush every ``compact_every`` flushes). Each delta commit
+        (engine.flush every ``COMPACT_EVERY`` flushes). Each delta commit
         must be key-unique (the engine folds a round's updates before
         committing); across commits the higher snapshot_id wins.
         """

@@ -174,11 +174,3 @@ RUNS = StructType(
         StructField("end_time", TimestampType()),
     ]
 )
-
-# crawl-status lifecycle (cache.py:17-25): SITE_MAP→FRONTIER→PARSE→DB→CLOSED,
-# ERROR sink. In the engine these become frontier.status string values.
-STATUS_PENDING = "pending"
-STATUS_FETCHED = "fetched"
-STATUS_ERROR = "error"
-STATUS_ROBOTS_DENIED = "robots_denied"
-STATUS_RETRY = "retry"

@@ -11,9 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from mr_crawly_spark import schemas as S
-from mr_crawly_spark.datagen import corpus_to_spark
+from mr_crawly_spark.datagen import ROUND_SECONDS, corpus_to_spark
 from mr_crawly_spark.engine import CrawlConfig, CrawlEngine
-from mr_crawly_spark.operators.frontier import recrawl_schedule
+from mr_crawly_spark.operators.frontier import (
+    CHANGE_FREQ_SECONDS,
+    recrawl_schedule,
+)
 from mr_crawly_spark.sources.corpus import CorpusFetcher
 from oracle.crawler import OracleCrawler
 
@@ -256,9 +259,17 @@ def test_config_from_toml(tmp_path):
     retired.write_text("[crawl]\nuse_bloom = true\n")
     with pytest.raises(ValueError, match="unknown \\[crawl\\] keys"):
         config_from_toml(str(retired), "/tmp/wh")
-    # size rules live in sizing.py; their retired knobs are unknown keys too
+    # retired knobs whose value now has one home elsewhere: size rules in
+    # sizing.py, operator defaults (select_slice, trap_param_stats), the
+    # politeness THROTTLE_* constants, engine.COMPACT_EVERY, and the
+    # refresh_pagerank()/refresh_trap_stats() calls as the opt-in
     for knob in ("aqe_small_round_rows", "rows_per_write_task",
-                 "min_write_partitions"):
+                 "min_write_partitions", "salt", "compact_every",
+                 "use_pagerank_priority", "pagerank_weight", "use_trap_gate",
+                 "trap_min_urls", "trap_value_ratio",
+                 "freshness_min_interval", "freshness_max_interval",
+                 "throttle_fail_threshold", "throttle_decrease",
+                 "throttle_increase"):
         retired.write_text(f"[crawl]\n{knob} = 1\n")
         with pytest.raises(ValueError, match=knob):
             config_from_toml(str(retired), "/tmp/wh")
@@ -440,44 +451,62 @@ def test_cli_positional_seed_url(spark, tmp_path, capsys):
 
 
 def test_pagerank_priority_reorders_slice(spark, tiny_corpus):
-    """r3 verdict #7: with use_pagerank_priority on and ranks refreshed,
-    link authority reorders a round's slice — a host's per-round top-k is
-    taken by blended (priority + weight*rank), not sitemap priority alone.
-    Flag off (the default) leaves the golden ordering untouched."""
+    """r3 verdict #7: once refresh_pagerank() has run, link authority
+    reorders a round's slice — a host's per-round top-k is taken by
+    blended (priority + rank), not sitemap priority alone. The refresh
+    call is the opt-in; without it the golden ordering is untouched, and
+    a force_reset bootstrap drops the discarded crawl's ranks and trap
+    stats."""
+    from mr_crawly_spark.datagen import MAX_PER_HOST_PER_ROUND
     from mr_crawly_spark.operators.frontier import select_slice
 
-    eng = _engine(
-        spark, tiny_corpus, use_pagerank_priority=True, pagerank_weight=100.0
-    )
-    eng.run()
+    # a 60 s default delay budgets one url per host per round, so the
+    # ordering decides which url a host spends its round on
+    eng = _engine(spark, tiny_corpus, default_delay=60.0)
+    eng.bootstrap()
+    for _ in range(4):
+        eng.run_round()
     assert eng.refresh_pagerank() > 0
-    # re-pend fetched rows; backdated t_now makes them eligible immediately
-    # (recrawl_schedule sets next_attempt_at = t_now + change_freq interval)
-    eng.schedule_recrawl(t_now=-1e9)
     frontier = eng._frontier_view()
     t = (eng.round + 1) * 60.0
-    ranked = select_slice(
-        frontier, eng.budgets, t, k_cap=8,
-        ranks=eng._ranks, rank_weight=100.0,
-    )
-    plain = select_slice(frontier, eng.budgets, t, k_cap=8)
+    kw = dict(k_cap=MAX_PER_HOST_PER_ROUND, default_k=eng._default_k)
+    ranked = select_slice(frontier, eng.budgets, t, ranks=eng._ranks, **kw)
+    plain = select_slice(frontier, eng.budgets, t, **kw)
     # stored priority must ride through UNCHANGED (the blend is order-only)
+    before = {
+        r["url"]: (r["status"], r["retry_count"], r["next_attempt_at"])
+        for r in frontier.collect()
+    }
     stored = {r["url"]: r["priority"] for r in frontier.collect()}
     for r in ranked.collect():
         assert r["priority"] == stored[r["url"]]
     ranked_set = {r["url"] for r in ranked.collect()}
     plain_set = {r["url"] for r in plain.collect()}
-    assert ranked_set  # the recrawl slice is non-vacuous
-    # the blend actually changes which urls win a host's top-k slots, and
-    # the winners it adds carry more link authority than those it drops
+    # the blend changes which urls win a host's slot, and the winners it
+    # adds carry more link authority than those it drops
     rank_of = {r["url"]: r["rank"] for r in eng._ranks.collect()}
     added, dropped = ranked_set - plain_set, plain_set - ranked_set
-    if added or dropped:  # corpus-dependent; assert direction when it binds
-        avg = lambda s: sum(rank_of.get(u, 0.0) for u in s) / max(len(s), 1)
-        assert avg(added) >= avg(dropped)
-    # engine wiring: the next round actually uses the ranked ordering
+    assert added and dropped
+    avg = lambda s: sum(rank_of.get(u, 0.0) for u in s) / len(s)
+    assert avg(added) > avg(dropped)
+    # engine wiring: refresh alone arms the ordering — the next round
+    # processes exactly the ranked slice (every outcome rewrites a
+    # processed row's status or retry count)
     m = eng.run_round()
-    assert m["processed"] > 0
+    after = {
+        r["url"]: (r["status"], r["retry_count"], r["next_attempt_at"])
+        for r in eng._frontier_view().collect()
+    }
+    assert {u for u, v in before.items() if after[u] != v} == ranked_set
+    assert m["processed"] == len(ranked_set)
+    # a force_reset re-bootstrap starts a NEW crawl: the discarded crawl's
+    # ranks and trap stats must not reorder or rewrite it
+    eng.refresh_trap_stats()
+    assert eng._trap_stats is not None
+    eng.cfg.force_reset = True
+    eng.bootstrap()
+    assert eng._ranks is None and eng._trap_stats is None
+    assert eng._last_metrics == {}
 
 
 def test_console_handler_fallback(monkeypatch):
@@ -773,7 +802,7 @@ def test_freshness_measured_recrawl_priorities(spark):
             assert r["priority"] == sitemap_prio[u], u  # cold-start policy
     # measured CADENCE: next visit at 1/rate (clamped) for changing urls,
     # at the max-interval ceiling for never-changed ones — not never
-    lo, hi = eng.cfg.freshness_min_interval, eng.cfg.freshness_max_interval
+    lo, hi = ROUND_SECONDS, CHANGE_FREQ_SECONDS["yearly"]
     for u in changed:
         want = t_star + min(max(1.0 / measured[u]["change_rate"], lo), hi)
         assert rows[u]["next_attempt_at"] == pytest.approx(want), u
@@ -982,15 +1011,14 @@ def test_visits_log_excludes_cache_hits(spark, tiny_corpus):
 # learns exactly the hosts that failed, scales their budgets down, never
 # starves them to zero, and a never-triggering threshold leaves the
 # golden crawl bit-identical
-def test_adaptive_politeness_engine(spark, tiny_corpus, crawled):
+def test_adaptive_politeness_engine(spark, tiny_corpus, crawled, monkeypatch):
+    from mr_crawly_spark.operators import politeness
     from mr_crawly_spark.operators.politeness import apply_throttle
 
     baseline, _ = crawled  # default crawl, flag off
     # (a) flag ON but threshold above any possible rate: crawl identical
-    eng_eq = _engine(
-        spark, tiny_corpus, use_adaptive_politeness=True,
-        throttle_fail_threshold=1.1,
-    )
+    monkeypatch.setattr(politeness, "THROTTLE_FAIL_THRESHOLD", 1.1)
+    eng_eq = _engine(spark, tiny_corpus, use_adaptive_politeness=True)
     eng_eq.run()
     assert eng_eq.visited_count == baseline.visited_count
     assert {r["url"] for r in eng_eq.table("seen").collect()} == {
@@ -1000,10 +1028,9 @@ def test_adaptive_politeness_engine(spark, tiny_corpus, crawled):
 
     # (b) hair-trigger threshold, no recovery: the final throttle state is
     # exactly the hosts that ever saw a transient failure
-    eng = _engine(
-        spark, tiny_corpus, use_adaptive_politeness=True,
-        throttle_fail_threshold=0.0, throttle_increase=0.0,
-    )
+    monkeypatch.setattr(politeness, "THROTTLE_FAIL_THRESHOLD", 0.0)
+    monkeypatch.setattr(politeness, "THROTTLE_INCREASE", 0.0)
+    eng = _engine(spark, tiny_corpus, use_adaptive_politeness=True)
     eng.run()
     assert eng.visited_count == baseline.visited_count  # budget floor = 1:
     # throttling slows hosts down, it never loses pages

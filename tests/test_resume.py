@@ -91,7 +91,7 @@ def test_partition_invariance(spark, tiny_corpus, exact_state):
     the determinism-under-parallelism property (SURVEY.md §5.2-5)."""
     salted = _engine(
         spark, tiny_corpus, tempfile.mkdtemp(prefix="crawl_s_"),
-        salt_partitions=5, salt=7,
+        salt_partitions=5,
     )
     salted.run()
     assert _final_state(salted) == exact_state

@@ -420,73 +420,6 @@ def test_cdc_dedup_ratio_counts_identical_payloads_once(spark):
     assert abs(r["dedup_ratio"] - 0.5) < 1e-9
 
 
-def _gear_py_reference(text):
-    """Sequential replay of the gear recurrence h = (h<<1) + gear[b]."""
-    import hashlib
-
-    from mr_crawly_spark.operators.dedup import CDC_GEAR_MASK
-
-    gear = [
-        int(hashlib.md5(bytes([b])).hexdigest()[:16], 16) for b in range(256)
-    ]
-    raw = text.encode("utf-8")
-    n = len(raw)
-    h, cuts = 0, []
-    for i, byte in enumerate(raw):
-        h = ((h << 1) + gear[byte]) & 0xFFFFFFFFFFFFFFFF
-        if i < n - 1 and (h & CDC_GEAR_MASK) == 0:
-            cuts.append(i + 1)
-    bounds = [0, *cuts, n]
-    return [
-        (k, bounds[k + 1] - bounds[k],
-         hashlib.md5(raw[bounds[k]:bounds[k + 1]]).hexdigest())
-        for k in range(len(bounds) - 1)
-    ]
-
-
-def test_cdc_fast_matches_sequential_gear(spark):
-    from mr_crawly_spark.operators.dedup import cdc_chunks_fast
-
-    text = " ".join(f"g{i % 89}h{i % 31}" for i in range(400))
-    docs = spark.createDataFrame(
-        [(1, text), (2, "")], "doc_id long, text string"
-    )
-    rows = sorted(
-        (r["chunk_idx"], r["chunk_len"], r["chunk_md5"])
-        for r in cdc_chunks_fast(docs).collect()
-        if r["doc_id"] == 1
-    )
-    ref = _gear_py_reference(text)
-    assert rows == ref
-    assert sum(r[1] for r in rows) == len(text.encode())
-    assert len(rows) >= 10  # boundaries actually fire at 1/64 per byte
-    assert not [r for r in cdc_chunks_fast(docs).collect() if r["doc_id"] == 2]
-
-
-def test_cdc_fast_realign_and_ratio_composition(spark):
-    from mr_crawly_spark.operators.dedup import (
-        cdc_chunks_fast,
-        cdc_dedup_ratio,
-    )
-
-    base = " ".join(f"m{i * 11 % 509}n{i % 29}" for i in range(400))
-    docs = spark.createDataFrame(
-        [(1, base), (2, "A DIFFERENT INSERTED HEAD " + base)],
-        "doc_id long, text string",
-    )
-    out = cdc_chunks_fast(docs).collect()
-    a = {r["chunk_md5"] for r in out if r["doc_id"] == 1}
-    b = {r["chunk_md5"] for r in out if r["doc_id"] == 2}
-    assert len(a & b) >= len(a) - 3 and len(a) >= 6
-    # composes with the same downstream accounting as cdc_chunks
-    twin = spark.createDataFrame(
-        [(1, base), (2, base)], "doc_id long, text string"
-    )
-    r = cdc_dedup_ratio(cdc_chunks_fast(twin)).collect()[0]
-    assert r["unique_bytes"] == len(base.encode())
-    assert r["total_bytes"] == 2 * len(base.encode())
-
-
 # ---- Lloyd's k-means (similarity.kmeans) -------------------------------- #
 
 

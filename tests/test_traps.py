@@ -191,7 +191,7 @@ def test_empty_frontier(spark):
 
 
 # --------------------------------------------------------------------- #
-# engine wiring: the opt-in trap gate (CrawlConfig.use_trap_gate +
+# engine wiring: the opt-in trap gate (armed by
 # CrawlEngine.refresh_trap_stats) strips flagged params from candidate
 # outlinks BEFORE the seen anti-join, so the infinite axis stops growing
 # while the already-enqueued rows play out normally
@@ -250,13 +250,11 @@ def _trap_engine(spark, corpus, **kw):
 
 
 def test_engine_trap_gate_stops_infinite_axis(spark):
-    corpus = _trap_corpus()
-    eng = _trap_engine(
-        spark, corpus, use_trap_gate=True, trap_min_urls=10,
-        trap_value_ratio=0.5,
-    )
+    corpus = _trap_corpus(n_sids=20)
+    eng = _trap_engine(spark, corpus)
     # two ungated rounds: root + first politeness-budget slice of a-sids;
-    # the frontier accumulates enough sid URLs to cross trap_min_urls
+    # the frontier accumulates enough sid URLs (20 a-sids + the first
+    # b-sids) to cross trap_param_stats' default min_urls=20
     eng.bootstrap()
     eng.run_round()
     eng.run_round()
